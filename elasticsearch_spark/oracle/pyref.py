@@ -248,7 +248,7 @@ class PyRefEngine:
         minimum_should_match: int = 1,
     ) -> list[tuple[Any, float]]:
         """query_string oracle — same grammar/scoring contract as
-        query/ast.py + executor._segment_bool_scorer (BooleanQuery sum of
+        query/ast.py + executor._bool_kernel (BooleanQuery sum of
         matching positive clauses; must required; must_not excludes; keyword
         filters non-scoring)."""
         from elasticsearch_spark.query.ast import parse_query_string

@@ -1,30 +1,47 @@
 """BM25 top-k execution over the segmented inverted index.
 
-Spark shape of the reference's QUERY_THEN_FETCH with DFS statistics
-(SURVEY.md §3.1):
+Every indexed query — match, terms, phrase, phrase_prefix, query_string,
+common_terms, the span family (query/spans.py) and a whole _msearch batch
+(query/msearch.py) — runs ONE flow, the Spark shape of the reference's
+QUERY_THEN_FETCH with DFS statistics (SURVEY.md §3.1):
 
-  scatter  = cogrouped applyInPandas over (postings ⋈ term filter) grouped by
-             segment — each group scores its segment with vectorized numpy,
-             applying block-max pruning and per-segment top-k (the per-shard
-             priority queue, search/query/QueryPhase.java:107-155);
-  gather   = global orderBy(score DESC, key ASC).limit(k) — the TopDocs.merge
-             analog with deterministic tie order
-             (search/controller/SearchPhaseController.java:144-234);
-  fetch    = broadcast join of the k winners back to the doc table
-             (search/fetch/FetchPhase.java:103-157).
+  plan        = (query_id, kernel, k, filter_id) entries over one
+                term-pruned postings scan (the union of the queries' terms)
+                and the distinct filter contexts (_plan);
+  kernel      = per segment, one _SegmentView (norms, BM25 constants, live
+                and filter masks, memoised term decodes) is built and every
+                entry's kernel maps it to (local ids, scores); the shared
+                driver applies the masks and the tie-aware per-query cut —
+                the per-shard priority queue (search/query/QueryPhase.java:
+                107-155). Two runners call that same per-segment function:
+                driver-local pyarrow reads (_local_search) or a Spark
+                cogroup of postings with norms + deletes + filter sets
+                (_spark_candidates);
+  gather      = per-query tie-aware cut of the candidates — the
+                TopDocs.merge analog with deterministic tie order
+                (search/controller/SearchPhaseController.java:144-234);
+                past _GATHER_MAX_ROWS a rank() window cuts in Spark first;
+  fetch       = the winners' stored fields, read driver-side through the
+                cached pyarrow docs dataset, or one broadcast join for large
+                or non-driver-readable fetches
+                (search/fetch/FetchPhase.java:103-157);
+  materialize = (score DESC, key ASC) order, <= k rows per query, one
+                DataFrame (query_id kept for msearch only).
 
 Scale notes: postings are pruned by ``term IN (...)`` predicate pushdown
 (row-group stats; postings files are term-sorted), per-segment norm arrays
-travel as one packed row each, and only ≤ k rows per segment reach the
-gather. Filters are evaluated by Catalyst on the doc table (columnar,
-predicate pushdown) and enter the scorer as per-segment id sets of the
-SMALLER filter polarity (allow- or deny-list, see _filter_sets) — never
-more than half a segment's ids ship.
+travel as one packed row each, and only <= k(+ties) rows per (segment,
+query) reach the gather. Filters are evaluated by Catalyst on the doc table
+(columnar, predicate pushdown) and enter the kernels as per-segment id sets
+of the SMALLER filter polarity (allow- or deny-list, see _filter_sets) —
+never more than half a segment's ids ship.
 """
 
 from __future__ import annotations
 
-from typing import Iterable, Sequence
+import functools
+import operator as _op
+from typing import Callable, Iterable, NamedTuple, Sequence
 
 import numpy as np
 import pandas as pd
@@ -38,33 +55,25 @@ from elasticsearch_spark.functions.smallfloat import effective_doc_length
 from elasticsearch_spark.index.reader import IndexReader
 
 
-def _ijoin(base: str, *parts: str) -> str:
-    return "/".join([base.rstrip("/"), *parts])
-
-
-# fetch-phase routing bounds (see _execute): above either, the distributed
-# broadcast-join fetch replaces the driver-side serial segment reads
+# fetch-phase routing bounds (see _fetch): above either, the distributed
+# broadcast-join fetch replaces the driver-side pyarrow read
 _DRIVER_FETCH_MAX_ROWS = 5000
 _DRIVER_FETCH_MAX_SEGS = 64
-# gather budget: past segments x k candidate rows, cut to the global
-# top-k(+ties) IN Spark before collecting (same hatch as query/msearch.py)
+# gather budget: past segments x Σk candidate rows, cut every query to its
+# global top-k(+ties) IN Spark before collecting (see _gather)
 _GATHER_MAX_ROWS = 200_000
-
-
-def _n_segments(reader: IndexReader) -> int:
-    """Segment count, memoized per reader: from the cached local norms when
-    driver-readable, else ONE count() job on the (tiny) norms table."""
-    n = getattr(reader, "_n_segments_cache", None)
-    if n is None:
-        norms = reader.local_norms()
-        n = (len(norms) if norms is not None
-             else reader.norms().select("segment_id").count())
-        reader._n_segments_cache = n
-    return n
-
 # below this corpus size the filter-context polarity optimization is pure
 # scheduling overhead (see _filter_sets)
 _FILTER_TWO_PASS_MIN_DOCS = 200_000
+# position keys are doc << _SHIFT | position (max 4M positions per doc)
+_SHIFT = 22
+
+# postings columns the match scorer touches (positions pruned away)
+_MATCH_COLUMNS = [
+    "term", "block_id", "n_docs", "first_doc", "last_doc", "max_tf",
+    "min_dl_eff", "docs_packed", "tfs_packed",
+]
+_PHRASE_COLUMNS = _MATCH_COLUMNS + ["pos_packed"]
 
 
 def lucene_idf(n_docs: int, df: int) -> float:
@@ -131,188 +140,7 @@ def _filter_sets(
     )
 
 
-def _allowed_mask(aux: pd.DataFrame, n_docs: int) -> np.ndarray | None:
-    """Decode the filter-context / tombstone columns of the aux row into a
-    bool mask (None == everything allowed)."""
-    m: np.ndarray | None = None
-    if "f_ids" in aux.columns:
-        ids = np.asarray(aux["f_ids"].iloc[0], dtype=np.int64)
-        if aux["f_mode"].iloc[0] == "allow":
-            m = np.zeros(n_docs, dtype=bool)
-            m[ids] = True
-        else:
-            m = np.ones(n_docs, dtype=bool)
-            m[ids] = False
-    elif "allowed_ids" in aux.columns:
-        ids = np.asarray(aux["allowed_ids"].iloc[0], dtype=np.int64)
-        m = np.zeros(n_docs, dtype=bool)
-        m[ids] = True
-    if "d_ids" in aux.columns and aux["d_ids"].iloc[0] is not None:
-        dead = np.asarray(aux["d_ids"].iloc[0], dtype=np.int64)
-        if dead.size:
-            if m is None:
-                m = np.ones(n_docs, dtype=bool)
-            m[dead] = False  # liveDocs: tombstoned docs can never be hits
-    return m
-
-
-def _decode_term(g: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
-    """Decode the blocks of one term (rows pre-sorted) → (doc_ids, tfs)."""
-    docs_parts, tf_parts = [], []
-    for nd, db, tb in zip(g["n_docs"], g["docs_packed"], g["tfs_packed"]):
-        docs_parts.append(delta_decode(unpack_u32(db, nd)))
-        tf_parts.append(unpack_u32(tb, nd))
-    return (
-        np.concatenate(docs_parts).astype(np.int64),
-        np.concatenate(tf_parts).astype(np.float64),
-    )
-
-
-def _segment_scorer(
-    term_weights: dict[str, float],
-    need: int,
-    k: int,
-    k1: float,
-    b: float,
-    avgdl: float,
-    use_pruning: bool,
-    quantize: bool,
-):
-    """Build the vectorized per-segment scoring function.
-
-    Block-max pruning (vectorized variant of Block-Max WAND, Ding & Suel
-    2011, SIGIR): cut the local docID axis at every posting-block boundary;
-    within an elementary interval each term has at most one covering block,
-    so bound(I) = Σ_t ub(block_t(I)) upper-bounds any doc's total score in I.
-    θ = kth best exact score of the cheapest term gives a valid lower bound;
-    intervals with bound < θ are skipped — blocks no surviving interval
-    touches are never decoded. Results are identical to dense scoring
-    (asserted in tests/test_search_engine.py).
-    """
-    terms = list(term_weights)
-
-    def score_fn(post: pd.DataFrame, aux: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "local_doc_id": pd.Series([], dtype="int32"),
-                "score": pd.Series([], dtype="float64"),
-            }
-        )
-        if post.empty or aux.empty:
-            return empty
-        n_docs = int(aux["n_docs"].iloc[0])
-        doc_lens = np.frombuffer(aux["doc_len_packed"].iloc[0], dtype=np.uint32)
-        dl_eff = effective_doc_length(doc_lens, quantize=quantize)
-        allowed = _allowed_mask(aux, n_docs)
-
-        c0 = k1 * (1.0 - b)  # norm constant part
-        c1 = k1 * b / avgdl  # norm length coefficient
-
-        post = post.sort_values(["term", "first_doc"])
-        by_term = {t: g for t, g in post.groupby("term", sort=False)}
-        present = [t for t in terms if t in by_term]
-        if not present:
-            return empty
-
-        keep_blocks: dict[str, np.ndarray] | None = None
-        if use_pruning and need <= 1 and len(present) > 1:
-            keep_blocks = _prune_blocks(
-                by_term, present, term_weights, dl_eff, allowed, k, c0, c1, k1
-            )
-
-        score = np.zeros(n_docs, dtype=np.float64)
-        nmatch = np.zeros(n_docs, dtype=np.int32)
-        for t in present:
-            g = by_term[t]
-            if keep_blocks is not None:
-                g = g.iloc[keep_blocks[t]]
-                if g.empty:
-                    continue
-            docs, tfs = _decode_term(g)
-            tfn = (tfs * (k1 + 1.0)) / (tfs + c0 + c1 * dl_eff[docs])
-            score[docs] += term_weights[t] * tfn
-            nmatch[docs] += 1
-
-        mask = nmatch >= need
-        if allowed is not None:
-            mask &= allowed
-        cand = np.flatnonzero(mask)
-        if cand.size == 0:
-            return empty
-        cscores = score[cand]
-        if cand.size > k:
-            # tie-aware top-k: keep everything above the kth score plus ALL
-            # docs tied at it — the global gather breaks ties on the real
-            # key columns (merged segments interleave key order, so a
-            # local-id cut inside the tie group would be unsound)
-            part = np.argpartition(-cscores, k - 1)
-            theta = cscores[part[k - 1]]
-            sel = cscores >= theta
-            cand, cscores = cand[sel], cscores[sel]
-        order = np.lexsort((cand, -cscores))
-        cand, cscores = cand[order], cscores[order]
-        return pd.DataFrame({"local_doc_id": cand.astype(np.int32), "score": cscores})
-
-    return score_fn
-
-
-def _prune_blocks(
-    by_term: dict[str, pd.DataFrame],
-    present: list[str],
-    weights: dict[str, float],
-    dl_eff: np.ndarray,
-    allowed: np.ndarray | None,
-    k: int,
-    c0: float,
-    c1: float,
-    k1: float,
-) -> dict[str, np.ndarray]:
-    """Interval block-max pruning; returns surviving block positions per term."""
-    ranges: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
-    for t in present:
-        g = by_term[t]
-        first = g["first_doc"].to_numpy(np.int64)
-        last = g["last_doc"].to_numpy(np.int64)
-        max_tf = g["max_tf"].to_numpy(np.float64)
-        min_dl = g["min_dl_eff"].to_numpy(np.float64)
-        ub = weights[t] * (max_tf * (k1 + 1.0)) / (max_tf + c0 + c1 * min_dl)
-        ranges[t] = (first, last, ub)
-
-    # θ: exact kth-best single-term lower bound from the cheapest term
-    seed = min(present, key=lambda t: len(by_term[t]))
-    sdocs, stfs = _decode_term(by_term[seed])
-    s_scores = weights[seed] * (stfs * (k1 + 1.0)) / (
-        stfs + c0 + c1 * dl_eff[sdocs]
-    )
-    if allowed is not None:
-        s_scores = s_scores[allowed[sdocs]]
-    theta = float(np.partition(s_scores, -k)[-k]) if len(s_scores) > k else 0.0
-
-    keep: dict[str, np.ndarray] = {}
-    if theta <= 0.0:
-        for t in present:
-            keep[t] = np.arange(len(ranges[t][0]))
-        return keep
-
-    cuts = np.unique(
-        np.concatenate([np.concatenate([r[0], r[1] + 1]) for r in ranges.values()])
-    )
-    iv_starts = cuts[:-1]
-    n_iv = len(iv_starts)
-    bound = np.zeros(n_iv, dtype=np.float64)
-    cover: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-    for t in present:
-        first, last, ub = ranges[t]
-        bi = np.searchsorted(first, iv_starts, side="right") - 1
-        bic = np.clip(bi, 0, None)
-        valid = (bi >= 0) & (iv_starts <= last[bic])
-        bound += np.where(valid, ub[bic], 0.0)
-        cover[t] = (bic, valid)
-    alive = bound >= theta
-    for t in present:
-        bic, valid = cover[t]
-        keep[t] = np.unique(bic[valid & alive])
-    return keep
+# -- entry points -------------------------------------------------------------
 
 
 def search_topk(
@@ -350,39 +178,14 @@ def search_topk(
     driver-readable, else "spark". Both paths share the scorer and are
     asserted identical in tests.
     """
-    cfg = reader.cfg
-    key_cols = list(cfg.key_cols)
     if alias is not None:
         from elasticsearch_spark.index.aliases import alias_filter
 
         filter_cond = alias_filter(reader, alias, filter_cond)
-
-    tokens = tokenize_text(query_text, cfg.analyzer)
-    if not tokens:
-        return _empty_result(reader, extra_cols)
-
-    stats = reader.query_term_stats(tokens)
-    uniq = list(dict.fromkeys(tokens))
-    present = [t for t in uniq if stats.get(t, (0, 0))[0] > 0]
-    need = len(uniq) if operator == "and" else max(1, minimum_should_match)
-    if operator == "and" and len(present) < len(uniq):
-        return _empty_result(reader, extra_cols)
-    if not present:
-        return _empty_result(reader, extra_cols)
-
-    n = reader.n_docs
-    weights = {
-        t: tokens.count(t) * lucene_idf(n, stats[t][0]) for t in present
-    }
-
-    score_fn = _segment_scorer(
-        weights, need, k, cfg.bm25.k1, cfg.bm25.b, reader.avgdl, use_pruning,
-        cfg.bm25.quantize_norms,
-    )
-    est = sum(stats[t][0] for t in present)
-    return _execute(
-        reader, score_fn, present, k, filter_cond, list(extra_cols), mode, est,
-        local_postings_limit, _MATCH_COLUMNS,
+    tokens = tokenize_text(query_text, reader.cfg.analyzer)
+    return _match_topk(
+        reader, tokens, k, operator, minimum_should_match, use_pruning,
+        filter_cond, extra_cols, mode, local_postings_limit,
     )
 
 
@@ -402,29 +205,41 @@ def terms_topk(
     dictionary; re-tokenizing them through a stemming/synonym analyzer
     could transform or drop the very terms that were selected). Each term
     scores with weight = multiplicity · idf, exactly like search_topk."""
-    terms = list(terms)
-    if not terms:
-        return _empty_result(reader, extra_cols)
-    stats = reader.query_term_stats(terms)
-    uniq = list(dict.fromkeys(terms))
-    present = [t for t in uniq if stats.get(t, (0, 0))[0] > 0]
-    if not present:
-        return _empty_result(reader, extra_cols)
-    need = max(1, minimum_should_match)
-    n = reader.n_docs
-    cfg = reader.cfg
-    weights = {
-        t: terms.count(t) * lucene_idf(n, stats[t][0]) for t in present
-    }
-    score_fn = _segment_scorer(
-        weights, need, k, cfg.bm25.k1, cfg.bm25.b, reader.avgdl, True,
-        cfg.bm25.quantize_norms,
+    return _match_topk(
+        reader, list(terms), k, "or", minimum_should_match, True,
+        filter_cond, extra_cols, mode, local_postings_limit,
     )
-    est = sum(stats[t][0] for t in present)
+
+
+def _match_topk(reader, tokens, k, operator, msm, use_pruning, filter_cond,
+                extra_cols, mode, local_postings_limit) -> DataFrame:
+    """One match query over analyzed ``tokens`` through the shared flow."""
+    if not tokens:
+        return _empty_result(reader, extra_cols)
+    stats = reader.query_term_stats(tokens)
+    clause = _match_weights(reader.n_docs, tokens, stats, operator, msm)
+    if clause is None:
+        return _empty_result(reader, extra_cols)
+    weights, need = clause
+    kernel = _match_kernel(weights, need, k if use_pruning else None)
+    est = sum(stats[t][0] for t in weights)
     return _execute(
-        reader, score_fn, present, k, filter_cond, list(extra_cols), mode, est,
-        local_postings_limit, _MATCH_COLUMNS,
+        reader, [_Query(kernel, k, list(weights), est, filter_cond)],
+        extra_cols, mode, local_postings_limit,
     )
+
+
+def _match_weights(n_docs: int, tokens: list[str], stats, operator: str = "or",
+                   msm: int = 1) -> tuple[dict[str, float], int] | None:
+    """Match clause over analyzed tokens: (weight = multiplicity · idf per
+    indexed term, terms a doc must match), or None when nothing can match
+    (no indexed term, or an AND with a missing term)."""
+    uniq = list(dict.fromkeys(tokens))
+    present = [t for t in uniq if stats.get(t, (0, 0))[0] > 0]
+    if not present or (operator == "and" and len(present) < len(uniq)):
+        return None
+    need = len(uniq) if operator == "and" else max(1, msm)
+    return {t: tokens.count(t) * lucene_idf(n_docs, stats[t][0]) for t in present}, need
 
 
 def fuzzy_search_topk(
@@ -457,7 +272,7 @@ def fuzzy_search_topk(
 
     q = (tokenize_text(query_term, reader.cfg.analyzer) or [""])[0]
     if not q:
-        return _empty_result(reader, ())
+        return _empty_result(reader, kw.get("extra_cols", ()))
     cand = reader.termstats().where(
         (F.length("term") >= len(q) - fuzziness)
         & (F.length("term") <= len(q) + fuzziness)
@@ -473,16 +288,8 @@ def fuzzy_search_topk(
         ).limit(int(max_expansions))
     expanded = sorted(r["term"] for r in matched.select("term").collect())
     if not expanded:
-        return _empty_result(reader, ())
+        return _empty_result(reader, kw.get("extra_cols", ()))
     return terms_topk(reader, expanded, k=k, **kw)
-
-
-# postings columns the match scorer touches (positions pruned away)
-_MATCH_COLUMNS = [
-    "term", "block_id", "n_docs", "first_doc", "last_doc", "max_tf",
-    "min_dl_eff", "docs_packed", "tfs_packed",
-]
-_PHRASE_COLUMNS = _MATCH_COLUMNS + ["pos_packed"]
 
 
 def phrase_topk(
@@ -517,151 +324,17 @@ def phrase_topk(
     if not reader.cfg.index_positions:
         raise ValueError("index was built with index_positions=False")
 
-    n = reader.n_docs
-    sum_idf = float(sum(lucene_idf(n, stats[t][0]) for t in tokens))
-    score_fn = _segment_phrase_scorer(
-        tokens, sum_idf, slop, k, cfg.bm25.k1, cfg.bm25.b, reader.avgdl,
-        cfg.bm25.quantize_norms,
-    )
+    sum_idf = float(sum(lucene_idf(reader.n_docs, stats[t][0]) for t in tokens))
+
+    def kernel(view, allowed):
+        return _anchor_scores(view, _phrase_anchors(view, tokens, slop), sum_idf)
+
     present = list(dict.fromkeys(tokens))
     est = sum(stats[t][1] for t in present)  # ttf: positions volume
     return _execute(
-        reader, score_fn, present, k, filter_cond, list(extra_cols), mode, est,
-        local_postings_limit, _PHRASE_COLUMNS,
+        reader, [_Query(kernel, k, present, est, filter_cond)], extra_cols,
+        mode, local_postings_limit, _PHRASE_COLUMNS,
     )
-
-
-def _segment_phrase_scorer(
-    tokens: list[str],
-    sum_idf: float,
-    slop: int,
-    k: int,
-    k1: float,
-    b: float,
-    avgdl: float,
-    quantize: bool,
-):
-    """Vectorized per-segment phrase matcher + BM25 scorer.
-
-    Positions are flattened to sortable keys ``doc << SHIFT | (pos - i)``;
-    an exact phrase is the k-way sorted intersection of the per-offset key
-    sets (docs never collide across the SHIFT boundary because within-doc
-    positions < 2^SHIFT and doc gaps exceed any slop)."""
-    SHIFT = 22  # max 4M positions per doc
-
-    def score_fn(post: pd.DataFrame, aux: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "local_doc_id": pd.Series([], dtype="int32"),
-                "score": pd.Series([], dtype="float64"),
-            }
-        )
-        if post.empty or aux.empty:
-            return empty
-        n_docs = int(aux["n_docs"].iloc[0])
-        doc_lens = np.frombuffer(aux["doc_len_packed"].iloc[0], dtype=np.uint32)
-        dl_eff = effective_doc_length(doc_lens, quantize=quantize)
-        allowed = _allowed_mask(aux, n_docs)
-
-        post = post.sort_values(["term", "first_doc"])
-        by_term = {t: g for t, g in post.groupby("term", sort=False)}
-        if any(t not in by_term for t in set(tokens)):
-            return empty
-
-        decoded: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
-        for t in set(tokens):
-            docs, tfs, pos = _decode_term_pos(by_term[t])
-            decoded[t] = (docs, tfs.astype(np.int64), pos)
-
-        anchors = None
-        for i, t in enumerate(tokens):
-            docs, tfs, pos = decoded[t]
-            doc_of_pos = np.repeat(docs, tfs)
-            adj = pos.astype(np.int64) - i
-            if slop == 0:
-                # exact path: an anchor is a position of term 0 (adj >= 0), so
-                # negative adj can never intersect — dropping it also keeps
-                # keys unique for intersect1d(assume_unique)
-                valid = adj >= 0
-                keys = (doc_of_pos[valid] << SHIFT) + adj[valid]
-            else:
-                # sloppy path: keep negative adj — a term occurring before its
-                # phrase offset (q < i) is still within slop of an anchor near
-                # document start. doc << SHIFT dominates, so a negative low
-                # part stays inside the doc's key range (doc gaps >> slop).
-                keys = (doc_of_pos << SHIFT) + adj
-            if anchors is None:
-                anchors = keys
-            elif slop == 0:
-                anchors = np.intersect1d(anchors, keys, assume_unique=True)
-            else:
-                if anchors.size == 0 or keys.size == 0:
-                    anchors = np.array([], dtype=np.int64)
-                    break
-                idx = np.searchsorted(keys, anchors)
-                left = np.abs(keys[np.clip(idx - 1, 0, keys.size - 1)] - anchors)
-                right = np.abs(keys[np.clip(idx, 0, keys.size - 1)] - anchors)
-                anchors = anchors[np.minimum(left, right) <= slop]
-            if anchors.size == 0:
-                return empty
-
-        match_docs = (anchors >> SHIFT).astype(np.int64)
-        udocs, freqs = np.unique(match_docs, return_counts=True)
-        if allowed is not None:
-            keep = allowed[udocs]
-            udocs, freqs = udocs[keep], freqs[keep]
-        if udocs.size == 0:
-            return empty
-        c0 = k1 * (1.0 - b)
-        c1 = k1 * b / avgdl
-        f = freqs.astype(np.float64)
-        score = sum_idf * (f * (k1 + 1.0)) / (f + c0 + c1 * dl_eff[udocs])
-        cand, cscores = udocs, score
-        if cand.size > k:
-            part = np.argpartition(-cscores, k - 1)
-            theta = cscores[part[k - 1]]
-            sel = cscores >= theta
-            cand, cscores = cand[sel], cscores[sel]
-        order = np.lexsort((cand, -cscores))
-        cand, cscores = cand[order], cscores[order]
-        return pd.DataFrame({"local_doc_id": cand.astype(np.int32), "score": cscores})
-
-    return score_fn
-
-
-def _anchors_to_topk(
-    anchors: np.ndarray,
-    allowed: np.ndarray | None,
-    dl_eff: np.ndarray,
-    sum_idf: float,
-    k: int,
-    k1: float,
-    b: float,
-    avgdl: float,
-    shift: int,
-    empty: pd.DataFrame,
-) -> pd.DataFrame:
-    """Shared phrase-scorer tail: anchor keys → per-doc freq → BM25 top-k."""
-    match_docs = (anchors >> shift).astype(np.int64)
-    udocs, freqs = np.unique(match_docs, return_counts=True)
-    if allowed is not None:
-        keep = allowed[udocs]
-        udocs, freqs = udocs[keep], freqs[keep]
-    if udocs.size == 0:
-        return empty
-    c0 = k1 * (1.0 - b)
-    c1 = k1 * b / avgdl
-    f = freqs.astype(np.float64)
-    score = sum_idf * (f * (k1 + 1.0)) / (f + c0 + c1 * dl_eff[udocs])
-    cand, cscores = udocs, score
-    if cand.size > k:
-        part = np.argpartition(-cscores, k - 1)
-        theta = cscores[part[k - 1]]
-        sel = cscores >= theta
-        cand, cscores = cand[sel], cscores[sel]
-    order = np.lexsort((cand, -cscores))
-    cand, cscores = cand[order], cscores[order]
-    return pd.DataFrame({"local_doc_id": cand.astype(np.int32), "score": cscores})
 
 
 def phrase_prefix_topk(
@@ -705,88 +378,27 @@ def phrase_prefix_topk(
         + sum(lucene_idf(n, df) for _, df, _ in exp)
     )
     exp_terms = [t for t, _, _ in exp]
-    score_fn = _segment_phrase_prefix_scorer(
-        fixed, exp_terms, sum_idf, k, cfg.bm25.k1, cfg.bm25.b, reader.avgdl,
-        cfg.bm25.quantize_norms,
-    )
+
+    def kernel(view, allowed):
+        # the prefix position is the sorted union of the expansion terms'
+        # keys (one token per position → keys are unique)
+        anchors = np.sort(
+            np.concatenate([_pos_keys(view, t, len(fixed)) for t in exp_terms])
+        )
+        if fixed:
+            anchors = np.intersect1d(
+                _phrase_anchors(view, fixed, 0), anchors, assume_unique=True
+            )
+        return _anchor_scores(view, anchors, sum_idf)
+
     present = list(dict.fromkeys([*fixed, *exp_terms]))
     est = sum(stats[t][1] for t in dict.fromkeys(fixed)) + sum(
         ttf for _, _, ttf in exp
     )
     return _execute(
-        reader, score_fn, present, k, filter_cond, list(extra_cols), mode, est,
-        local_postings_limit, _PHRASE_COLUMNS,
+        reader, [_Query(kernel, k, present, est, filter_cond)], extra_cols,
+        mode, local_postings_limit, _PHRASE_COLUMNS,
     )
-
-
-def _segment_phrase_prefix_scorer(
-    fixed: list[str],
-    exp_terms: list[str],
-    sum_idf: float,
-    k: int,
-    k1: float,
-    b: float,
-    avgdl: float,
-    quantize: bool,
-):
-    """Per-segment MultiPhrasePrefix matcher: the prefix position is the
-    sorted union of the expansion terms' position keys."""
-    SHIFT = 22
-    prefix_offset = len(fixed)
-
-    def score_fn(post: pd.DataFrame, aux: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "local_doc_id": pd.Series([], dtype="int32"),
-                "score": pd.Series([], dtype="float64"),
-            }
-        )
-        if post.empty or aux.empty:
-            return empty
-        n_docs = int(aux["n_docs"].iloc[0])
-        doc_lens = np.frombuffer(aux["doc_len_packed"].iloc[0], dtype=np.uint32)
-        dl_eff = effective_doc_length(doc_lens, quantize=quantize)
-        allowed = _allowed_mask(aux, n_docs)
-
-        post = post.sort_values(["term", "first_doc"])
-        by_term = {t: g for t, g in post.groupby("term", sort=False)}
-        if any(t not in by_term for t in set(fixed)):
-            return empty
-        exp_present = [t for t in exp_terms if t in by_term]
-        if not exp_present:
-            return empty
-
-        def keys_of(t: str, offset: int) -> np.ndarray:
-            docs, tfs, pos = _decode_term_pos(by_term[t])
-            doc_of_pos = np.repeat(docs, tfs.astype(np.int64))
-            adj = pos.astype(np.int64) - offset
-            valid = adj >= 0  # exact positions: negative adj can't anchor
-            return (doc_of_pos[valid] << SHIFT) + adj[valid]
-
-        # union over expansions (one token per position → keys are unique)
-        union_keys = np.sort(
-            np.concatenate([keys_of(t, prefix_offset) for t in exp_present])
-        )
-        anchors = None
-        for i, t in enumerate(fixed):
-            keys = keys_of(t, i)
-            anchors = (
-                keys if anchors is None
-                else np.intersect1d(anchors, keys, assume_unique=True)
-            )
-            if anchors.size == 0:
-                return empty
-        anchors = (
-            union_keys if anchors is None
-            else np.intersect1d(anchors, union_keys, assume_unique=True)
-        )
-        if anchors.size == 0:
-            return empty
-        return _anchors_to_topk(
-            anchors, allowed, dl_eff, sum_idf, k, k1, b, avgdl, SHIFT, empty
-        )
-
-    return score_fn
 
 
 def query_string_search(
@@ -807,7 +419,7 @@ def query_string_search(
 
     Keyword-field / range sub-clauses (``filter_fields`` — must be stored
     columns of the index) become filter context; the scored tree is
-    flattened to BooleanQuery clauses executed by the general bool scorer.
+    flattened to BooleanQuery clauses executed by the general bool kernel.
     """
     from elasticsearch_spark.query.ast import parse_query_string
 
@@ -865,20 +477,17 @@ def query_string_search(
     if not any(occ != "must_not" for occ, _, _ in prepared):
         return _empty_result(reader, extra_cols)
 
-    score_fn = _segment_bool_scorer(
-        prepared, minimum_should_match, k, cfg.bm25.k1, cfg.bm25.b,
-        reader.avgdl, cfg.bm25.quantize_norms,
-    )
     needed = sorted(
         {t for occ, kind, p in prepared
          for t in (p[0] if kind == "phrase" else p.keys())}
     )
     est = sum(stats.get(t, (0, 0))[0] for t in needed)
     needs_pos = any(kind == "phrase" for _, kind, _ in prepared)
-    cols = _PHRASE_COLUMNS if needs_pos else _MATCH_COLUMNS
+    kernel = _bool_kernel(prepared, minimum_should_match)
     return _execute(
-        reader, score_fn, needed, k, filter_cond, list(extra_cols), mode, est,
-        local_postings_limit, cols,
+        reader, [_Query(kernel, k, needed, est, filter_cond)], extra_cols,
+        mode, local_postings_limit,
+        _PHRASE_COLUMNS if needs_pos else _MATCH_COLUMNS,
     )
 
 
@@ -919,16 +528,11 @@ def common_terms_search(
     else:
         return _empty_result(reader, extra_cols)
 
-    cfg = reader.cfg
-    score_fn = _segment_bool_scorer(
-        prepared, 1, k, cfg.bm25.k1, cfg.bm25.b, reader.avgdl,
-        cfg.bm25.quantize_norms,
-    )
     needed = sorted({*lw, *hw})
     est = sum(stats[t][0] for t in needed)
     return _execute(
-        reader, score_fn, needed, k, filter_cond, list(extra_cols), mode, est,
-        local_postings_limit, _MATCH_COLUMNS,
+        reader, [_Query(_bool_kernel(prepared, 1), k, needed, est, filter_cond)],
+        extra_cols, mode, local_postings_limit,
     )
 
 
@@ -941,161 +545,289 @@ def simple_query_string_search(
     """simple_query_string: fault-tolerant user syntax
     (SimpleQueryStringParser.java, reg. IndicesQueriesModule:104) — never
     raises on malformed input; any parse/plan failure degrades to treating
-    the whole input as a plain match query (lenient mode)."""
+    the whole input as a plain match query (lenient mode) that keeps the
+    caller's filter, columns and runner options."""
     try:
         return query_string_search(reader, query, k=k, **kw)
     except Exception:
         import re
 
+        kw.pop("filter_fields", None)  # query_string-only option
         cleaned = re.sub(r'["()\[\]+\-~^:]', " ", query)
-        return search_topk(reader, cleaned, k=k)
+        return search_topk(reader, cleaned, k=k, **kw)
 
 
-def _segment_bool_scorer(
-    prepared: list,
-    msm: int,
-    k: int,
-    k1: float,
-    b: float,
-    avgdl: float,
-    quantize: bool,
-):
-    """General BooleanQuery scorer: clause = any-of term set or a phrase.
+# -- kernels: (segment view, allowed mask) -> (local ids, scores) --------------
+
+
+def _match_kernel(weights: dict[str, float], need: int, prune_k: int | None = None):
+    """Match kernel: score = Σ_t w_t · tfn_t over the docs matching at least
+    ``need`` of the terms.
+
+    ``prune_k`` (a single query's k; batches never prune) enables block-max
+    pruning when need <= 1 and > 1 term is present — a vectorized variant
+    of Block-Max WAND (Ding & Suel 2011, SIGIR): cut the local docID axis at
+    every posting-block boundary; within an elementary interval each term
+    has at most one covering block, so bound(I) = Σ_t ub(block_t(I))
+    upper-bounds any doc's total score in I. θ = kth best exact score of the
+    cheapest term gives a valid lower bound; intervals with bound < θ are
+    skipped — blocks no surviving interval touches are never decoded.
+    Results are identical to dense scoring (asserted in
+    tests/test_search_engine.py).
+    """
+
+    def kernel(view, allowed):
+        present = [t for t in weights if t in view.by_term]
+        keep = None
+        if prune_k is not None and need <= 1 and len(present) > 1:
+            keep = _prune_blocks(view, present, weights, allowed, prune_k)
+        score = np.zeros(view.n_docs, dtype=np.float64)
+        nmatch = np.zeros(view.n_docs, dtype=np.int32)
+        for t in present:
+            if keep is None:
+                docs, tfn = view.tfn(t)
+            else:
+                g = view.by_term[t].iloc[keep[t]]
+                if g.empty:
+                    continue
+                docs, tfs = _decode_term(g)
+                tfn = view.norm(docs, tfs)
+            score[docs] += weights[t] * tfn
+            nmatch[docs] += 1
+        ids = np.flatnonzero(nmatch >= need)
+        return ids, score[ids]
+
+    return kernel
+
+
+def _prune_blocks(view, present: list[str], weights: dict[str, float],
+                  allowed: np.ndarray | None, k: int) -> dict[str, np.ndarray]:
+    """Interval block-max pruning; returns surviving block positions per term."""
+    k1, c0, c1 = view.k1, view.c0, view.c1
+    ranges: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
+    for t in present:
+        g = view.by_term[t]
+        first = g["first_doc"].to_numpy(np.int64)
+        last = g["last_doc"].to_numpy(np.int64)
+        max_tf = g["max_tf"].to_numpy(np.float64)
+        min_dl = g["min_dl_eff"].to_numpy(np.float64)
+        ub = weights[t] * (max_tf * (k1 + 1.0)) / (max_tf + c0 + c1 * min_dl)
+        ranges[t] = (first, last, ub)
+
+    # θ: exact kth-best single-term lower bound from the cheapest term
+    seed = min(present, key=lambda t: len(view.by_term[t]))
+    sdocs, stfs = view.decode(seed)
+    s_scores = weights[seed] * (stfs * (k1 + 1.0)) / (
+        stfs + c0 + c1 * view.dl_eff[sdocs]
+    )
+    if allowed is not None:
+        s_scores = s_scores[allowed[sdocs]]
+    theta = float(np.partition(s_scores, -k)[-k]) if len(s_scores) > k else 0.0
+
+    keep: dict[str, np.ndarray] = {}
+    if theta <= 0.0:
+        for t in present:
+            keep[t] = np.arange(len(ranges[t][0]))
+        return keep
+
+    cuts = np.unique(
+        np.concatenate([np.concatenate([r[0], r[1] + 1]) for r in ranges.values()])
+    )
+    iv_starts = cuts[:-1]
+    n_iv = len(iv_starts)
+    bound = np.zeros(n_iv, dtype=np.float64)
+    cover: dict[str, tuple[np.ndarray, np.ndarray]] = {}
+    for t in present:
+        first, last, ub = ranges[t]
+        bi = np.searchsorted(first, iv_starts, side="right") - 1
+        bic = np.clip(bi, 0, None)
+        valid = (bi >= 0) & (iv_starts <= last[bic])
+        bound += np.where(valid, ub[bic], 0.0)
+        cover[t] = (bic, valid)
+    alive = bound >= theta
+    for t in present:
+        bic, valid = cover[t]
+        keep[t] = np.unique(bic[valid & alive])
+    return keep
+
+
+def _pos_keys(view, t: str, offset: int = 0, exact: bool = True) -> np.ndarray:
+    """Sorted position keys ``doc << _SHIFT | (pos - offset)`` of term ``t``
+    (empty when the segment lacks it). Docs never collide across the shift
+    boundary: within-doc positions < 2^_SHIFT and doc gaps exceed any slop.
+
+    ``exact`` drops negative offsets — they can never anchor an exact
+    phrase, and dropping them keeps keys unique for
+    intersect1d(assume_unique). The sloppy path keeps them: a term occurring
+    before its phrase offset is still within slop of an anchor near
+    document start (doc << _SHIFT dominates, so a negative low part stays
+    inside the doc's key range)."""
+    if t not in view.by_term:
+        return np.array([], dtype=np.int64)
+    docs, tfs, pos = view.decode_pos(t)
+    doc_of_pos = np.repeat(docs, tfs.astype(np.int64))
+    adj = pos.astype(np.int64) - offset
+    if exact:
+        valid = adj >= 0
+        doc_of_pos, adj = doc_of_pos[valid], adj[valid]
+    return (doc_of_pos << _SHIFT) + adj
+
+
+def _phrase_anchors(view, tokens: list[str], slop: int) -> np.ndarray:
+    """Anchor keys of a phrase. slop=0: the k-way sorted intersection of
+    the per-offset key sets; slop>0: bounded displacement — an anchor of
+    tokens[0] survives if every later token occurs within ``slop`` of its
+    expected position (see phrase_topk)."""
+    anchors = _pos_keys(view, tokens[0], 0, slop == 0)
+    for i, t in enumerate(tokens[1:], 1):
+        if anchors.size == 0:
+            break
+        keys = _pos_keys(view, t, i, slop == 0)
+        if slop == 0:
+            anchors = np.intersect1d(anchors, keys, assume_unique=True)
+        elif keys.size == 0:
+            return keys
+        else:
+            idx = np.searchsorted(keys, anchors)
+            left = np.abs(keys[np.clip(idx - 1, 0, keys.size - 1)] - anchors)
+            right = np.abs(keys[np.clip(idx, 0, keys.size - 1)] - anchors)
+            anchors = anchors[np.minimum(left, right) <= slop]
+    return anchors
+
+
+def _anchor_scores(view, anchors: np.ndarray, w: float):
+    """Phrase/span scoring tail: anchor keys → per-doc freq →
+    w · BM25 tfNorm(freq)."""
+    udocs, freqs = np.unique(anchors >> _SHIFT, return_counts=True)
+    f = freqs.astype(np.float64)
+    return udocs, w * (f * (view.k1 + 1.0)) / (
+        f + view.c0 + view.c1 * view.dl_eff[udocs]
+    )
+
+
+def _bool_kernel(prepared: list, msm: int):
+    """General BooleanQuery kernel: clause = any-of term set or a phrase.
 
     score(doc) = Σ over matching positive clauses of their BM25
     contributions (every matching term counts — Lucene BooleanQuery sums all
     matching SHOULD/MUST sub-scorers); must clauses required, must_not
     exclude, msm applies only when no must clause exists (BooleanQuery
-    default minimumNumberShouldMatch behavior)."""
-    SHIFT = 22
+    default minimumNumberShouldMatch behavior). Callers guarantee at least
+    one positive clause."""
     has_must = any(occ == "must" for occ, _, _ in prepared)
 
-    def score_fn(post: pd.DataFrame, aux: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "local_doc_id": pd.Series([], dtype="int32"),
-                "score": pd.Series([], dtype="float64"),
-            }
-        )
-        if post.empty or aux.empty:
-            return empty
-        n_docs = int(aux["n_docs"].iloc[0])
-        doc_lens = np.frombuffer(aux["doc_len_packed"].iloc[0], dtype=np.uint32)
-        dl_eff = effective_doc_length(doc_lens, quantize=quantize)
-        allowed = _allowed_mask(aux, n_docs)
-
-        post = post.sort_values(["term", "first_doc"])
-        by_term = {t: g for t, g in post.groupby("term", sort=False)}
-        c0 = k1 * (1.0 - b)
-        c1 = k1 * b / avgdl
-        term_cache: dict[str, tuple] = {}
-
-        def decoded(t, with_pos):
-            key = (t, with_pos)
-            if key not in term_cache:
-                g = by_term.get(t)
-                if g is None:
-                    term_cache[key] = None
-                elif with_pos:
-                    term_cache[key] = _decode_term_pos(g)
-                else:
-                    term_cache[key] = _decode_term(g)
-            return term_cache[key]
-
+    def kernel(view, allowed):
+        n_docs = view.n_docs
         score = np.zeros(n_docs, dtype=np.float64)
-        must_ok = np.ones(n_docs, dtype=bool) if has_must else None
+        must_ok = np.ones(n_docs, dtype=bool)
         n_should = np.zeros(n_docs, dtype=np.int32)
         banned = np.zeros(n_docs, dtype=bool)
-        any_positive = False
-
         for occ, kind, payload in prepared:
             matched = np.zeros(n_docs, dtype=bool)
             contrib = np.zeros(n_docs, dtype=np.float64)
             if kind == "terms":
                 for t, w in payload.items():
-                    dec = decoded(t, False)
-                    if dec is None:
-                        continue
-                    docs, tfs = dec
-                    tfn = (tfs * (k1 + 1.0)) / (tfs + c0 + c1 * dl_eff[docs])
-                    contrib[docs] += w * tfn
-                    matched[docs] = True
+                    if t in view.by_term:
+                        docs, tfn = view.tfn(t)
+                        contrib[docs] += w * tfn
+                        matched[docs] = True
             else:  # phrase
                 tokens, slop, sum_idf = payload
-                anchors = None
-                dead = False
-                for i, t in enumerate(tokens):
-                    dec = decoded(t, True)
-                    if dec is None:
-                        dead = True
-                        break
-                    docs, tfs, pos = dec
-                    doc_of_pos = np.repeat(docs, tfs.astype(np.int64))
-                    adj = pos.astype(np.int64) - i
-                    if slop == 0:
-                        # see _segment_phrase_scorer: negative adj can't
-                        # intersect an anchor on the exact path
-                        valid = adj >= 0
-                        keys = (doc_of_pos[valid] << SHIFT) + adj[valid]
-                    else:
-                        # keep negative adj so slop matches near doc start
-                        keys = (doc_of_pos << SHIFT) + adj
-                    if anchors is None:
-                        anchors = keys
-                    elif slop == 0:
-                        anchors = np.intersect1d(anchors, keys, assume_unique=True)
-                    else:
-                        if anchors.size == 0 or keys.size == 0:
-                            anchors = np.array([], dtype=np.int64)
-                            break
-                        idx = np.searchsorted(keys, anchors)
-                        left = np.abs(keys[np.clip(idx - 1, 0, keys.size - 1)] - anchors)
-                        right = np.abs(keys[np.clip(idx, 0, keys.size - 1)] - anchors)
-                        anchors = anchors[np.minimum(left, right) <= slop]
-                if not dead and anchors is not None and anchors.size:
-                    udocs, freqs = np.unique(
-                        (anchors >> SHIFT).astype(np.int64), return_counts=True
-                    )
-                    f = freqs.astype(np.float64)
-                    contrib[udocs] = sum_idf * (f * (k1 + 1.0)) / (
-                        f + c0 + c1 * dl_eff[udocs]
-                    )
-                    matched[udocs] = True
-
+                udocs, sc = _anchor_scores(
+                    view, _phrase_anchors(view, tokens, slop), sum_idf
+                )
+                contrib[udocs] = sc
+                matched[udocs] = True
             if occ == "must_not":
                 banned |= matched
-            elif occ == "must":
+                continue
+            if occ == "must":
                 must_ok &= matched
-                score += contrib
-                any_positive = True
             else:
                 n_should += matched.astype(np.int32)
-                score += contrib
-                any_positive = True
+            score += contrib
+        mask = ~banned & (must_ok if has_must else n_should >= max(1, msm))
+        ids = np.flatnonzero(mask & (score > 0.0))
+        return ids, score[ids]
 
-        if not any_positive:
-            return empty
-        mask = ~banned
-        if has_must:
-            mask &= must_ok
-        else:
-            mask &= n_should >= max(1, msm)
-        if allowed is not None:
-            mask &= allowed
-        cand = np.flatnonzero(mask & (score > 0.0))
-        if cand.size == 0:
-            return empty
-        cscores = score[cand]
-        if cand.size > k:
-            part = np.argpartition(-cscores, k - 1)
-            theta = cscores[part[k - 1]]
-            sel = cscores >= theta
-            cand, cscores = cand[sel], cscores[sel]
-        order = np.lexsort((cand, -cscores))
-        cand, cscores = cand[order], cscores[order]
-        return pd.DataFrame({"local_doc_id": cand.astype(np.int32), "score": cscores})
+    return kernel
 
-    return score_fn
+
+# -- the segment view ---------------------------------------------------------
+
+
+class _SegmentView:
+    """One segment as every kernel of a plan sees it: doc count, effective
+    doc lengths and BM25 constants, the live mask, one mask per filter_id,
+    and memoised term decodes — a term shared within a batch is decoded
+    (and its query-independent tfn computed) once per segment."""
+
+    def __init__(self, post: pd.DataFrame, n_docs, doc_len_packed, dead,
+                 fsets: dict, bm25: tuple) -> None:
+        k1, b, avgdl, quantize = bm25
+        self.n_docs = int(n_docs)
+        self.dl_eff = effective_doc_length(
+            np.frombuffer(doc_len_packed, dtype=np.uint32), quantize=quantize
+        )
+        self.k1, self.c0, self.c1 = k1, k1 * (1.0 - b), k1 * b / avgdl
+        post = post.sort_values(["term", "first_doc"])
+        self.by_term = {t: g for t, g in post.groupby("term", sort=False)}
+        self.live = None
+        if dead is not None and len(dead):
+            self.live = np.ones(self.n_docs, dtype=bool)
+            self.live[np.asarray(dead, dtype=np.int64)] = False  # liveDocs
+        self.fsets = fsets  # filter_id -> (f_mode, f_ids), see _filter_sets
+        self._memo: dict = {}
+
+    def _cached(self, key, build):
+        if key not in self._memo:
+            self._memo[key] = build()
+        return self._memo[key]
+
+    def allowed(self, fid: int) -> np.ndarray | None:
+        """live ∧ filter mask of ``fid`` (-1: unfiltered; None: all docs)."""
+
+        def build():
+            if fid < 0:
+                return self.live
+            mode, ids = self.fsets[fid]
+            m = np.full(self.n_docs, mode != "allow")
+            m[np.asarray(ids, dtype=np.int64)] = mode == "allow"
+            return m if self.live is None else m & self.live
+
+        return self._cached(("mask", fid), build)
+
+    def norm(self, docs: np.ndarray, tfs: np.ndarray) -> np.ndarray:
+        """BM25 tfNorm of term frequencies ``tfs`` in ``docs``."""
+        return (tfs * (self.k1 + 1.0)) / (tfs + self.c0 + self.c1 * self.dl_eff[docs])
+
+    def decode(self, t: str):
+        return self._cached(("docs", t), lambda: _decode_term(self.by_term[t]))
+
+    def tfn(self, t: str):
+        """(docs, tfNorm) of term ``t`` — query-independent, so every query
+        of a batch reuses it."""
+
+        def build():
+            docs, tfs = self.decode(t)
+            return docs, self.norm(docs, tfs)
+
+        return self._cached(("tfn", t), build)
+
+    def decode_pos(self, t: str):
+        return self._cached(("pos", t), lambda: _decode_term_pos(self.by_term[t]))
+
+
+def _decode_term(g: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """Decode the blocks of one term (rows pre-sorted) → (doc_ids, tfs)."""
+    docs_parts, tf_parts = [], []
+    for nd, db, tb in zip(g["n_docs"], g["docs_packed"], g["tfs_packed"]):
+        docs_parts.append(delta_decode(unpack_u32(db, nd)))
+        tf_parts.append(unpack_u32(tb, nd))
+    return (
+        np.concatenate(docs_parts).astype(np.int64),
+        np.concatenate(tf_parts).astype(np.float64),
+    )
 
 
 def _decode_term_pos(g: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -1129,265 +861,343 @@ def _decode_term_pos(g: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarra
     )
 
 
-def _execute(
-    reader: IndexReader,
-    score_fn,
-    present: list[str],
-    k: int,
-    filter_cond: Column | None,
-    extra_cols: list[str],
-    mode: str,
-    est_postings: int,
-    local_postings_limit: int,
-    columns: list[str],
-    postings_df: DataFrame | None = None,
-) -> DataFrame:
-    """Shared scatter/gather/fetch pipeline for match and phrase queries.
+# -- the pipeline: plan → per-segment kernel → gather → fetch → materialize --
 
-    ``postings_df``: pre-built postings scan (already term-pruned and
-    term-namespaced) replacing ``reader.postings()`` — the
-    field_masking_span path, which unions postings from two position-
-    aligned indexes. Forces the distributed path (the driver-local
-    fastpath reads a single index directory)."""
-    key_cols = list(reader.cfg.key_cols)
 
-    if postings_df is None and (mode == "local" or (
-        mode == "auto"
-        and est_postings <= local_postings_limit
-        and fsio.driver_readable(reader.index_dir)
-    )):
-        allowed_map = None
-        if filter_cond is not None:
-            # one narrow Spark job: per-segment filter sets (smaller polarity
-            # per segment — see _filter_sets); tiny result, collected
-            allowed_map = {
-                r["segment_id"]: (r["f_mode"], r["f_ids"])
-                for r in _filter_sets(reader, filter_cond).collect()
-            }
-        from elasticsearch_spark.index.deletes import deletes_map
+class _Query(NamedTuple):
+    """One query as an entry point hands it to _execute."""
 
-        local = _local_search(
-            reader, score_fn, present, key_cols, extra_cols, k, columns,
-            allowed_map, deletes_map(reader),
-        )
-        if local is not None:
-            return local
+    kernel: Callable  # (segment view, allowed mask) -> (local ids, scores)
+    k: int
+    terms: list  # index terms the kernel reads
+    est: int = 0  # Σ df or ttf of the terms: the local-runner gate
+    filter_cond: Column | None = None
+    query_id: int = 0
 
-    postings = (
-        reader.postings()
-        .where(F.col("term").isin(present))
-        .select("segment_id", *columns)
-    ) if postings_df is None else postings_df.select("segment_id", *columns)
-    aux = reader.norms().select("segment_id", "n_docs", "doc_len_packed")
-    from elasticsearch_spark.index.deletes import deletes_df
 
-    dels = deletes_df(reader)
-    if dels is not None:  # liveDocs: one tiny array per tombstoned segment
-        aux = aux.join(F.broadcast(dels), "segment_id", "left")
-    if filter_cond is not None:
-        # per-segment filter sets computed entirely JVM-side (columnar scan +
-        # hash agg — the filter-context bitset analog, index/cache/filter/);
-        # one array per segment, never larger than the smaller filter side
-        aux = aux.join(_filter_sets(reader, filter_cond), "segment_id", "inner")
+class _Plan(NamedTuple):
+    entries: list  # (query_id, kernel, k, filter_id); filter_id -1 = none
+    terms: list  # union of the queries' terms: ONE postings scan
+    columns: list  # postings columns the kernels read
+    est: int
+    filters: list  # distinct filter Columns, indexed by filter_id
+    bm25: tuple  # (k1, b, avgdl, quantize_norms)
 
-    def cogroup_fn(key, post: pd.DataFrame, aux_pdf: pd.DataFrame) -> pd.DataFrame:
-        out = score_fn(post, aux_pdf)
-        out["segment_id"] = key[0]
-        return out
 
-    cand = (
-        postings.groupBy("segment_id")
-        .cogroup(aux.groupBy("segment_id"))
-        .applyInPandas(cogroup_fn, "local_doc_id int, score double, segment_id string")
+def _plan(reader: IndexReader, queries: list[_Query],
+          columns: list[str] = _MATCH_COLUMNS) -> _Plan:
+    """Batch plan: identical filter expressions (by repr) share one
+    filter-set pass; all queries share one term-pruned postings scan."""
+    fids: dict[str, int] = {}
+    filters: list[Column] = []
+    entries = []
+    for q in queries:
+        fid = -1
+        if q.filter_cond is not None:
+            fid = fids.setdefault(str(q.filter_cond), len(filters))
+            if fid == len(filters):
+                filters.append(q.filter_cond)
+        entries.append((q.query_id, q.kernel, q.k, fid))
+    bm = reader.cfg.bm25
+    return _Plan(
+        entries, sorted({t for q in queries for t in q.terms}), list(columns),
+        sum(q.est for q in queries), filters,
+        (bm.k1, bm.b, reader.avgdl, bm.quantize_norms),
     )
 
-    # gather: ≤ k rows (plus score ties) per segment reach the driver — the
-    # TopDocs.merge scatter/gather boundary
-    # (search/controller/SearchPhaseController.java:144-234). Prune to the
-    # global top-k tie group, then run the fetch phase driver-side: read the
-    # winning rows straight out of the touched segments' doc tables with
-    # pyarrow predicate pushdown (FetchPhase.java:103-157 — the coordinator
-    # loads k stored documents; a distributed join for k rows is waste).
-    #
-    # distributed-merge escape hatch: on a pre-merge index with 10^4-10^5
-    # segments the per-segment top-k rows alone would swamp the driver —
-    # past the budget, rank() keeps exactly the global top-k tie group the
-    # driver-side theta cut below would keep (results identical), so only
-    # <= k(+ties) rows ever reach collect(). The single-partition window
-    # sorts <= segments x k narrow rows JVM-side — the lesser evil by far.
-    if _n_segments(reader) * k > _GATHER_MAX_ROWS:
-        from pyspark.sql import Window
 
-        w = Window.orderBy(F.col("score").desc())
-        cand = (
-            cand.withColumn("__rnk", F.rank().over(w))
-            .where(F.col("__rnk") <= k)
-            .drop("__rnk")
-        )
-    rows = cand.collect()
-    if not rows:
-        return _empty_result(reader, extra_cols)
-    scores = np.array([r["score"] for r in rows])
-    if len(rows) > k:
-        theta = float(np.partition(-scores, k - 1)[k - 1] * -1.0)
-        rows = [r for r in rows if r["score"] >= theta]
+def _execute(
+    reader: IndexReader,
+    queries: list[_Query],
+    extra_cols: Iterable[str] = (),
+    mode: str = "auto",
+    local_postings_limit: int = 0,
+    columns: list[str] = _MATCH_COLUMNS,
+    postings_df: DataFrame | None = None,
+    query_id: bool = False,
+) -> DataFrame:
+    """Run a batch of queries through the one flow (module docstring).
 
-    # fetch-phase routing: the driver-side pruned read wins for a handful
-    # of winners/segments; past these bounds (large k·ties, or a pre-merge
-    # index with thousands of segments) the serial per-segment open loop
-    # would dominate — switch to the distributed broadcast-join fetch
-    n_segs = len({r["segment_id"] for r in rows})
-    if len(rows) > _DRIVER_FETCH_MAX_ROWS or n_segs > _DRIVER_FETCH_MAX_SEGS:
-        return _spark_fetch(reader, rows, key_cols, extra_cols, k)
-    fetched = _driver_fetch(reader, rows, key_cols, extra_cols)
-    if fetched is None:  # non-local index store → distributed fetch join
-        return _spark_fetch(reader, rows, key_cols, extra_cols, k)
-    fetched = fetched.sort_values(
-        ["score", *key_cols], ascending=[False] + [True] * len(key_cols),
-        kind="mergesort",
-    ).head(k)
-    out_schema = _result_schema(reader, key_cols, extra_cols)
-    return reader.spark.createDataFrame(fetched, schema=out_schema)
+    Runner rule: "local" tries the driver-local runner; "auto" tries it when
+    the plan's Σ df/ttf estimate fits under ``local_postings_limit`` and the
+    index is driver-readable; anything else (or a local runner that cannot
+    answer) scatters on Spark. ``postings_df``: a pre-built postings scan
+    (already term-pruned and term-namespaced) replacing reader.postings() —
+    the field_masking_span path, which unions two position-aligned indexes;
+    it forces the Spark runner. ``query_id`` keeps the query_id column
+    (msearch)."""
+    plan = _plan(reader, queries, columns)
+    extra_cols = list(extra_cols)
+    if not plan.entries:
+        return _empty_result(reader, extra_cols, query_id)
+    if postings_df is None and (mode == "local" or (
+        mode == "auto"
+        and plan.est <= local_postings_limit
+        and fsio.driver_readable(reader.index_dir)
+    )):
+        local = _local_search(reader, plan, extra_cols, query_id)
+        if local is not None:
+            return local
+    cand = _gather(reader, plan, _spark_candidates(reader, plan, postings_df))
+    return _finish(reader, plan, cand, extra_cols, query_id)
 
 
-def _local_search(reader, score_fn, present, key_cols, extra_cols, k,
-                  columns=None, allowed_map=None, del_map=None):
-    """Driver-local query execution: same numpy scorer, pyarrow-pruned reads.
+def _tie_cut(scores: np.ndarray, k: int) -> np.ndarray:
+    """Tie-aware top-k mask: every score >= the kth best, so a tie group
+    straddling the cut survives whole — the final order breaks ties on the
+    real key columns (merged segments interleave key order, so a local-id
+    cut inside the tie group would be unsound)."""
+    if scores.size <= k:
+        return np.ones(scores.size, dtype=bool)
+    return scores >= -np.partition(-scores, k - 1)[k - 1]
 
-    The per-segment loop below is the exact computation each executor runs in
-    the distributed path; a single driver runs it when the matched postings
-    volume is small. Returns None if the index layout is not driver-readable
-    (caller falls back to the Spark path).
+
+def _segment_topk(entries: list, view: _SegmentView | None) -> pd.DataFrame:
+    """The per-segment function both runners call: each entry's kernel, its
+    live ∧ filter mask, then the tie-aware per-query cut.
+    Returns (query_id, local_doc_id, score)."""
+    out = {c: [np.empty(0, t)] for c, t in
+           (("query_id", np.int32), ("local_doc_id", np.int32), ("score", np.float64))}
+    for qid, kernel, k, fid in entries:
+        if fid >= 0 and fid not in view.fsets:
+            continue  # no doc of this segment passes the query's filter
+        allowed = view.allowed(fid)
+        ids, scores = kernel(view, allowed)
+        if allowed is not None:
+            keep = allowed[ids]
+            ids, scores = ids[keep], scores[keep]
+        keep = _tie_cut(scores, k)
+        out["query_id"].append(np.full(int(keep.sum()), qid, dtype=np.int32))
+        out["local_doc_id"].append(ids[keep].astype(np.int32))
+        out["score"].append(scores[keep])
+    return pd.DataFrame({c: np.concatenate(v) for c, v in out.items()})
+
+
+def _local_search(reader, plan: _Plan, extra_cols, query_id=False):
+    """Driver-local runner: the per-segment function over pyarrow-pruned
+    reads — the single-node engine answers without any job scheduling
+    (filtered queries still run one narrow filter-set job). Returns None
+    when the index cannot be read driver-side (caller falls back to Spark).
     """
     import pyarrow.dataset as ds
 
     try:
-        # dataset discovery + norms are cached per index layout on the
-        # reader (invalidated on segment adds/removes via dir mtime) — they
-        # were per-query fixed costs dominating warm local-path latency
-        post_ds = reader.local_dataset("postings")
-        if post_ds is None:
-            post_ds = fsio.dataset(
-                _ijoin(reader.index_dir, "postings"), partitioning="hive"
-            )
-        tbl = post_ds.to_table(
-            filter=ds.field("term").isin(present),
-            columns=[*columns, "segment_id"] if columns else None,
+        tbl = _local_ds(reader, "postings").to_table(
+            filter=ds.field("term").isin(plan.terms),
+            columns=[*plan.columns, "segment_id"],
         )
+        if tbl.num_rows == 0:
+            return _empty_result(reader, extra_cols, query_id)
+        post = tbl.to_pandas()
+        post["segment_id"] = post["segment_id"].astype(str)
+        norms = reader.local_norms()
+        if norms is None:
+            norms = _local_ds(reader, "norms").to_table(
+                filter=ds.field("segment_id").isin(post["segment_id"].unique())
+            ).to_pandas()
     except OSError:
         return None
-    if tbl.num_rows == 0:
-        return _empty_result(reader, extra_cols)
-    post = tbl.to_pandas()
-    post["segment_id"] = post["segment_id"].astype(str)
+    norms = norms.set_index(norms["segment_id"].astype(str))
+    fsets = [
+        {r["segment_id"]: (r["f_mode"], r["f_ids"])
+         for r in _filter_sets(reader, fc).collect()}
+        for fc in plan.filters
+    ]
+    from elasticsearch_spark.index.deletes import deletes_map
 
-    segs = sorted(post["segment_id"].unique())
-    norms = reader.local_norms()
-    if norms is not None:
-        norms = norms[norms["segment_id"].isin(segs)]
-    else:
-        norm_ds = fsio.dataset(
-            _ijoin(reader.index_dir, "norms"), partitioning="hive"
-        )
-        norms = norm_ds.to_table(
-            filter=ds.field("segment_id").isin(segs)
-        ).to_pandas()
-        norms["segment_id"] = norms["segment_id"].astype(str)
-
-    rows = []
+    dead = deletes_map(reader)
+    parts = []
     for seg, g in post.groupby("segment_id", sort=False):
-        aux = norms[norms["segment_id"] == seg][["n_docs", "doc_len_packed"]]
-        if allowed_map is not None:
-            if seg not in allowed_map:
-                continue  # no doc in this segment passes the filter
-            mode, ids = allowed_map[seg]
-            aux = aux.assign(f_mode=mode, f_ids=[list(ids)])
-        if del_map and seg in del_map:
-            aux = aux.assign(d_ids=[list(del_map[seg])])
-        out = score_fn(g, aux)
-        for ldoc, sc in zip(out["local_doc_id"], out["score"]):
-            rows.append({"segment_id": seg, "local_doc_id": int(ldoc), "score": float(sc)})
-    if not rows:
-        return _empty_result(reader, extra_cols)
-    scores = np.array([r["score"] for r in rows])
-    if len(rows) > k:
-        theta = float(np.partition(-scores, k - 1)[k - 1] * -1.0)
-        rows = [r for r in rows if r["score"] >= theta]
-    fetched = _driver_fetch(reader, rows, key_cols, extra_cols)
-    if fetched is None:
-        return None
-    fetched = fetched.sort_values(
-        ["score", *key_cols], ascending=[False] + [True] * len(key_cols),
-        kind="mergesort",
-    ).head(k)
-    return reader.spark.createDataFrame(
-        fetched, schema=_result_schema(reader, key_cols, extra_cols)
+        view = _SegmentView(
+            g, norms.at[seg, "n_docs"], norms.at[seg, "doc_len_packed"],
+            dead.get(seg),
+            {fid: fs[seg] for fid, fs in enumerate(fsets) if seg in fs},
+            plan.bm25,
+        )
+        parts.append(_segment_topk(plan.entries, view).assign(segment_id=seg))
+    return _finish(reader, plan, pd.concat(parts, ignore_index=True),
+                   extra_cols, query_id)
+
+
+def _spark_candidates(reader, plan: _Plan, postings_df=None) -> DataFrame:
+    """Spark runner: the term-pruned postings scan cogrouped per segment
+    with its aux rows — norms + tombstones (filter_id -1) and one row per
+    filter set, computed JVM-side (columnar scan + hash agg, the
+    filter-context bitset analog, index/cache/filter/). Each group runs the
+    per-segment function on an executor."""
+    if postings_df is None:
+        postings_df = reader.postings().where(F.col("term").isin(plan.terms))
+    postings = postings_df.select("segment_id", *plan.columns)
+    from elasticsearch_spark.index.deletes import deletes_df
+
+    aux = reader.norms().select(
+        "segment_id", F.lit(-1).alias("filter_id"), "n_docs", "doc_len_packed"
+    )
+    dels = deletes_df(reader)
+    if dels is not None:  # liveDocs: one tiny array per tombstoned segment
+        aux = aux.join(F.broadcast(dels), "segment_id", "left")
+    else:
+        aux = aux.withColumn("d_ids", F.lit(None).cast("array<int>"))
+    for fid, fc in enumerate(plan.filters):
+        aux = aux.unionByName(
+            _filter_sets(reader, fc).withColumn("filter_id", F.lit(fid)),
+            allowMissingColumns=True,
+        )
+    entries, bm25 = plan.entries, plan.bm25  # shipped; filter Columns stay
+
+    def cogroup_fn(key, post: pd.DataFrame, aux_pdf: pd.DataFrame) -> pd.DataFrame:
+        base = aux_pdf[aux_pdf["filter_id"] == -1]
+        if post.empty or base.empty:  # no query term / no norms: no rows
+            return _segment_topk([], None).assign(segment_id=key[0])
+        view = _SegmentView(
+            post, base["n_docs"].iloc[0], base["doc_len_packed"].iloc[0],
+            base["d_ids"].iloc[0],
+            {int(r.filter_id): (r.f_mode, r.f_ids)
+             for r in aux_pdf[aux_pdf["filter_id"] >= 0].itertuples()},
+            bm25,
+        )
+        return _segment_topk(entries, view).assign(segment_id=key[0])
+
+    return (
+        postings.groupBy("segment_id")
+        .cogroup(aux.groupBy("segment_id"))
+        .applyInPandas(
+            cogroup_fn,
+            "query_id int, local_doc_id int, score double, segment_id string",
+        )
     )
 
 
-def _result_schema(reader: IndexReader, key_cols, extra_cols):
-    from pyspark.sql.types import DoubleType, StructField, StructType
+def _gather(reader, plan: _Plan, cand: DataFrame) -> pd.DataFrame:
+    """Collect the Spark runner's candidates: <= k(+ties) rows per
+    (segment, query) reach the driver — the scatter/gather boundary.
+
+    Distributed-merge escape hatch: on a pre-merge index with 10^4-10^5
+    segments the per-segment rows alone would swamp the driver. Past
+    _GATHER_MAX_ROWS (segments x Σk, ties aside), rank() over
+    partitionBy(query_id) keeps exactly each query's global top-k tie group
+    — the rows the driver-side cut in _finish keeps, so results are
+    identical — and only <= Σk(+ties) rows reach collect()."""
+    if _n_segments(reader) * sum(k for _, _, k, _ in plan.entries) > _GATHER_MAX_ROWS:
+        from pyspark.sql import Window
+
+        kdf = reader.spark.createDataFrame(
+            [(qid, k) for qid, _, k, _ in plan.entries], "query_id int, __kq int"
+        )
+        w = Window.partitionBy("query_id").orderBy(F.col("score").desc())
+        cand = (
+            cand.withColumn("__rnk", F.rank().over(w))
+            .join(F.broadcast(kdf), "query_id")
+            .where(F.col("__rnk") <= F.col("__kq"))
+            .drop("__rnk", "__kq")
+        )
+    return pd.DataFrame(cand.collect(), columns=cand.columns)
+
+
+def _finish(reader, plan: _Plan, cand: pd.DataFrame, extra_cols, query_id):
+    """Per-query merge, fetch and materialization over either runner's
+    candidates (query_id, local_doc_id, score, segment_id)."""
+    if cand.empty:
+        return _empty_result(reader, extra_cols, query_id)
+    k_of = {qid: k for qid, _, k, _ in plan.entries}
+    # per-query TopDocs.merge: the same tie-aware cut as per segment
+    winners = pd.concat([
+        g[_tie_cut(g["score"].to_numpy(), k_of[qid])]
+        for qid, g in cand.groupby("query_id", sort=False)
+    ])
+    fetched = _fetch(reader, winners, extra_cols)
+    key_cols = list(reader.cfg.key_cols)
+    out = fetched.sort_values(
+        ["query_id", "score", *key_cols],
+        ascending=[True, False] + [True] * len(key_cols),
+        kind="mergesort",
+    )
+    out = out[out.groupby("query_id").cumcount() < out["query_id"].map(k_of)]
+    cols = [*key_cols, *extra_cols, "score"]
+    return reader.spark.createDataFrame(
+        out[["query_id", *cols] if query_id else cols],
+        schema=_result_schema(reader, extra_cols, query_id),
+    )
+
+
+def _fetch(reader, winners: pd.DataFrame, extra_cols) -> pd.DataFrame:
+    """Fetch phase: the winners' key + stored columns, merged onto them.
+
+    Driver-side pyarrow read through the reader's cached docs dataset —
+    partition pruning on segment_id, predicate pushdown on local_doc_id —
+    for a handful of winners/segments (the coordinator loads k stored
+    documents; a distributed join for k rows is waste). Past the routing
+    bounds (large k·ties, or a pre-merge index with thousands of segments)
+    or on a store the driver cannot read: one broadcast join."""
+    cols = ["segment_id", "local_doc_id", *reader.cfg.key_cols, *extra_cols]
+    ids_by_seg = winners.groupby("segment_id")["local_doc_id"].unique()
+    if (
+        fsio.driver_readable(reader.index_dir)
+        and len(winners) <= _DRIVER_FETCH_MAX_ROWS
+        and len(ids_by_seg) <= _DRIVER_FETCH_MAX_SEGS
+    ):
+        import pyarrow.dataset as ds
+
+        cond = functools.reduce(_op.or_, [
+            (ds.field("segment_id") == seg)
+            & ds.field("local_doc_id").isin(ids.tolist())
+            for seg, ids in ids_by_seg.items()
+        ])
+        docs = _local_ds(reader, "docs").to_table(filter=cond, columns=cols).to_pandas()
+        docs["segment_id"] = docs["segment_id"].astype(str)
+    else:
+        pairs = reader.spark.createDataFrame(
+            winners[["segment_id", "local_doc_id"]].drop_duplicates(),
+            "segment_id string, local_doc_id int",
+        )
+        docs = (
+            reader.docs()
+            .where(F.col("segment_id").isin(list(ids_by_seg.index)))  # pruned
+            .join(F.broadcast(pairs), ["segment_id", "local_doc_id"])
+            .select(*cols)
+            .toPandas()
+        )
+    return winners.merge(docs, on=["segment_id", "local_doc_id"])
+
+
+def _local_ds(reader, sub: str):
+    """pyarrow dataset of an index table: the reader's layout-cached one,
+    else a fresh discovery (driver-readable non-file:// stores)."""
+    cached = reader.local_dataset(sub)
+    if cached is not None:
+        return cached
+    return fsio.dataset(f"{reader.index_dir.rstrip('/')}/{sub}", partitioning="hive")
+
+
+def _result_schema(reader: IndexReader, extra_cols, query_id: bool = False):
+    """Result schema (query_id?, key_cols, extra_cols, score); _empty_result
+    builds the same columns."""
+    from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
     doc_fields = {f.name: f for f in reader.docs().schema.fields}
     return StructType(
-        [doc_fields[c] for c in [*key_cols, *extra_cols]]
+        ([StructField("query_id", IntegerType())] if query_id else [])
+        + [doc_fields[c] for c in [*reader.cfg.key_cols, *extra_cols]]
         + [StructField("score", DoubleType())]
     )
 
 
-def _driver_fetch(reader, rows, key_cols, extra_cols):
-    """Fetch winning docs driver-side from the per-segment parquet files."""
-    import pyarrow.parquet as pq
-
-    if not fsio.driver_readable(reader.index_dir):
-        return None
-    fs, root = fsio.resolve(reader.index_dir)
-    by_seg: dict[str, list] = {}
-    for r in rows:
-        by_seg.setdefault(r["segment_id"], []).append(r)
-    parts = []
-    for seg, seg_rows in by_seg.items():
-        path = "/".join([root.rstrip("/"), "docs", f"segment_id={seg}", "data.parquet"])
-        from pyarrow.fs import FileType
-
-        if fs.get_file_info(path).type == FileType.NotFound:
-            return None
-        ids = [r["local_doc_id"] for r in seg_rows]
-        tbl = pq.read_table(
-            path,
-            filesystem=fs,
-            columns=["local_doc_id", *key_cols, *extra_cols],
-            filters=[("local_doc_id", "in", ids)],
-        ).to_pandas()
-        score_map = {r["local_doc_id"]: r["score"] for r in seg_rows}
-        tbl["score"] = tbl["local_doc_id"].map(score_map)
-        parts.append(tbl.drop(columns=["local_doc_id"]))
-    return pd.concat(parts, ignore_index=True)
+def _empty_result(reader: IndexReader, extra_cols: Iterable[str] = (),
+                  query_id: bool = False) -> DataFrame:
+    """No hits, with exactly the schema a non-empty result has — as a
+    pruned empty scan, so collecting it runs no job."""
+    cols = [*reader.cfg.key_cols, *extra_cols, F.lit(None).cast("double").alias("score")]
+    if query_id:
+        cols.insert(0, F.lit(None).cast("int").alias("query_id"))
+    return reader.docs().select(*cols).where(F.lit(False))
 
 
-def _spark_fetch(reader, rows, key_cols, extra_cols, k):
-    seg_ids = sorted({r["segment_id"] for r in rows})
-    cand_df = reader.spark.createDataFrame(
-        [(r["segment_id"], r["local_doc_id"], r["score"]) for r in rows],
-        "segment_id string, local_doc_id int, score double",
-    )
-    fetch_cols = ["segment_id", "local_doc_id", *key_cols, *extra_cols]
-    return (
-        reader.docs()
-        .where(F.col("segment_id").isin(seg_ids))  # partition-pruned fetch
-        .select(*fetch_cols)
-        .join(F.broadcast(cand_df), ["segment_id", "local_doc_id"])
-        .select(*key_cols, *extra_cols, "score")
-        .orderBy(F.col("score").desc(), *[F.col(c).asc() for c in key_cols])
-        .limit(k)
-    )
-
-
-def _empty_result(reader: IndexReader, extra_cols: Iterable[str]) -> DataFrame:
-    cols = [*reader.cfg.key_cols, *extra_cols]
-    return (
-        reader.docs()
-        .select(*cols)
-        .withColumn("score", F.lit(0.0))
-        .where(F.lit(False))
-    )
+def _n_segments(reader: IndexReader) -> int:
+    """Segment count: the layout-cached local norms when driver-readable,
+    else ONE count() job on the (tiny) norms table, memoized per reader."""
+    norms = reader.local_norms()
+    if norms is not None:
+        return len(norms)
+    if getattr(reader, "_n_segments_cache", None) is None:
+        reader._n_segments_cache = reader.norms().select("segment_id").count()
+    return reader._n_segments_cache

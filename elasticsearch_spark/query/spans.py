@@ -23,8 +23,9 @@ engine's sloppy-phrase freq); score = (Σ idf of the positive terms) ·
 BM25 tfNorm(freq). span_not scores from the include term only (Lucene
 SpanNotQuery).
 
-Execution shape: same scatter/gather as match_phrase — per-segment numpy
-kernels over term-pruned postings, ≤ k rows per segment to the gather.
+Execution shape: each query is one span kernel (anchor matcher + the
+phrase scoring tail) in the shared plan → per-segment kernel → gather →
+fetch flow of query/executor.py, exactly like match_phrase.
 """
 
 from __future__ import annotations
@@ -32,84 +33,49 @@ from __future__ import annotations
 from typing import Iterable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 
 from elasticsearch_spark.analysis.analyzers import tokenize_text
 from elasticsearch_spark.index.reader import IndexReader
 from elasticsearch_spark.query.executor import (
     _PHRASE_COLUMNS,
-    _allowed_mask,
-    _anchors_to_topk,
-    _decode_term_pos,
+    _SHIFT as SHIFT,
+    _anchor_scores,
     _empty_result,
     _execute,
+    _pos_keys,
+    _Query,
     lucene_idf,
 )
-from elasticsearch_spark.functions.smallfloat import effective_doc_length
-
-SHIFT = 22
 
 
-def _span_scorer(kernel, terms_needed: list[str], sum_idf: float, k: int,
-                 k1: float, b: float, avgdl: float, quantize: bool):
-    """Wrap a per-segment anchor ``kernel(keys_by_term) -> anchor keys``."""
+def _span_kernel(anchor_fn, terms: list[str], sum_idf: float):
+    """Span kernel: ``anchor_fn(keys_by_term) -> anchor keys`` over each
+    term's position keys, scored by the phrase/span tail."""
 
-    def score_fn(post: pd.DataFrame, aux: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "local_doc_id": pd.Series([], dtype="int32"),
-                "score": pd.Series([], dtype="float64"),
-            }
-        )
-        if post.empty or aux.empty:
-            return empty
-        n_docs = int(aux["n_docs"].iloc[0])
-        doc_lens = np.frombuffer(aux["doc_len_packed"].iloc[0], dtype=np.uint32)
-        dl_eff = effective_doc_length(doc_lens, quantize=quantize)
-        allowed = _allowed_mask(aux, n_docs)
+    def kernel(view, allowed):
+        keys = {t: _pos_keys(view, t) for t in terms}
+        return _anchor_scores(view, anchor_fn(keys), sum_idf)
 
-        post = post.sort_values(["term", "first_doc"])
-        by_term = {t: g for t, g in post.groupby("term", sort=False)}
-
-        keys: dict[str, np.ndarray] = {}
-        for t in terms_needed:
-            g = by_term.get(t)
-            if g is None:
-                keys[t] = np.array([], dtype=np.int64)
-            else:
-                docs, tfs, pos = _decode_term_pos(g)
-                doc_of_pos = np.repeat(docs, tfs.astype(np.int64))
-                keys[t] = (doc_of_pos << SHIFT) + pos.astype(np.int64)
-        anchors = kernel(keys)
-        if anchors.size == 0:
-            return empty
-        return _anchors_to_topk(
-            anchors, allowed, dl_eff, sum_idf, k, k1, b, avgdl, SHIFT, empty
-        )
-
-    return score_fn
+    return kernel
 
 
-def _run(reader: IndexReader, kernel, terms: list[str], idf_terms: list[str],
+def _run(reader: IndexReader, anchor_fn, terms: list[str], idf_terms: list[str],
          k: int, filter_cond: Column | None, extra_cols: Iterable[str],
          mode: str, local_postings_limit: int) -> DataFrame:
-    cfg = reader.cfg
-    if not cfg.index_positions:
+    if not reader.cfg.index_positions:
         raise ValueError("index was built with index_positions=False")
     stats = reader.query_term_stats(terms)
     n = reader.n_docs
     sum_idf = float(
         sum(lucene_idf(n, stats.get(t, (0, 0))[0]) for t in idf_terms)
     )
-    score_fn = _span_scorer(
-        kernel, terms, sum_idf, k, cfg.bm25.k1, cfg.bm25.b, reader.avgdl,
-        cfg.bm25.quantize_norms,
-    )
-    est = sum(stats.get(t, (0, 0))[1] for t in dict.fromkeys(terms))
+    terms = list(dict.fromkeys(terms))
+    est = sum(stats.get(t, (0, 0))[1] for t in terms)
+    kernel = _span_kernel(anchor_fn, terms, sum_idf)
     return _execute(
-        reader, score_fn, list(dict.fromkeys(terms)), k, filter_cond,
-        list(extra_cols), mode, est, local_postings_limit, _PHRASE_COLUMNS,
+        reader, [_Query(kernel, k, terms, est, filter_cond)], extra_cols,
+        mode, local_postings_limit, _PHRASE_COLUMNS,
     )
 
 
@@ -136,10 +102,10 @@ def span_term_topk(
     if not t:
         return _empty_result(reader, extra_cols)
 
-    def kernel(keys: dict[str, np.ndarray]) -> np.ndarray:
+    def anchors(keys: dict[str, np.ndarray]) -> np.ndarray:
         return keys[t]
 
-    return _run(reader, kernel, [t], [t], k, filter_cond, extra_cols, mode,
+    return _run(reader, anchors, [t], [t], k, filter_cond, extra_cols, mode,
                 local_postings_limit)
 
 
@@ -172,13 +138,13 @@ def span_or_topk(
     if not toks:
         return _empty_result(reader, extra_cols)
 
-    def kernel(keys: dict[str, np.ndarray]) -> np.ndarray:
+    def anchors(keys: dict[str, np.ndarray]) -> np.ndarray:
         parts = [keys[t] for t in toks if keys[t].size]
         if not parts:
             return np.array([], dtype=np.int64)
         return np.unique(np.concatenate(parts))
 
-    return _run(reader, kernel, toks, toks, k, filter_cond, extra_cols, mode,
+    return _run(reader, anchors, toks, toks, k, filter_cond, extra_cols, mode,
                 local_postings_limit)
 
 
@@ -255,11 +221,11 @@ def span_first_topk(
     if not t:
         return _empty_result(reader, extra_cols)
 
-    def kernel(keys: dict[str, np.ndarray]) -> np.ndarray:
+    def anchors(keys: dict[str, np.ndarray]) -> np.ndarray:
         ks = keys[t]
         return ks[(ks & ((1 << SHIFT) - 1)) < end]
 
-    return _run(reader, kernel, [t], [t], k, filter_cond, extra_cols, mode,
+    return _run(reader, anchors, [t], [t], k, filter_cond, extra_cols, mode,
                 local_postings_limit)
 
 
@@ -282,10 +248,10 @@ def span_near_topk(
     if not in_order and len(toks) != 2:
         raise ValueError("unordered span_near supports exactly 2 clauses")
 
-    def kernel(keys: dict[str, np.ndarray]) -> np.ndarray:
+    def anchors(keys: dict[str, np.ndarray]) -> np.ndarray:
         return _near_chain([keys[t] for t in toks], slop, in_order)
 
-    return _run(reader, kernel, toks, toks, k, filter_cond, extra_cols, mode,
+    return _run(reader, anchors, toks, toks, k, filter_cond, extra_cols, mode,
                 local_postings_limit)
 
 
@@ -384,14 +350,9 @@ def field_masking_span_near_topk(
     needed = list(dict.fromkeys(ns[fld] + t for fld, t in toks))
     key_seq_names = [ns[fld] + t for fld, t in toks]
 
-    def kernel(keys: dict[str, np.ndarray]) -> np.ndarray:
+    def near(keys: dict[str, np.ndarray]) -> np.ndarray:
         return _near_chain([keys[name] for name in key_seq_names], slop,
                            in_order)
-
-    score_fn = _span_scorer(
-        kernel, needed, sum_idf, k, cfg.bm25.k1, cfg.bm25.b, reader.avgdl,
-        cfg.bm25.quantize_norms,
-    )
 
     from pyspark.sql import functions as F
 
@@ -410,9 +371,10 @@ def field_masking_span_near_topk(
     for p in parts[1:]:
         postings_df = postings_df.unionByName(p)
 
+    kernel = _span_kernel(near, needed, sum_idf)
     return _execute(
-        reader, score_fn, needed, k, filter_cond, list(extra_cols),
-        "distributed", 0, 0, _PHRASE_COLUMNS, postings_df=postings_df,
+        reader, [_Query(kernel, k, needed, 0, filter_cond)], extra_cols,
+        "spark", 0, _PHRASE_COLUMNS, postings_df=postings_df,
     )
 
 
@@ -434,7 +396,7 @@ def span_not_topk(
     if not inc:
         return _empty_result(reader, extra_cols)
 
-    def kernel(keys: dict[str, np.ndarray]) -> np.ndarray:
+    def anchors(keys: dict[str, np.ndarray]) -> np.ndarray:
         a = keys[inc]
         ex = keys.get(exc, np.array([], dtype=np.int64))
         if a.size == 0 or ex.size == 0:
@@ -445,5 +407,5 @@ def span_not_topk(
         return a[hi == lo]
 
     terms = [inc, exc] if exc else [inc]
-    return _run(reader, kernel, terms, [inc], k, filter_cond, extra_cols,
+    return _run(reader, anchors, terms, [inc], k, filter_cond, extra_cols,
                 mode, local_postings_limit)

@@ -183,16 +183,17 @@ def main() -> None:
 
     # 10. msearch batch: ONE term-pruned postings scan (union of all
     #     queries' terms) feeding the cogrouped multi-query kernel —
-    #     no per-query scan, no cartesian
-    from elasticsearch_spark.query.msearch import _msearch_candidates
+    #     no per-query scan, no cartesian. The candidate plan is built by
+    #     the shared executor from msearch's per-query entries.
+    from elasticsearch_spark.query import executor as _exec
+    from elasticsearch_spark.query.msearch import _msearch_queries, msearch_topk
 
-    ms_cand, _ = _msearch_candidates(
-        reader,
-        [
-            {"query_text": "data"},
-            {"query_text": "query merge", "operator": "and"},
-        ],
-        k=10,
+    ms_queries = [
+        {"query_text": "data"},
+        {"query_text": "query merge", "operator": "and"},
+    ]
+    ms_cand = _exec._spark_candidates(
+        reader, _exec._plan(reader, _msearch_queries(reader, ms_queries, k=10))
     )
     ms_plan = plan_of(ms_cand)
     check(
@@ -208,23 +209,42 @@ def main() -> None:
     # 11. msearch distributed-merge escape hatch: past the gather bound the
     #     per-query top-k cut runs in Spark (rank window per query_id +
     #     broadcast k-map) BEFORE collect — the driver never sees
-    #     segments x queries x k rows
-    from pyspark.sql import Window
+    #     segments x queries x k rows. Force the hatch (budget 0) and spy
+    #     on the ACTUAL msearch candidate collect, as check 15 does.
+    # patch the CONCRETE DataFrame class — in pyspark 4 the classic
+    # session's instances override collect(), so patching the base
+    # pyspark.sql.DataFrame never intercepts
+    try:
+        from pyspark.sql.classic.dataframe import DataFrame as _DF
+    except ImportError:  # older pyspark: one DataFrame class
+        from pyspark.sql import DataFrame as _DF
 
-    kdf = spark.createDataFrame([(0, 10), (1, 10)], "query_id int, __kq int")
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc())
-    bounded = (
-        ms_cand.withColumn("__rnk", F.rank().over(w))
-        .join(F.broadcast(kdf), "query_id")
-        .where(F.col("__rnk") <= F.col("__kq"))
-        .drop("__rnk", "__kq")
-    )
-    check(
-        "msearch_bounded_gather",
-        plan_of(bounded),
-        must=["Window", "BroadcastHashJoin"],
-        must_not=["CartesianProduct", "SortMergeJoin"],
-    )
+    captured: list[str] = []
+    _orig_collect = _DF.collect
+
+    def _spy_collect(self):
+        captured.append(plan_of(self))
+        return _orig_collect(self)
+
+    _old_budget = _exec._GATHER_MAX_ROWS
+    _exec._GATHER_MAX_ROWS = 0
+    _DF.collect = _spy_collect
+    try:
+        msearch_topk(reader, ms_queries, k=10)
+    finally:
+        _DF.collect = _orig_collect
+        _exec._GATHER_MAX_ROWS = _old_budget
+    ms_gather = [p for p in captured if "flatmapcogroupsinpandas" in p.lower()]
+    if not ms_gather:
+        FAILS.append(("msearch_bounded_gather", "no msearch gather collect seen"))
+        print("FAIL  msearch_bounded_gather (no msearch gather collect seen)")
+    else:
+        check(
+            "msearch_bounded_gather",
+            ms_gather[0],
+            must=["Window", "BroadcastHashJoin"],
+            must_not=["CartesianProduct", "SortMergeJoin"],
+        )
 
     # 12. date-math range filter: resolved driver-side to a CONSTANT, so the
     #     timestamp predicate reaches the parquet scan (PushedFilters —
@@ -264,23 +284,9 @@ def main() -> None:
     #     IN Spark (TakeOrderedAndProject over the pushed candidate scan) —
     #     the driver never collects an uncapped fuzzy expansion set. Spied
     #     on the ACTUAL internal collect, not a re-created shape.
-    # patch the CONCRETE DataFrame class — in pyspark 4 the classic
-    # session's instances override collect(), so patching the base
-    # pyspark.sql.DataFrame never intercepts
-    try:
-        from pyspark.sql.classic.dataframe import DataFrame as _DF
-    except ImportError:  # older pyspark: one DataFrame class
-        from pyspark.sql import DataFrame as _DF
-
     from elasticsearch_spark.ops.mlt import fuzzy_like_this
 
-    captured: list[str] = []
-    _orig_collect = _DF.collect
-
-    def _spy_collect(self):
-        captured.append(plan_of(self))
-        return _orig_collect(self)
-
+    captured.clear()
     _DF.collect = _spy_collect
     try:
         fuzzy_like_this(reader, "merge quary", fuzziness=1, max_query_terms=5)
@@ -304,8 +310,6 @@ def main() -> None:
     #     driver collect. Force the hatch (budget 0), assert the actually
     #     collected candidate plan carries the Window, and that results are
     #     rank/score-identical to the un-hatched path.
-    from elasticsearch_spark.query import executor as _exec
-
     base = [
         (r["doc_id"], round(r["score"], 9))
         for r in _exec.search_topk(reader, "data merge", k=5, mode="spark").collect()

@@ -87,7 +87,7 @@ def test_slop_transposed_doc_start_is_hit(slop_setup):
 
 @pytest.mark.parametrize("mode", ["local", "spark"])
 def test_query_string_sloppy_phrase_near_start(slop_setup, mode):
-    """Same anchor kernel inside _segment_bool_scorer (phrase~N clause)."""
+    """Same anchor kernel inside _bool_kernel (phrase~N clause)."""
     reader, oracle = slop_setup
     q = '"error timeout"~2'
     got = [

@@ -108,12 +108,15 @@ def test_msearch_per_query_k(reader):
     assert n[0] == 3 and n[1] == 7
 
 
-def test_msearch_bounded_gather_identical(reader):
-    """gather_max_rows=1 forces the Spark-side per-query rank cut
+def test_msearch_bounded_gather_identical(reader, monkeypatch):
+    """A gather budget of 1 row forces the Spark-side per-query rank cut
     (the distributed-merge escape hatch); results must be identical to
     the unbounded driver-gather path, row for row."""
+    import elasticsearch_spark.query.executor as ex
+
     specs = _specs()[:8]
-    free = msearch_topk(reader, specs, gather_max_rows=None).collect()
-    bounded = msearch_topk(reader, specs, gather_max_rows=1).collect()
+    free = msearch_topk(reader, specs).collect()
+    monkeypatch.setattr(ex, "_GATHER_MAX_ROWS", 1)  # force the hatch
+    bounded = msearch_topk(reader, specs).collect()
     key = lambda r: (r["query_id"], -r["score"], r["conv_id"], r["turn_idx"])  # noqa: E731
     assert sorted(free, key=key) == sorted(bounded, key=key)
