@@ -1,4 +1,4 @@
-"""Text analysis chain — the reference's "standard" analyzer, vectorized.
+"""Text analysis chain — the reference's analyzers, defined once.
 
 Reference semantics (citations into /root/reference/src/main/java/org/elasticsearch/):
 - default analyzer is "standard": StandardTokenizer (UAX#29 word break) +
@@ -9,13 +9,22 @@ Reference semantics (citations into /root/reference/src/main/java/org/elasticsea
   (indices/analyze/AnalyzeActionTests.java:38-50); `analyze_series` is our
   equivalent test surface.
 
-Implementation is Spark-first:
-- "simple" / "whitespace" analyzers compile to native Spark SQL expressions
-  (JVM-side, whole-stage-codegen; zero Python).
-- "standard" (UAX#29) has no built-in Spark equivalent, so it runs as a
-  vectorized pandas operation inside Arrow-batched UDFs
-  (pandas ``.str.findall`` with a single compiled regex — no per-row Python
-  at the Spark API level).
+One chain, three execution paths:
+- ``tokenize_text`` is the single per-string definition of the chain for
+  every kind (char filters → tokenizer → lowercase → stopwords → 1:1 token
+  filters → shingles). Queries, the PyRef oracle and ``analyze_series``
+  (a map of it over a pandas Series, used inside Arrow-batched UDFs) all
+  run it. ``max_token_length`` 0 means no chunking everywhere.
+- ``analyze_codes`` is the builder's call. For standard/simple/whitespace
+  without stopwords or shingles it tokenizes with one compiled regex per
+  batch and runs lowercase and the 1:1 token filters over the batch
+  VOCABULARY, not the occurrences; every other config factorizes
+  ``analyze_series``. Both give the same tokens (tests/test_filters.py
+  ``test_chain_paths_agree``).
+- ``sql_tokenize_expr`` compiles the SQL-expressible kinds and filters to
+  native Spark SQL (JVM-side, whole-stage-codegen; zero Python), parity
+  tested against ``tokenize_text``. "standard" (UAX#29) and the
+  porter/asciifolding/synonym filters have no SQL form.
 
 UAX#29 approximation notes (SURVEY.md §7.1 hazard 6): a bare ``\\w+`` is NOT
 equivalent — apostrophes (WB6/WB7 MidNumLetQ), number separators (WB11/WB12
@@ -28,6 +37,7 @@ from __future__ import annotations
 
 import re
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -36,7 +46,6 @@ from elasticsearch_spark.config import AnalyzerConfig
 from elasticsearch_spark.analysis.filters import (
     asciifold,
     html_strip,
-    html_strip_series,
     porter_stem,
     shingles,
 )
@@ -67,6 +76,13 @@ _STANDARD_RE = re.compile(f"{_KATA}|{_HIRA}|{_CJK}|{_WORD}", re.UNICODE)
 SIMPLE_TOKEN_PATTERN = "[a-z0-9]+"
 _SIMPLE_RE = re.compile(SIMPLE_TOKEN_PATTERN)
 _WHITESPACE_RE = re.compile(r"\S+")
+_LETTER_RE = re.compile("[A-Za-z]+")
+# kinds whose tokens are lowercased after tokenization when cfg.lowercase
+# ("simple" and the n-grams lowercase the text first; whitespace, keyword
+# and path_hierarchy keep case)
+_LOWERCASE_AFTER = frozenset(
+    {"standard", "uax_url_email", "letter", "pattern", "classic"}
+)
 
 # --- uax_url_email tokenizer ----------------------------------------------
 # UAX29URLEmailTokenizerFactory analog: URLs and email addresses survive as
@@ -156,21 +172,6 @@ def _char_filter_text(text: str, cfg: AnalyzerConfig) -> str:
     return text
 
 
-def _char_filter_series(s: pd.Series, cfg: AnalyzerConfig) -> pd.Series:
-    for name in cfg.char_filters:
-        if name == "html_strip":
-            s = html_strip_series(s)
-        elif name == "mapping":
-            for src, dst in cfg.char_filter_mappings:
-                s = s.str.replace(src, dst, regex=False)
-        elif name == "pattern_replace":
-            s = s.str.replace(cfg.char_filter_pattern,
-                              cfg.char_filter_replacement, regex=True)
-        else:
-            raise ValueError(f"unknown char filter: {name}")
-    return s
-
-
 def make_token_filter(cfg: AnalyzerConfig):
     """Compose the 1:1 token filters (tuple order) → callable or None."""
     if not cfg.token_filters:
@@ -204,7 +205,9 @@ def make_token_filter(cfg: AnalyzerConfig):
 
 
 def tokenize_text(text: str, cfg: AnalyzerConfig | None = None) -> list[str]:
-    """Single-string analyze (driver-side / oracle use)."""
+    """Analyze one string: the single definition of the chain (char filters
+    → tokenizer → lowercase → stopwords → token filters → shingles).
+    ``max_token_length`` 0 means no chunking."""
     cfg = cfg or AnalyzerConfig()
     if text is None:
         return []
@@ -212,9 +215,8 @@ def tokenize_text(text: str, cfg: AnalyzerConfig | None = None) -> list[str]:
     if cfg.kind in ("standard", "uax_url_email"):
         rex = _STANDARD_RE if cfg.kind == "standard" else _UAX_URL_EMAIL_RE
         toks = rex.findall(text)
-        toks = _chunk_long(toks, cfg.max_token_length)
-        if cfg.lowercase:
-            toks = [t.lower() for t in toks]
+        if cfg.max_token_length:
+            toks = _chunk_long(toks, cfg.max_token_length)
     elif cfg.kind == "simple":
         toks = _SIMPLE_RE.findall(text.lower())
     elif cfg.kind == "whitespace":
@@ -222,9 +224,7 @@ def tokenize_text(text: str, cfg: AnalyzerConfig | None = None) -> list[str]:
     elif cfg.kind == "keyword":
         toks = [text] if text else []
     elif cfg.kind == "letter":
-        toks = re.findall(r"[A-Za-z]+", text)
-        if cfg.lowercase:
-            toks = [t.lower() for t in toks]
+        toks = _LETTER_RE.findall(text)
     elif cfg.kind in ("ngram", "edge_ngram"):
         src = text.lower() if cfg.lowercase else text
         lo, hi = cfg.ngram_min, cfg.ngram_max
@@ -241,18 +241,16 @@ def tokenize_text(text: str, cfg: AnalyzerConfig | None = None) -> list[str]:
         # SQL path compiles to Spark's Java-regex split — without the flag,
         # Python's unicode \W would split 'café' differently than the scan
         toks = [t for t in re.split(cfg.pattern, text, flags=re.ASCII) if t != ""]
-        if cfg.lowercase:
-            toks = [t.lower() for t in toks]
     elif cfg.kind == "path_hierarchy":
         toks = _path_hierarchy(text, cfg.path_delimiter)
     elif cfg.kind == "classic":
         # no long-token chunking (like "simple"): keeps the Python and
         # native-SQL paths identical; >255-char tokens are pathological
         toks = _CLASSIC_RE.findall(text)
-        if cfg.lowercase:
-            toks = [t.lower() for t in toks]
     else:
         raise ValueError(f"unknown analyzer kind: {cfg.kind}")
+    if cfg.lowercase and cfg.kind in _LOWERCASE_AFTER:
+        toks = [t.lower() for t in toks]
     if cfg.stopwords:
         stop = set(cfg.stopwords)
         toks = [t for t in toks if t not in stop]
@@ -265,131 +263,40 @@ def tokenize_text(text: str, cfg: AnalyzerConfig | None = None) -> list[str]:
 
 
 def analyze_series(s: pd.Series, cfg: AnalyzerConfig | None = None) -> pd.Series:
-    """Vectorized analyze of a pandas string Series → Series of token lists.
-
-    This is the hot path inside Arrow-batched UDFs; uses pandas .str ops
-    (C-loop over the batch), never a Python-level row loop in Spark.
-    """
+    """Analyze a pandas string Series → Series of token lists (nulls → []):
+    ``tokenize_text`` mapped over the values, so every kind and filter
+    behaves exactly as on the single-string path."""
     cfg = cfg or AnalyzerConfig()
-    s = _char_filter_series(s.fillna(""), cfg)
-    if cfg.kind in ("standard", "uax_url_email"):
-        rex = _STANDARD_RE if cfg.kind == "standard" else _UAX_URL_EMAIL_RE
-        toks = s.str.findall(rex)
-        if cfg.max_token_length:
-            ml = cfg.max_token_length
-            toks = toks.map(lambda ts: _chunk_long(ts, ml))
-        if cfg.lowercase:
-            toks = toks.map(lambda ts: [t.lower() for t in ts])
-    elif cfg.kind == "simple":
-        toks = s.str.lower().str.findall(_SIMPLE_RE)
-    elif cfg.kind == "whitespace":
-        toks = s.str.findall(_WHITESPACE_RE)
-    elif cfg.kind == "keyword":
-        toks = s.map(lambda t: [t] if t else [])
-    elif cfg.kind == "path_hierarchy":
-        d = cfg.path_delimiter
-        toks = s.map(lambda t: _path_hierarchy(t, d))
-    elif cfg.kind == "classic":
-        toks = s.str.findall(_CLASSIC_RE)
-        if cfg.lowercase:
-            toks = toks.map(lambda ts: [t.lower() for t in ts])
-    else:
-        raise ValueError(f"unknown analyzer kind: {cfg.kind}")
-    if cfg.stopwords:
-        stop = set(cfg.stopwords)
-        toks = toks.map(lambda ts: [t for t in ts if t not in stop])
-    tf = make_token_filter(cfg)
-    if tf is not None:
-        toks = toks.map(lambda ts: [tf(t) for t in ts])
-    if cfg.shingle_size > 1:
-        n = cfg.shingle_size
-        toks = toks.map(lambda ts: shingles(ts, n))
-    return toks
+    return s.fillna("").map(lambda t: tokenize_text(t, cfg))
 
 
-def analyze_flat(s: pd.Series, cfg: AnalyzerConfig | None = None):
-    """Builder hot path: analyze a string Series → (flat token object array,
-    per-doc token counts int64 array).
-
-    Same token semantics as analyze_series/tokenize_text (asserted in
-    tests), but all per-token work (lowercase, long-token chunking) runs as
-    single C passes over the FLATTENED array instead of per-row lambdas —
-    ~2x faster and far less allocation churn.
-    """
-    import numpy as np
-
-    cfg = cfg or AnalyzerConfig()
-    if (
-        cfg.stopwords or cfg.token_filters or cfg.char_filters
-        or cfg.shingle_size
-        or cfg.kind not in ("standard", "simple", "whitespace")
-    ):
-        # uncommon configs take the reference path
-        toks = analyze_series(s, cfg)
-        lens = toks.str.len().to_numpy(np.int64)
-        flat = (
-            np.concatenate([np.asarray(t, dtype=object) for t in toks.to_numpy()])
-            if len(s) and lens.sum()
-            else np.array([], dtype=object)
-        )
-        return flat, lens
-
-    s = s.fillna("")
-    if cfg.kind == "standard":
-        toks = s.str.findall(_STANDARD_RE)
-    elif cfg.kind == "simple":
-        toks = s.str.lower().str.findall(_SIMPLE_RE)
-    else:  # whitespace
-        toks = s.str.findall(_WHITESPACE_RE)
+def _flatten(toks: pd.Series) -> tuple[np.ndarray, np.ndarray]:
+    """Series of token lists → (flat object array, per-row token counts)."""
     lens = toks.str.len().to_numpy(np.int64)
     flat = (
         np.concatenate([np.asarray(t, dtype=object) for t in toks.to_numpy()])
-        if len(s) and lens.sum()
+        if lens.sum()
         else np.array([], dtype=object)
     )
-    if len(flat):
-        fs = pd.Series(flat, dtype=object)
-        ml = cfg.max_token_length
-        if ml:
-            tok_lens = fs.str.len().to_numpy(np.int64)
-            long_idx = np.flatnonzero(tok_lens > ml)
-            if long_idx.size:  # rare: rebuild affected docs' token lists
-                doc_of_tok = np.repeat(np.arange(len(lens)), lens)
-                bad_docs = np.unique(doc_of_tok[long_idx])
-                starts = np.concatenate([[0], np.cumsum(lens)[:-1]])
-                parts, cursor = [], 0
-                for d in bad_docs:
-                    lo, hi = starts[d], starts[d] + lens[d]
-                    parts.append(flat[cursor:lo])
-                    fixed = _chunk_long(list(flat[lo:hi]), ml)
-                    parts.append(np.asarray(fixed, dtype=object))
-                    lens[d] = len(fixed)
-                    cursor = hi
-                parts.append(flat[cursor:])
-                flat = np.concatenate(parts)
-                fs = pd.Series(flat, dtype=object)
-        if cfg.kind == "standard" and cfg.lowercase:
-            flat = fs.str.lower().to_numpy(dtype=object)
     return flat, lens
 
 
 def analyze_codes(s: pd.Series, cfg: AnalyzerConfig | None = None):
-    """Fastest builder path: analyze → factorized token codes.
+    """Builder path: analyze → factorized token codes.
 
     Returns (codes int64 per occurrence, uniques object array of normalized
-    terms, per-doc counts). Per-token normalization (lowercase) runs over the
-    VOCABULARY, not the occurrences: factorize raw tokens, lowercase the
-    uniques, re-factorize the lowered uniques and remap — O(vocab) python
-    instead of O(tokens). Long-token chunking (>max_token_length, rare)
-    falls back to the exact per-token path for the whole batch because a
-    split changes token counts/positions.
+    terms, per-doc counts). For standard/simple/whitespace without
+    stopwords or shingles, per-token normalization (lowercase, the 1:1
+    token filters) runs over the VOCABULARY, not the occurrences: factorize
+    raw tokens, normalize the uniques, re-factorize and remap — O(vocab)
+    python instead of O(tokens). Every other config, and a standard batch
+    holding a token over ``max_token_length`` (a split changes token counts
+    and positions), takes ``analyze_series`` and factorizes its output.
     """
-    import numpy as np
-
     cfg = cfg or AnalyzerConfig()
 
     def slow():
-        flat, lens = analyze_flat(s, cfg)
+        flat, lens = _flatten(analyze_series(s, cfg))
         codes, uniques = pd.factorize(flat)
         return codes, np.asarray(uniques, dtype=object), lens
 
@@ -399,19 +306,16 @@ def analyze_codes(s: pd.Series, cfg: AnalyzerConfig | None = None):
     ):
         return slow()
 
-    sf = _char_filter_series(s.fillna(""), cfg)
+    sf = s.fillna("")
+    if cfg.char_filters:
+        sf = sf.map(lambda t: _char_filter_text(t, cfg))
     if cfg.kind == "standard":
         toks = sf.str.findall(_STANDARD_RE)
     elif cfg.kind == "simple":
         toks = sf.str.lower().str.findall(_SIMPLE_RE)
     else:
         toks = sf.str.findall(_WHITESPACE_RE)
-    lens = toks.str.len().to_numpy(np.int64)
-    flat = (
-        np.concatenate([np.asarray(t, dtype=object) for t in toks.to_numpy()])
-        if len(sf) and lens.sum()
-        else np.array([], dtype=object)
-    )
+    flat, lens = _flatten(toks)
     codes, uniques = pd.factorize(flat)
     uniques = np.asarray(uniques, dtype=object)
     if cfg.kind == "standard":
@@ -439,6 +343,19 @@ def analyze_codes(s: pd.Series, cfg: AnalyzerConfig | None = None):
 def _sql_str(s: str) -> str:
     """Escape a literal for a single-quoted Spark SQL string."""
     return s.replace("\\", "\\\\").replace("'", "\\'")
+
+
+# str.strip() removes every str.isspace() character; Spark's trim() only
+# 0x20. The trim filter compiles to a Java-regex replace over that exact set
+# (all of it lies in the BMP), so the token stays on the JVM path.
+_WS = "[" + "".join(
+    f"\\u{c:04x}" for c in range(0x10000) if chr(c).isspace()
+) + "]"
+_SQL_TRIM_RE = _sql_str(rf"\A{_WS}+|{_WS}+\z")
+_SQL_TOKEN_FILTERS = {
+    "trim": lambda x: f"regexp_replace({x}, '{_SQL_TRIM_RE}', '')",
+    "reverse": lambda x: f"reverse({x})",
+}
 
 
 def sql_char_filter_expr(col: str, cfg: AnalyzerConfig) -> str:
@@ -475,10 +392,10 @@ def sql_tokenize_expr(col: str, cfg: AnalyzerConfig) -> str | None:
     """
     sql_filters = None
     if cfg.token_filters:
-        if all(f in ("trim", "reverse") for f in cfg.token_filters):
+        if all(f in _SQL_TOKEN_FILTERS for f in cfg.token_filters):
             sql_filters = "x"
             for f in cfg.token_filters:  # 1:1, composed in tuple order
-                sql_filters = f"{f}({sql_filters})"
+                sql_filters = _SQL_TOKEN_FILTERS[f](sql_filters)
         else:
             return None  # porter/asciifold/synonym → pandas path
     src = sql_char_filter_expr(col, cfg)
@@ -487,8 +404,7 @@ def sql_tokenize_expr(col: str, cfg: AnalyzerConfig) -> str | None:
     if cfg.kind == "simple":
         base = f"regexp_extract_all(lower({src}), '{SIMPLE_TOKEN_PATTERN}', 0)"
     elif cfg.kind == "classic":
-        pat = CLASSIC_TOKEN_PATTERN.replace("\\", "\\\\").replace("'", "\\'")
-        inner = f"regexp_extract_all({src}, '{pat}', 0)"
+        inner = f"regexp_extract_all({src}, '{_sql_str(CLASSIC_TOKEN_PATTERN)}', 0)"
         base = f"transform({inner}, x -> lower(x))" if cfg.lowercase else inner
     elif cfg.kind == "whitespace":
         # split on runs of whitespace, drop empty edge tokens
@@ -497,7 +413,7 @@ def sql_tokenize_expr(col: str, cfg: AnalyzerConfig) -> str | None:
         # drop the empty value like the Python path ([text] if text else [])
         base = f"filter(array({src}), x -> x != '')"
     elif cfg.kind == "letter":
-        inner = f"regexp_extract_all({src}, '[A-Za-z]+', 0)"
+        inner = f"regexp_extract_all({src}, '{_LETTER_RE.pattern}', 0)"
         base = f"transform({inner}, x -> lower(x))" if cfg.lowercase else inner
     elif cfg.kind == "edge_ngram":
         s = f"lower({src})" if cfg.lowercase else src
@@ -515,12 +431,11 @@ def sql_tokenize_expr(col: str, cfg: AnalyzerConfig) -> str | None:
             f" else array() end))"
         )
     elif cfg.kind == "pattern":
-        pat = cfg.pattern.replace("\\", "\\\\").replace("'", "\\'")
-        inner = f"filter(split({src}, '{pat}'), x -> x != '')"
+        inner = f"filter(split({src}, '{_sql_str(cfg.pattern)}'), x -> x != '')"
         base = f"transform({inner}, x -> lower(x))" if cfg.lowercase else inner
     elif cfg.kind == "path_hierarchy":
         # split takes a Java regex — quote the literal delimiter
-        pat = re.escape(cfg.path_delimiter).replace("\\", "\\\\")
+        pat = _sql_str(re.escape(cfg.path_delimiter))
         d = _sql_str(cfg.path_delimiter)
         parts = f"split({src}, '{pat}')"
         base = (
@@ -532,7 +447,7 @@ def sql_tokenize_expr(col: str, cfg: AnalyzerConfig) -> str | None:
     if cfg.stopwords:
         # 1:1 filter (NOT array_except, which dedupes) — keeps the SQL path
         # consistent with tokenize_text's stopword removal
-        stops = ", ".join("'" + w.replace("'", "\\'") + "'" for w in cfg.stopwords)
+        stops = ", ".join(f"'{_sql_str(w)}'" for w in cfg.stopwords)
         base = f"filter({base}, x -> NOT array_contains(array({stops}), x))"
     if sql_filters is not None:
         # same position as make_token_filter: after stopwords, before shingle
@@ -549,8 +464,8 @@ def sql_tokenize_expr(col: str, cfg: AnalyzerConfig) -> str | None:
 
 
 def tokenize_column(col: str, cfg: AnalyzerConfig | None = None) -> Column:
-    """Column-level tokenizer: native SQL expr when possible, else a
-    vectorized pandas UDF (Arrow-batched)."""
+    """Column-level tokenizer: native SQL expr when possible, else a pandas
+    UDF running ``analyze_series`` over Arrow batches."""
     cfg = cfg or AnalyzerConfig()
     expr = sql_tokenize_expr(col, cfg)
     if expr is not None:

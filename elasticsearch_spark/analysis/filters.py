@@ -201,14 +201,6 @@ def html_strip(text: str) -> str:
     return out
 
 
-def html_strip_series(s):
-    """Vectorized html_strip over a pandas string Series (same semantics)."""
-    out = s.str.replace(_TAG_RE, " ", regex=True)
-    for ent, rep in _ENTITIES:
-        out = out.str.replace(ent, rep, regex=False)
-    return out
-
-
 # --- shingles -------------------------------------------------------------
 
 

@@ -67,6 +67,7 @@ class AnalyzerConfig:
 
     kind: str = "standard"
     lowercase: bool = True
+    # standard/uax_url_email split longer tokens into chunks; 0 = never
     max_token_length: int = 255
     ngram_min: int = 1
     ngram_max: int = 2

@@ -389,7 +389,6 @@ def build_index(
     )
     build_fn = _make_build_fn(cfg, index_dir, max_docs_per_segment, segment_prefix)
     manifest = shaped.mapInPandas(build_fn, schema=MANIFEST_SCHEMA)
-    import time as _time
 
     # Pin the segment stage at exactly n_partitions tasks. When an upstream
     # op (e.g. the dedup_latest window) already hash-partitions on the
@@ -402,12 +401,10 @@ def build_index(
     coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
     prev_coalesce = spark.conf.get(coalesce_key, "true")
     spark.conf.set(coalesce_key, "false")
-    t0 = _time.perf_counter()
     try:
         manifest_rows = manifest.collect()  # small: one row per segment
     finally:
         spark.conf.set(coalesce_key, prev_coalesce)
-    t_segments = _time.perf_counter() - t0
 
     # commit manifest (translog/commit-point analog) — append mode for resume.
     # Replay-idempotent: a re-run batch (e.g. foreachBatch failure recovery)
@@ -446,11 +443,7 @@ def build_index(
         n_docs = sum(r["docs_indexed"] for r in manifest_rows)
         total_tokens = sum(r["sum_doc_len"] for r in manifest_rows)
         n_segments = len(manifest_rows)
-    t0 = _time.perf_counter()
     _write_global_stats(spark, index_dir, cfg, n_docs, total_tokens)
-    t_stats = _time.perf_counter() - t0
-    if os.environ.get("ES_SPARK_BUILD_TIMINGS"):
-        print(f"[build] segments={t_segments:.2f}s stats={t_stats:.2f}s")
 
     return BuildResult(
         index_dir=index_dir,

@@ -65,6 +65,9 @@ _GATHER_MAX_ROWS = 200_000
 # below this corpus size the filter-context polarity optimization is pure
 # scheduling overhead (see _filter_sets)
 _FILTER_TWO_PASS_MIN_DOCS = 200_000
+# "auto" runs a query on the driver-local runner when the plan's Σ df/ttf
+# postings estimate is at most this (see _execute)
+_LOCAL_POSTINGS_LIMIT = 2_000_000
 # position keys are doc << _SHIFT | position (max 4M positions per doc)
 _SHIFT = 22
 
@@ -81,11 +84,7 @@ def lucene_idf(n_docs: int, df: int) -> float:
     return float(np.log(1.0 + (n_docs - df + 0.5) / (df + 0.5)))
 
 
-def _filter_sets(
-    reader: IndexReader,
-    filter_cond: Column,
-    two_pass_min_docs: int | None = None,
-) -> DataFrame:
+def _filter_sets(reader: IndexReader, filter_cond: Column) -> DataFrame:
     """Per-segment filter-context doc-id sets, smaller polarity chosen.
 
     The filter-bitset analog (index/cache/filter/). Returns one row per
@@ -100,9 +99,7 @@ def _filter_sets(
     """
     docs = reader.docs()
     passes = F.coalesce(filter_cond, F.lit(False))  # null == fails, like WHERE
-    if two_pass_min_docs is None:
-        two_pass_min_docs = _FILTER_TWO_PASS_MIN_DOCS
-    if reader.n_docs <= two_pass_min_docs:
+    if reader.n_docs <= _FILTER_TWO_PASS_MIN_DOCS:
         # small corpus: the two-pass polarity choice saves at most a few
         # hundred KB but costs an extra narrow job of fixed scheduling
         # latency — ship the plain allow-list in one pass instead
@@ -153,7 +150,6 @@ def search_topk(
     use_pruning: bool = True,
     extra_cols: Iterable[str] = (),
     mode: str = "auto",
-    local_postings_limit: int = 2_000_000,
     alias: str | None = None,
 ) -> DataFrame:
     """match-query top-k: analyze text → BM25 union/intersection → top-k.
@@ -174,7 +170,7 @@ def search_topk(
     (the single-node reference engine answers queries without any job
     scheduling — this path matches that latency class); "auto" picks
     "local" when the query's total matched postings (Σ df from the DFS
-    stats) fit under ``local_postings_limit`` and the index is
+    stats) fit under ``_LOCAL_POSTINGS_LIMIT`` and the index is
     driver-readable, else "spark". Both paths share the scorer and are
     asserted identical in tests.
     """
@@ -185,7 +181,7 @@ def search_topk(
     tokens = tokenize_text(query_text, reader.cfg.analyzer)
     return _match_topk(
         reader, tokens, k, operator, minimum_should_match, use_pruning,
-        filter_cond, extra_cols, mode, local_postings_limit,
+        filter_cond, extra_cols, mode,
     )
 
 
@@ -197,7 +193,6 @@ def terms_topk(
     filter_cond: Column | None = None,
     extra_cols: Iterable[str] = (),
     mode: str = "auto",
-    local_postings_limit: int = 2_000_000,
 ) -> DataFrame:
     """Disjunctive BM25 over PRE-ANALYZED dictionary terms — no analyzer
     round-trip. This is the scoring tail of every MultiTermQuery rewrite
@@ -207,12 +202,12 @@ def terms_topk(
     scores with weight = multiplicity · idf, exactly like search_topk."""
     return _match_topk(
         reader, list(terms), k, "or", minimum_should_match, True,
-        filter_cond, extra_cols, mode, local_postings_limit,
+        filter_cond, extra_cols, mode,
     )
 
 
 def _match_topk(reader, tokens, k, operator, msm, use_pruning, filter_cond,
-                extra_cols, mode, local_postings_limit) -> DataFrame:
+                extra_cols, mode) -> DataFrame:
     """One match query over analyzed ``tokens`` through the shared flow."""
     if not tokens:
         return _empty_result(reader, extra_cols)
@@ -225,7 +220,7 @@ def _match_topk(reader, tokens, k, operator, msm, use_pruning, filter_cond,
     est = sum(stats[t][0] for t in weights)
     return _execute(
         reader, [_Query(kernel, k, list(weights), est, filter_cond)],
-        extra_cols, mode, local_postings_limit,
+        extra_cols, mode,
     )
 
 
@@ -300,7 +295,6 @@ def phrase_topk(
     filter_cond: Column | None = None,
     extra_cols: Iterable[str] = (),
     mode: str = "auto",
-    local_postings_limit: int = 2_000_000,
 ) -> DataFrame:
     """match_phrase top-k over the positional index.
 
@@ -333,7 +327,7 @@ def phrase_topk(
     est = sum(stats[t][1] for t in present)  # ttf: positions volume
     return _execute(
         reader, [_Query(kernel, k, present, est, filter_cond)], extra_cols,
-        mode, local_postings_limit, _PHRASE_COLUMNS,
+        mode, _PHRASE_COLUMNS,
     )
 
 
@@ -345,7 +339,6 @@ def phrase_prefix_topk(
     filter_cond: Column | None = None,
     extra_cols: Iterable[str] = (),
     mode: str = "auto",
-    local_postings_limit: int = 2_000_000,
 ) -> DataFrame:
     """match_phrase_prefix top-k over the positional index.
 
@@ -397,7 +390,7 @@ def phrase_prefix_topk(
     )
     return _execute(
         reader, [_Query(kernel, k, present, est, filter_cond)], extra_cols,
-        mode, local_postings_limit, _PHRASE_COLUMNS,
+        mode, _PHRASE_COLUMNS,
     )
 
 
@@ -409,7 +402,6 @@ def query_string_search(
     filter_cond: Column | None = None,
     extra_cols: Iterable[str] = (),
     mode: str = "auto",
-    local_postings_limit: int = 2_000_000,
     filter_fields: frozenset[str] | set[str] = frozenset(
         {"role", "tool", "conv_id", "ts"}
     ),
@@ -486,8 +478,7 @@ def query_string_search(
     kernel = _bool_kernel(prepared, minimum_should_match)
     return _execute(
         reader, [_Query(kernel, k, needed, est, filter_cond)], extra_cols,
-        mode, local_postings_limit,
-        _PHRASE_COLUMNS if needs_pos else _MATCH_COLUMNS,
+        mode, _PHRASE_COLUMNS if needs_pos else _MATCH_COLUMNS,
     )
 
 
@@ -499,7 +490,6 @@ def common_terms_search(
     filter_cond: Column | None = None,
     extra_cols: Iterable[str] = (),
     mode: str = "auto",
-    local_postings_limit: int = 2_000_000,
 ) -> DataFrame:
     """common terms query (CommonTermsQueryParser.java, 229 LoC).
 
@@ -532,7 +522,7 @@ def common_terms_search(
     est = sum(stats[t][0] for t in needed)
     return _execute(
         reader, [_Query(_bool_kernel(prepared, 1), k, needed, est, filter_cond)],
-        extra_cols, mode, local_postings_limit,
+        extra_cols, mode,
     )
 
 
@@ -911,7 +901,6 @@ def _execute(
     queries: list[_Query],
     extra_cols: Iterable[str] = (),
     mode: str = "auto",
-    local_postings_limit: int = 0,
     columns: list[str] = _MATCH_COLUMNS,
     postings_df: DataFrame | None = None,
     query_id: bool = False,
@@ -919,7 +908,7 @@ def _execute(
     """Run a batch of queries through the one flow (module docstring).
 
     Runner rule: "local" tries the driver-local runner; "auto" tries it when
-    the plan's Σ df/ttf estimate fits under ``local_postings_limit`` and the
+    the plan's Σ df/ttf estimate fits under ``_LOCAL_POSTINGS_LIMIT`` and the
     index is driver-readable; anything else (or a local runner that cannot
     answer) scatters on Spark. ``postings_df``: a pre-built postings scan
     (already term-pruned and term-namespaced) replacing reader.postings() —
@@ -932,7 +921,7 @@ def _execute(
         return _empty_result(reader, extra_cols, query_id)
     if postings_df is None and (mode == "local" or (
         mode == "auto"
-        and plan.est <= local_postings_limit
+        and plan.est <= _LOCAL_POSTINGS_LIMIT
         and fsio.driver_readable(reader.index_dir)
     )):
         local = _local_search(reader, plan, extra_cols, query_id)

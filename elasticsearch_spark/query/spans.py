@@ -62,7 +62,7 @@ def _span_kernel(anchor_fn, terms: list[str], sum_idf: float):
 
 def _run(reader: IndexReader, anchor_fn, terms: list[str], idf_terms: list[str],
          k: int, filter_cond: Column | None, extra_cols: Iterable[str],
-         mode: str, local_postings_limit: int) -> DataFrame:
+         mode: str) -> DataFrame:
     if not reader.cfg.index_positions:
         raise ValueError("index was built with index_positions=False")
     stats = reader.query_term_stats(terms)
@@ -75,7 +75,7 @@ def _run(reader: IndexReader, anchor_fn, terms: list[str], idf_terms: list[str],
     kernel = _span_kernel(anchor_fn, terms, sum_idf)
     return _execute(
         reader, [_Query(kernel, k, terms, est, filter_cond)], extra_cols,
-        mode, local_postings_limit, _PHRASE_COLUMNS,
+        mode, _PHRASE_COLUMNS,
     )
 
 
@@ -91,7 +91,6 @@ def span_term_topk(
     filter_cond: Column | None = None,
     extra_cols: Iterable[str] = (),
     mode: str = "auto",
-    local_postings_limit: int = 2_000_000,
 ) -> DataFrame:
     """Standalone SpanTermQuery (SpanTermQueryParser.java, reg.
     IndicesQueriesModule.java:90): every occurrence of ``term`` is a
@@ -105,8 +104,7 @@ def span_term_topk(
     def anchors(keys: dict[str, np.ndarray]) -> np.ndarray:
         return keys[t]
 
-    return _run(reader, anchors, [t], [t], k, filter_cond, extra_cols, mode,
-                local_postings_limit)
+    return _run(reader, anchors, [t], [t], k, filter_cond, extra_cols, mode)
 
 
 def span_or_topk(
@@ -116,7 +114,6 @@ def span_or_topk(
     filter_cond: Column | None = None,
     extra_cols: Iterable[str] = (),
     mode: str = "auto",
-    local_postings_limit: int = 2_000_000,
     pre_analyzed: bool = False,
 ) -> DataFrame:
     """SpanOrQuery over term clauses (SpanOrQueryParser.java, reg.
@@ -144,8 +141,7 @@ def span_or_topk(
             return np.array([], dtype=np.int64)
         return np.unique(np.concatenate(parts))
 
-    return _run(reader, anchors, toks, toks, k, filter_cond, extra_cols, mode,
-                local_postings_limit)
+    return _run(reader, anchors, toks, toks, k, filter_cond, extra_cols, mode)
 
 
 def span_multi_topk(
@@ -157,7 +153,6 @@ def span_multi_topk(
     filter_cond: Column | None = None,
     extra_cols: Iterable[str] = (),
     mode: str = "auto",
-    local_postings_limit: int = 2_000_000,
 ) -> DataFrame:
     """SpanMultiTermQueryWrapper (SpanMultiTermQueryParser.java, reg.
     IndicesQueriesModule.java:102): rewrite a multi-term query against the
@@ -201,9 +196,7 @@ def span_multi_topk(
     if not exp:
         return _empty_result(reader, extra_cols)
     return span_or_topk(reader, exp, k=k, filter_cond=filter_cond,
-                        extra_cols=extra_cols, mode=mode,
-                        local_postings_limit=local_postings_limit,
-                        pre_analyzed=True)
+                        extra_cols=extra_cols, mode=mode, pre_analyzed=True)
 
 
 def span_first_topk(
@@ -214,7 +207,6 @@ def span_first_topk(
     filter_cond: Column | None = None,
     extra_cols: Iterable[str] = (),
     mode: str = "auto",
-    local_postings_limit: int = 2_000_000,
 ) -> DataFrame:
     """SpanFirstQuery: term occurrences within the first ``end`` positions."""
     t = _analyze_one(reader, term)
@@ -225,8 +217,7 @@ def span_first_topk(
         ks = keys[t]
         return ks[(ks & ((1 << SHIFT) - 1)) < end]
 
-    return _run(reader, anchors, [t], [t], k, filter_cond, extra_cols, mode,
-                local_postings_limit)
+    return _run(reader, anchors, [t], [t], k, filter_cond, extra_cols, mode)
 
 
 def span_near_topk(
@@ -238,7 +229,6 @@ def span_near_topk(
     filter_cond: Column | None = None,
     extra_cols: Iterable[str] = (),
     mode: str = "auto",
-    local_postings_limit: int = 2_000_000,
 ) -> DataFrame:
     """SpanNearQuery over term clauses (greedy ordered chain / unordered
     pair). Unordered supports exactly 2 clauses."""
@@ -251,8 +241,7 @@ def span_near_topk(
     def anchors(keys: dict[str, np.ndarray]) -> np.ndarray:
         return _near_chain([keys[t] for t in toks], slop, in_order)
 
-    return _run(reader, anchors, toks, toks, k, filter_cond, extra_cols, mode,
-                local_postings_limit)
+    return _run(reader, anchors, toks, toks, k, filter_cond, extra_cols, mode)
 
 
 def _near_chain(keys_seq: list[np.ndarray], slop: int,
@@ -374,7 +363,7 @@ def field_masking_span_near_topk(
     kernel = _span_kernel(near, needed, sum_idf)
     return _execute(
         reader, [_Query(kernel, k, needed, 0, filter_cond)], extra_cols,
-        "spark", 0, _PHRASE_COLUMNS, postings_df=postings_df,
+        "spark", _PHRASE_COLUMNS, postings_df=postings_df,
     )
 
 
@@ -388,7 +377,6 @@ def span_not_topk(
     filter_cond: Column | None = None,
     extra_cols: Iterable[str] = (),
     mode: str = "auto",
-    local_postings_limit: int = 2_000_000,
 ) -> DataFrame:
     """SpanNotQuery: include spans with no exclude span in [p-pre, p+post]."""
     inc = _analyze_one(reader, include)
@@ -408,4 +396,4 @@ def span_not_topk(
 
     terms = [inc, exc] if exc else [inc]
     return _run(reader, anchors, terms, [inc], k, filter_cond, extra_cols,
-                mode, local_postings_limit)
+                mode)

@@ -63,7 +63,9 @@ def incremental_index(
         if n == 0:
             return
         spark = batch_df.sparkSession
-        build_index(
+        # with a segment prefix the build reads the manifest back and
+        # reports the active (committed, not superseded) segment count
+        built = build_index(
             spark,
             batch_df,
             index_dir,
@@ -71,17 +73,7 @@ def incremental_index(
             segment_prefix=f"b{batch_id:06d}-",
         )
         # bound segment growth like TieredMergePolicy (segments_per_tier=10)
-        man = spark.read.parquet(os.path.join(index_dir, "manifest"))
-        superseded = {
-            r["segment_id"]
-            for r in man.where(F.col("status") == "superseded")
-            .select("segment_id").distinct().collect()
-        }
-        active = (
-            man.where(F.col("status") == "committed")
-            .select("segment_id").distinct().count()
-        ) - len(superseded)
-        if active > merge_threshold:
+        if built.n_segments > merge_threshold:
             tiered_merge(spark, index_dir)
         if on_batch is not None:
             on_batch(batch_id, n)

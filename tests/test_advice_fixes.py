@@ -142,14 +142,13 @@ def test_build_replay_is_idempotent(spark, tmp_root):
 
 
 @pytest.mark.parametrize("mode", ["local", "spark"])
-def test_low_selectivity_filter_exact_and_small(slop_setup, mode):
+def test_low_selectivity_filter_exact_and_small(slop_setup, mode, monkeypatch):
     """A ~50%-selectivity filter must stay exact AND ship only the smaller
     polarity per segment (never every passing id) — the deny-list path of
     _filter_sets."""
     from pyspark.sql import functions as F
 
-    from elasticsearch_spark.query import search_topk
-    from elasticsearch_spark.query.executor import _filter_sets
+    from elasticsearch_spark.query import executor, search_topk
 
     reader, oracle = slop_setup
     cond = F.col("role") == "user"
@@ -171,33 +170,37 @@ def test_low_selectivity_filter_exact_and_small(slop_setup, mode):
     }
     # force the two-pass polarity path (a 6-doc corpus takes the
     # small-corpus single-pass shortcut by default)
-    for r in _filter_sets(reader, cond, two_pass_min_docs=0).collect():
+    monkeypatch.setattr(executor, "_FILTER_TWO_PASS_MIN_DOCS", 0)
+    for r in executor._filter_sets(reader, cond).collect():
         assert len(r["f_ids"]) <= seg_sizes[r["segment_id"]] // 2 + 1, (
             r["segment_id"], r["f_mode"], len(r["f_ids"]),
         )
 
 
-def test_filter_sets_polarity_and_exclusion(slop_setup):
+def test_filter_sets_polarity_and_exclusion(slop_setup, monkeypatch):
     """deny mode for an always-true filter (empty list), allow mode for a
     highly selective one, and total exclusion when nothing passes."""
     from pyspark.sql import functions as F
 
-    from elasticsearch_spark.query import search_topk
-    from elasticsearch_spark.query.executor import _filter_sets
+    from elasticsearch_spark.query import executor, search_topk
 
     reader, _ = slop_setup
-    rows = _filter_sets(reader, F.lit(True), two_pass_min_docs=0).collect()
+    # the small-corpus shortcut must produce the same allow semantics
+    small = executor._filter_sets(reader, F.col("conv_id") == "c0").collect()
+    assert all(r["f_mode"] == "allow" for r in small)
+    assert sum(len(r["f_ids"]) for r in small) == 1
+
+    # force the two-pass polarity path
+    monkeypatch.setattr(executor, "_FILTER_TWO_PASS_MIN_DOCS", 0)
+    rows = executor._filter_sets(reader, F.lit(True)).collect()
     assert rows and all(r["f_mode"] == "deny" and r["f_ids"] == [] for r in rows)
 
-    rows = _filter_sets(reader, F.col("conv_id") == "c0", two_pass_min_docs=0).collect()
+    rows = executor._filter_sets(reader, F.col("conv_id") == "c0").collect()
     assert all(r["f_mode"] == "allow" for r in rows)
     assert sum(len(r["f_ids"]) for r in rows) == 1
 
-    assert _filter_sets(reader, F.lit(False), two_pass_min_docs=0).count() == 0
-    # the small-corpus shortcut must produce the same allow semantics
-    small = _filter_sets(reader, F.col("conv_id") == "c0").collect()
-    assert all(r["f_mode"] == "allow" for r in small)
-    assert sum(len(r["f_ids"]) for r in small) == 1
+    assert executor._filter_sets(reader, F.lit(False)).count() == 0
+    monkeypatch.undo()
     # nothing passes → zero hits, not an error
     assert search_topk(
         reader, "error timeout", k=10, filter_cond=F.lit(False)

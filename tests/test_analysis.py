@@ -259,11 +259,15 @@ def test_path_hierarchy_and_filters_sql_python_parity(spark):
         tokenize_text,
     )
 
-    texts = ["/a/b/c", "x/y", "", "no-delims", "dot.sep/mix"]
+    # whitespace padding beyond 0x20 (tab, newline, NBSP, unit separator):
+    # the trim filter strips every str.isspace() char on both paths
+    texts = ["/a/b/c", "x/y", "", "no-delims", "dot.sep/mix", "\tfoo\n",
+             "\xa0bar baz\x1f", " \r\n", "it's/o'neil"]
     df = spark.createDataFrame([(t,) for t in texts], "text string")
     cfgs = [
         AnalyzerConfig(kind="path_hierarchy"),
         AnalyzerConfig(kind="path_hierarchy", path_delimiter="."),
+        AnalyzerConfig(kind="path_hierarchy", path_delimiter="'"),
         AnalyzerConfig(kind="simple", token_filters=("reverse",)),
         AnalyzerConfig(kind="keyword", token_filters=("trim",)),
         AnalyzerConfig(kind="simple", token_filters=("trim", "reverse")),

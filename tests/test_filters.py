@@ -87,6 +87,14 @@ CHAIN_CONFIGS = [
         kind="standard", stopwords=("the",), token_filters=("porter_stem",),
         shingle_size=2,
     ),
+    # every kind the vocabulary-level fast path does not take, plus its
+    # long-token fallback and max_token_length=0 (no chunking)
+    AnalyzerConfig(kind="letter"),
+    AnalyzerConfig(kind="ngram", ngram_min=2, ngram_max=3),
+    AnalyzerConfig(kind="edge_ngram", ngram_max=4),
+    AnalyzerConfig(kind="pattern", pattern=r"[\s,]+", lowercase=False),
+    AnalyzerConfig(max_token_length=5),
+    AnalyzerConfig(max_token_length=0),
 ]
 
 TEXTS = [
@@ -138,11 +146,23 @@ def test_sql_expr_matches_python(spark, cfg):
     assert got == want
 
 
-def test_indexed_stemmed_query_vs_pyref(spark, tmp_root):
-    """Build an index with a stemmed analyzer; morphological variants must
-    hit via their stem, ranks identical to PyRef (which shares
-    tokenize_text, so this pins the builder's vocabulary-level filter path
-    against the per-token path end-to-end)."""
+INDEXED_ANALYZERS = {
+    "porter_stem": AnalyzerConfig(kind="standard", token_filters=("porter_stem",)),
+    "letter": AnalyzerConfig(kind="letter"),
+    "ngram": AnalyzerConfig(kind="ngram"),
+    "edge_ngram": AnalyzerConfig(kind="edge_ngram"),
+    "pattern": AnalyzerConfig(kind="pattern"),
+    "max_token_length_0": AnalyzerConfig(max_token_length=0),
+}
+
+
+@pytest.mark.parametrize("name", list(INDEXED_ANALYZERS))
+def test_indexed_stemmed_query_vs_pyref(spark, tmp_root, name):
+    """Build an index with each analyzer; ranks and scores identical to
+    PyRef (which shares tokenize_text, so this pins the builder's analyze
+    path against the per-token path end-to-end). With the stemmer,
+    morphological variants must hit via their stem; with
+    max_token_length=0 a 300-char token is indexed and queried whole."""
     from elasticsearch_spark.index import IndexReader, build_index
     from elasticsearch_spark.oracle import PyRefEngine
     from elasticsearch_spark.query import search_topk
@@ -153,6 +173,7 @@ def test_indexed_stemmed_query_vs_pyref(spark, tmp_root):
         "plastered walls falling badly",
         "unrelated content entirely",
         "adjustment replacement dependencies",
+        "overlong " + "x" * 300,
     ]
     corpus = pd.DataFrame(
         {
@@ -161,18 +182,17 @@ def test_indexed_stemmed_query_vs_pyref(spark, tmp_root):
             "text": texts,
         }
     )
-    cfg = IndexConfig(
-        n_partitions=2,
-        analyzer=AnalyzerConfig(kind="standard", token_filters=("porter_stem",)),
-    )
-    idx = f"{tmp_root}/idx_stemmed"
+    cfg = IndexConfig(n_partitions=2, analyzer=INDEXED_ANALYZERS[name])
+    idx = f"{tmp_root}/idx_analyzed_{name}"
     build_index(spark, spark.createDataFrame(corpus), idx, cfg)
     reader = IndexReader(spark, idx)
     oracle = PyRefEngine(cfg.analyzer, cfg.bm25)
     for r in corpus.itertuples():
         oracle.index((r.conv_id, r.turn_idx), r.text)
 
-    for q in ["relational generalizations", "condition", "replacements falls"]:
+    queries = ["relational generalizations", "condition", "replacements falls",
+               "x" * 300]
+    for q in queries:
         got = [
             ((r["conv_id"], r["turn_idx"]), r["score"])
             for r in search_topk(reader, q, k=10).collect()
@@ -181,6 +201,11 @@ def test_indexed_stemmed_query_vs_pyref(spark, tmp_root):
         assert [g[0] for g in got] == [w[0] for w in want], q
         for (_, a), (_, b) in zip(got, want):
             assert abs(a - b) <= 1e-9 * max(1.0, abs(b))
+    if name == "max_token_length_0":
+        hits = search_topk(reader, "x" * 300, k=10).collect()
+        assert [r["conv_id"] for r in hits] == ["c5"]
+    if name != "porter_stem":
+        return
     # stem bridging: query 'relation' must reach doc c0 ('relational')
     keys = {r["conv_id"] for r in search_topk(reader, "relation", k=10).collect()}
     assert {"c0", "c1"} <= keys
