@@ -110,6 +110,19 @@ class AnalyzerConfig:
     # exact (non-factorized) path.
     shingle_size: int = 0
 
+    def __post_init__(self) -> None:
+        # out-of-range values make the chain drop every token or emit ''
+        if self.max_token_length < 0:
+            raise ValueError(
+                f"max_token_length must be >= 0 (0 = no limit), got {self.max_token_length}"
+            )
+        if self.ngram_min < 1:
+            raise ValueError(f"ngram_min must be >= 1, got {self.ngram_min}")
+        if self.ngram_min > self.ngram_max:
+            raise ValueError(
+                f"ngram_min ({self.ngram_min}) must be <= ngram_max ({self.ngram_max})"
+            )
+
 
 @dataclass(frozen=True)
 class IndexConfig:

@@ -15,14 +15,20 @@ is exactly as cheap as a numeric range agg — no Python in the scan.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+_OCTET = re.compile(r"[0-9]{1,3}")
+
 
 def ip_to_long(ip: str) -> int:
-    """Driver-side IpFieldMapper.ipToLong: dotted quad → unsigned long."""
+    """Driver-side IpFieldMapper.ipToLong: dotted quad → unsigned long.
+    Each octet is 1-3 ASCII digits: ``int()`` alone would also take signs,
+    surrounding whitespace, ``_`` separators and non-ASCII digits."""
     parts = ip.split(".")
-    if len(parts) != 4:
+    if len(parts) != 4 or not all(_OCTET.fullmatch(p) for p in parts):
         raise ValueError(f"not an IPv4 address: {ip!r}")
     v = 0
     for p in parts:

@@ -9,8 +9,8 @@ directory (name → SQL predicate string over the doc-table columns), the
 metadata analog of the cluster-state alias map. Predicates are stored as
 SQL source (inspectable, engine-versionable) and compiled with ``F.expr``
 at query time, entering the executor as ordinary filter context — so an
-alias query inherits the same per-segment smaller-polarity id-set plan as
-an inline filter (query/executor.py _filter_sets), no extra scan or job.
+alias query inherits the same per-segment id-set plan as an inline filter
+(query/executor.py _local_filter_sets / _filter_sets), no extra scan or job.
 
 Usage:
     put_alias(idx_dir, "en_docs", "lang = 'en'")

@@ -31,20 +31,29 @@ QUERY_THEN_FETCH with DFS statistics (SURVEY.md §3.1):
 Scale notes: postings are pruned by ``term IN (...)`` predicate pushdown
 (row-group stats; postings files are term-sorted), per-segment norm arrays
 travel as one packed row each, and only <= k(+ties) rows per (segment,
-query) reach the gather. Filters are evaluated by Catalyst on the doc table
-(columnar, predicate pushdown) and enter the kernels as per-segment id sets
-of the SMALLER filter polarity (allow- or deny-list, see _filter_sets) —
-never more than half a segment's ids ship.
+query) reach the gather. Filters enter the kernels as per-segment doc-id
+sets. The Spark runner evaluates them by Catalyst on the doc table
+(columnar, predicate pushdown) and ships the SMALLER filter polarity
+(allow- or deny-list, see _filter_sets) — never more than half a segment's
+ids. The local runner optimizes all of a plan's filters in one Catalyst
+pass (no job) and evaluates each with pyarrow over one read of the doc
+table (_local_filter_sets); a filter holding any node outside a closed set
+(and/or/not, comparisons, IN, IS [NOT] NULL, columns and non-null literals
+of string, integral, boolean, date and timestamp types) falls back, alone,
+to the _filter_sets job.
 """
 
 from __future__ import annotations
 
 import functools
+import json
 import operator as _op
 from typing import Callable, Iterable, NamedTuple, Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -135,6 +144,147 @@ def _filter_sets(reader: IndexReader, filter_cond: Column) -> DataFrame:
         "f_mode",
         F.coalesce("f_ids", F.array().cast("array<int>")).alias("f_ids"),
     )
+
+
+# Catalyst nodes the local runner evaluates with pyarrow (see _arrow_filter).
+# Arrow's & and | are Kleene, like Spark's And/Or.
+_ARROW_OPS = {
+    "And": _op.and_, "Or": _op.or_, "Not": _op.inv,
+    "EqualTo": _op.eq, "LessThan": _op.lt, "LessThanOrEqual": _op.le,
+    "GreaterThan": _op.gt, "GreaterThanOrEqual": _op.ge,
+    "IsNull": lambda e: e.is_null(), "IsNotNull": lambda e: e.is_valid(),
+}
+# Catalyst type -> pyarrow type of the literals and columns _arrow_filter
+# accepts. No float/double: Spark orders NaN above every value and has
+# NaN = NaN, Arrow does not. No collated strings: Arrow compares bytes.
+_ARROW_TYPES = {
+    "string": pa.string(), "byte": pa.int8(), "short": pa.int16(),
+    "integer": pa.int32(), "long": pa.int64(), "boolean": pa.bool_(),
+    "date": pa.date32(), "timestamp": pa.timestamp("us", tz="UTC"),
+    "timestamp_ntz": pa.timestamp("us"),
+}
+
+
+class _Untranslatable(Exception):
+    """A filter node outside _ARROW_OPS / _ARROW_TYPES."""
+
+
+def _arrow_filter(jexpr, names: list[str]):
+    """One optimized Catalyst predicate as (pyarrow expression, doc-table
+    columns it reads), or None when any node is outside the translated set
+    (a leftover Cast, a UDF, rlike, a float comparison, a collation, a null
+    literal, ...). ``names``: the doc table's columns.
+
+    The node list is the expression's pre-order ``toJSON()`` (one py4j call);
+    only date/timestamp literals and InSet values, whose JSON is a formatted
+    string or absent, are read back from the JVM node at the same pre-order
+    number (``TreeNode.apply``)."""
+    nodes = json.loads(jexpr.toJSON())
+    if nodes[0].get("dataType", "boolean") != "boolean":
+        return None  # not a predicate: _filter_sets raises Spark's error
+    cols: dict[str, None] = {}
+
+    def scalar(dtype, value):
+        if dtype not in _ARROW_TYPES or value is None:
+            raise _Untranslatable
+        if dtype == "boolean":
+            value = value == "true"
+        elif dtype != "string":
+            value = int(value)
+        return pa.scalar(value, _ARROW_TYPES[dtype])
+
+    def literal(i):
+        node = nodes[i]
+        value = node["value"]
+        if node["dataType"] in ("date", "timestamp"):
+            value = jexpr.apply(i).value()  # days / micros since the epoch
+        return scalar(node["dataType"], value)
+
+    def build(i):
+        node = nodes[i]
+        kind = node["class"].rsplit(".", 1)[-1]
+        kids, starts, j = [], [], i + 1
+        for _ in range(node["num-children"]):
+            starts.append(j)
+            kid, j = build(j)
+            kids.append(kid)
+        if kind in _ARROW_OPS:
+            return _ARROW_OPS[kind](*kids), j
+        if kind == "AttributeReference":
+            name = node["name"]
+            if name not in names:  # resolved case-insensitively
+                name = {n.lower(): n for n in names}.get(name.lower())
+            if name is None or node["dataType"] not in _ARROW_TYPES:
+                raise _Untranslatable
+            cols[name] = None
+            return pc.field(name), j
+        if kind == "Literal":
+            return pc.scalar(literal(i)), j
+        if kind == "In" and all(
+            nodes[s]["class"].endswith(".Literal") for s in starts[1:]
+        ):
+            values = [literal(s) for s in starts[1:]]
+        elif kind == "InSet" and nodes[i + 1]["class"].endswith(".AttributeReference"):
+            hset = jexpr.apply(i).hset()
+            raw = hset.mkString("\0").split("\0")
+            if len(raw) != hset.size() or jexpr.apply(i).hasNull():
+                raise _Untranslatable
+            values = [scalar(nodes[i + 1]["dataType"], v) for v in raw]
+        else:
+            raise _Untranslatable
+        # SQL IN is null on a null input; Arrow's is_in is false there
+        x = kids[0]
+        return pc.if_else(
+            x.is_null(), pa.scalar(None, pa.bool_()), x.isin(pa.array(values))
+        ), j
+
+    try:
+        return build(0)[0], list(cols)
+    except _Untranslatable:
+        return None
+
+
+def _local_filter_sets(reader: IndexReader, filters: list[Column],
+                       segments) -> list[dict]:
+    """The local runner's filter sets: per filter, {segment_id: ("allow",
+    sorted local ids)} over ``segments``, the shape _filter_sets collects.
+
+    ONE Catalyst optimization of all filters as a projection of the doc
+    table — no job — resolves column names, folds and unwraps casts and
+    applies the session time zone; every predicate _arrow_filter translates
+    is then evaluated by pyarrow over ONE read of the doc table (segment_id,
+    local_doc_id and the referenced columns, pruned to ``segments``). Null
+    semantics agree: WHERE and Arrow's filter both drop null, and both
+    and/or are Kleene. A filter with any untranslated node falls back to
+    _filter_sets alone (one Spark job)."""
+    if not filters:
+        return []
+    import pyarrow.dataset as ds
+
+    dset = _local_ds(reader, "docs")
+    proj = (
+        reader.docs()
+        .select(*[fc.alias(f"__f{i}") for i, fc in enumerate(filters)])
+        ._jdf.queryExecution().optimizedPlan().projectList()
+    )
+    arrow = [_arrow_filter(proj.apply(i).child(), dset.schema.names)
+             for i in range(len(filters))]
+    if any(a is not None for a in arrow):
+        read = [c for a in arrow if a is not None for c in a[1]]
+        tbl = dset.to_table(
+            filter=ds.field("segment_id").isin(list(segments)),
+            columns=list(dict.fromkeys(["segment_id", "local_doc_id", *read])),
+        )
+    out = []
+    for fc, a in zip(filters, arrow):
+        if a is None:
+            out.append({r["segment_id"]: (r["f_mode"], r["f_ids"])
+                        for r in _filter_sets(reader, fc).collect()})
+            continue
+        hit = tbl.filter(a[0]).select(["segment_id", "local_doc_id"]).to_pandas()
+        out.append({str(seg): ("allow", np.sort(ids.to_numpy()))
+                    for seg, ids in hit.groupby("segment_id")["local_doc_id"]})
+    return out
 
 
 # -- entry points -------------------------------------------------------------
@@ -964,10 +1114,11 @@ def _segment_topk(entries: list, view: _SegmentView | None) -> pd.DataFrame:
 
 def _local_search(reader, plan: _Plan, extra_cols, query_id=False):
     """Driver-local runner: the per-segment function over pyarrow-pruned
-    reads — the single-node engine answers without any job scheduling
-    (filtered queries still run one narrow filter-set job). Returns None
-    when the index cannot be read driver-side (caller falls back to Spark).
-    """
+    reads — the single-node engine answers without any job scheduling.
+    Filter sets come from pyarrow too (_local_filter_sets); only a filter
+    with a node outside its translated set runs one narrow filter-set job.
+    Returns None when the index cannot be read driver-side (caller falls
+    back to Spark)."""
     import pyarrow.dataset as ds
 
     try:
@@ -984,14 +1135,10 @@ def _local_search(reader, plan: _Plan, extra_cols, query_id=False):
             norms = _local_ds(reader, "norms").to_table(
                 filter=ds.field("segment_id").isin(post["segment_id"].unique())
             ).to_pandas()
+        fsets = _local_filter_sets(reader, plan.filters, post["segment_id"].unique())
     except OSError:
         return None
     norms = norms.set_index(norms["segment_id"].astype(str))
-    fsets = [
-        {r["segment_id"]: (r["f_mode"], r["f_ids"])
-         for r in _filter_sets(reader, fc).collect()}
-        for fc in plan.filters
-    ]
     from elasticsearch_spark.index.deletes import deletes_map
 
     dead = deletes_map(reader)

@@ -1,4 +1,4 @@
-"""Multi-search: a batch of match queries in ONE distributed job.
+"""Multi-search: a batch of match queries as ONE plan.
 
 Reference: action/search/MultiSearchRequest.java + TransportMultiSearchAction
 — the _msearch API ships N search bodies in one round trip; each executes
@@ -7,7 +7,10 @@ with its own operator/minimum_should_match/filter and returns its own top-k.
 This module only analyzes the batch: every body becomes one match-kernel
 entry of a single plan, and the batch runs the same plan → per-segment
 kernel → gather → fetch → materialize flow as a single search
-(query/executor.py). Batching pays structurally, not just in RPC:
+(query/executor.py), on the same runner rule: by default ("auto") a batch
+whose summed postings estimate fits the local-runner limit is answered on
+the driver with no Spark job, else (and with mode="spark") in ONE
+distributed job. Batching pays structurally, not just in RPC:
 
 - ONE postings scan, term-pruned to the UNION of all queries' terms
   (`PushedFilters: In(term, ...)`): a hot term shared by many queries is
@@ -15,9 +18,11 @@ kernel → gather → fetch → materialize flow as a single search
 - the segment view memoises each term's BM25-normalized tf array (`tfn`
   depends only on tf/doc-len, not on the query), so adding a query costs
   one scatter-add per term, not a decode.
-- filter contexts are deduplicated: distinct filter predicates each get
-  one `_filter_sets` pass, tagged with a filter_id and unioned into the
-  aux side of the cogroup; queries reference filters by id.
+- filter contexts are deduplicated: queries reference distinct filter
+  predicates by filter_id; the local runner builds all their id sets from
+  one Catalyst optimization and one doc-table read, the Spark runner runs
+  one `_filter_sets` pass per filter, unioned into the aux side of the
+  cogroup.
 - one gather with a per-query tie-aware cut, one batched fetch phase.
 
 At cluster scale this turns "54 queries x (scheduler constant + scan)"
@@ -47,8 +52,9 @@ def msearch_topk(
     queries: Iterable[Mapping[str, Any]],
     k: int = 10,
     extra_cols: Iterable[str] = (),
+    mode: str = "auto",
 ) -> DataFrame:
-    """Execute a batch of match queries as one job.
+    """Execute a batch of match queries as one plan.
 
     Each query mapping supports: ``query_text`` (required), ``operator``
     ("or"/"and"), ``minimum_should_match``, ``filter_cond`` (a Column or
@@ -60,9 +66,14 @@ def msearch_topk(
     the 0-based position in ``queries``; per query <= k rows ordered
     (score DESC, keys ASC). Queries with no matching term produce no
     rows (the reference returns an empty hits block).
+
+    ``mode``: the runner rule of every top-k entry point (executor
+    search_topk): "auto" answers the batch on the driver when its summed
+    postings estimate fits the local-runner limit, "spark" always runs the
+    one distributed job.
     """
     return _execute(
-        reader, _msearch_queries(reader, queries, k), extra_cols, mode="spark",
+        reader, _msearch_queries(reader, queries, k), extra_cols, mode=mode,
         query_id=True,
     )
 
@@ -94,6 +105,6 @@ def _msearch_queries(reader: IndexReader, queries, k: int) -> list[_Query]:
             fc = alias_filter(reader, q["alias"], fc)
         out.append(_Query(
             _match_kernel(weights, need), int(q.get("k", k)), list(weights),
-            filter_cond=fc, query_id=qi,
+            est=sum(stats[t][0] for t in weights), filter_cond=fc, query_id=qi,
         ))
     return out

@@ -209,7 +209,8 @@ def main() -> None:
     # 11. msearch distributed-merge escape hatch: past the gather bound the
     #     per-query top-k cut runs in Spark (rank window per query_id +
     #     broadcast k-map) BEFORE collect — the driver never sees
-    #     segments x queries x k rows. Force the hatch (budget 0) and spy
+    #     segments x queries x k rows. Force the hatch (budget 0) on the
+    #     Spark runner ("auto" answers this batch on the driver) and spy
     #     on the ACTUAL msearch candidate collect, as check 15 does.
     # patch the CONCRETE DataFrame class — in pyspark 4 the classic
     # session's instances override collect(), so patching the base
@@ -230,7 +231,7 @@ def main() -> None:
     _exec._GATHER_MAX_ROWS = 0
     _DF.collect = _spy_collect
     try:
-        msearch_topk(reader, ms_queries, k=10)
+        msearch_topk(reader, ms_queries, k=10, mode="spark")
     finally:
         _DF.collect = _orig_collect
         _exec._GATHER_MAX_ROWS = _old_budget

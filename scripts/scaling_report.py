@@ -114,10 +114,10 @@ def main() -> None:
         for q in qset
     ]
     t0 = time.perf_counter()
-    msearch_topk(reader, specs).count()
+    msearch_topk(reader, specs, mode="spark").count()
     ms1 = time.perf_counter() - t0
     t0 = time.perf_counter()
-    msearch_topk(reader, specs).count()
+    msearch_topk(reader, specs, mode="spark").count()
     ms2 = time.perf_counter() - t0
 
     result = {

@@ -41,6 +41,22 @@ def test_max_token_length_splits():
     assert [len(t) for t in toks] == [255, 255, 90]
 
 
+@pytest.mark.parametrize("kw", [
+    {"max_token_length": -1},
+    {"kind": "edge_ngram", "ngram_min": 0},
+    {"kind": "ngram", "ngram_min": 3, "ngram_max": 1},
+])
+def test_analyzer_config_rejects_out_of_range(kw):
+    with pytest.raises(ValueError):
+        AnalyzerConfig(**kw)
+
+
+def test_analyzer_config_accepts_defaults_and_no_limit():
+    assert tokenize_text("hello world", AnalyzerConfig()) == ["hello", "world"]
+    assert tokenize_text("x" * 300, AnalyzerConfig(max_token_length=0)) == ["x" * 300]
+    assert tokenize_text("ab", AnalyzerConfig(kind="ngram", ngram_min=2, ngram_max=2)) == ["ab"]
+
+
 def test_series_matches_scalar():
     texts = [t for t, _ in GOLDEN] + [None]
     got = analyze_series(pd.Series(texts)).tolist()

@@ -55,9 +55,10 @@ def _specs():
     ]
 
 
-def test_msearch_matches_sequential(reader):
+@pytest.mark.parametrize("mode", ["auto", "spark"])
+def test_msearch_matches_sequential(reader, mode):
     specs = _specs()
-    batched = msearch_topk(reader, specs).collect()
+    batched = msearch_topk(reader, specs, mode=mode).collect()
     by_q = {}
     for r in batched:
         by_q.setdefault(r["query_id"], []).append(r)
@@ -115,8 +116,8 @@ def test_msearch_bounded_gather_identical(reader, monkeypatch):
     import elasticsearch_spark.query.executor as ex
 
     specs = _specs()[:8]
-    free = msearch_topk(reader, specs).collect()
+    free = msearch_topk(reader, specs, mode="spark").collect()
     monkeypatch.setattr(ex, "_GATHER_MAX_ROWS", 1)  # force the hatch
-    bounded = msearch_topk(reader, specs).collect()
+    bounded = msearch_topk(reader, specs, mode="spark").collect()
     key = lambda r: (r["query_id"], -r["score"], r["conv_id"], r["turn_idx"])  # noqa: E731
     assert sorted(free, key=key) == sorted(bounded, key=key)

@@ -280,6 +280,17 @@ def test_ip_long_roundtrip_and_cidr():
         ip_to_long("10.0.8.256")
 
 
+@pytest.mark.parametrize("ip", [
+    " 1.2.3.4", "+1.2.3.4", "1.2.3.4\n", "1.2.3.\u0664", "1_0.0.0.1", "0001.2.3.4",
+])
+def test_ip_to_long_rejects_malformed_octets(ip):
+    """IpFieldMapper.ipToLong: each octet is 1-3 ASCII digits."""
+    from elasticsearch_spark.functions.ip import ip_to_long
+
+    with pytest.raises(ValueError):
+        ip_to_long(ip)
+
+
 def test_ip_range_agg(spark):
     from elasticsearch_spark.ops.aggs import ip_range_agg
 
