@@ -79,8 +79,8 @@ if __name__ == "__main__":
 
 
 def _burn(workers: int = 8, iters: int = 5) -> float:
-    """Aggregate host throughput probe (same numpy-sort kernel as the
-    scaling brackets in scripts/calm_pair.py); it/s across workers."""
+    """Aggregate host throughput probe (a numpy-sort kernel in ``workers``
+    processes); it/s across workers."""
     import subprocess
 
     out = subprocess.run(

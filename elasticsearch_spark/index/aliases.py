@@ -25,13 +25,12 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from elasticsearch_spark.index import fsio
-from elasticsearch_spark.index.reader import fsio_join
 
 _ALIASES_FILE = "aliases.json"
 
 
 def _read_aliases(index_dir: str) -> dict[str, str]:
-    path = fsio_join(index_dir, _ALIASES_FILE)
+    path = fsio.join(index_dir, _ALIASES_FILE)
     if not fsio.exists(path):
         return {}
     return json.loads(fsio.read_bytes(path).decode("utf-8"))
@@ -47,7 +46,7 @@ def put_alias(index_dir: str, name: str, predicate_sql: str) -> None:
     # through the alias with Spark's parser error naming the expression
     aliases[name] = predicate_sql
     fsio.write_bytes(
-        fsio_join(index_dir, _ALIASES_FILE),
+        fsio.join(index_dir, _ALIASES_FILE),
         json.dumps(aliases, indent=1, sort_keys=True).encode("utf-8"),
     )
 
@@ -56,7 +55,7 @@ def delete_alias(index_dir: str, name: str) -> None:
     aliases = _read_aliases(index_dir)
     aliases.pop(name, None)
     fsio.write_bytes(
-        fsio_join(index_dir, _ALIASES_FILE),
+        fsio.join(index_dir, _ALIASES_FILE),
         json.dumps(aliases, indent=1, sort_keys=True).encode("utf-8"),
     )
 

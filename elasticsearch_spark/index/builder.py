@@ -22,8 +22,9 @@ Here:
     flush. Deterministic file names + contents ⇒ task retries and
     checkpoint-resume are idempotent and byte-identical.
   → the returned manifest rows (per-partition lineage + metrics: docs,
-    terms, postings bytes, checksum) are committed by the driver — the
-    translog/commit-point analog. Resume skips committed pids.
+    terms, postings bytes, checksum) are committed by the driver through
+    index/manifest.py — the translog/commit-point analog. Resume skips
+    committed pids.
 
 Scale notes (100 TB design): the only full-data shuffle is the routing
 repartition. Segment construction is memory-bounded via
@@ -51,21 +52,10 @@ from pyspark.sql import functions as F
 from elasticsearch_spark.analysis.analyzers import analyze_codes
 from elasticsearch_spark.config import IndexConfig
 from elasticsearch_spark.functions.smallfloat import effective_doc_length
-from elasticsearch_spark.index import fsio
+from elasticsearch_spark.index import fsio, manifest
 from elasticsearch_spark.index.codec import delta_encode, pack_u32
 
 PID_COL = "__pid"
-
-
-def _join(base: str, *parts: str) -> str:
-    """URI-safe path join (os.path.join would mangle scheme://)."""
-    return "/".join([base.rstrip("/"), *parts])
-
-MANIFEST_SCHEMA = (
-    "partition_id int, segment_id string, status string, docs_indexed long, "
-    "n_terms long, postings_bytes long, sum_doc_len long, merge_fan_in int, "
-    "checksum string"
-)
 
 
 @dataclass
@@ -191,7 +181,7 @@ def _flush_segment(
             h.update(packed_d)
             h.update(packed_t)
 
-    seg_dir = lambda sub: "/".join([index_dir.rstrip("/"), sub, f"segment_id={seg}", "data.parquet"])  # noqa: E731
+    seg_dir = lambda sub: fsio.join(index_dir, sub, f"segment_id={seg}", "data.parquet")  # noqa: E731
     postings_tbl = pa.table(
         {
             "term": pa.array(p_term, pa.string()),
@@ -301,14 +291,7 @@ def _make_build_fn(cfg: IndexConfig, index_dir: str, max_docs_per_segment: int,
                 if buf_docs >= max_docs_per_segment:
                     flush()
         flush()
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "partition_id", "segment_id", "status", "docs_indexed",
-                "n_terms", "postings_bytes", "sum_doc_len", "merge_fan_in",
-                "checksum",
-            ],
-        )
+        yield pd.DataFrame(rows, columns=manifest.SCHEMA.names)
 
     return build_fn
 
@@ -327,18 +310,6 @@ def dedup_latest(df: DataFrame, cfg: IndexConfig) -> DataFrame:
         .where(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-def committed_pids(spark: SparkSession, index_dir: str) -> set[int]:
-    mpath = _join(index_dir, "manifest")
-    if not fsio.exists(mpath):
-        return set()
-    man = spark.read.parquet(mpath)
-    return {
-        r["partition_id"]
-        for r in man.where(F.col("status") == "committed")
-        .select("partition_id").distinct().collect()
-    }
 
 
 def build_index(
@@ -376,7 +347,8 @@ def build_index(
         ).cast("int"),
     )
 
-    skip = committed_pids(spark, index_dir) if resume else set()
+    committed = manifest.committed(manifest.read(index_dir))
+    skip = set(committed["partition_id"]) if resume else set()
     if skip:
         df = df.where(~F.col(PID_COL).isin(sorted(skip)))
     if only_pids is not None:
@@ -388,7 +360,7 @@ def build_index(
         ).sortWithinPartitions(PID_COL, *cfg.key_cols)
     )
     build_fn = _make_build_fn(cfg, index_dir, max_docs_per_segment, segment_prefix)
-    manifest = shaped.mapInPandas(build_fn, schema=MANIFEST_SCHEMA)
+    segments = shaped.mapInPandas(build_fn, schema=manifest.SPARK_SCHEMA)
 
     # Pin the segment stage at exactly n_partitions tasks. When an upstream
     # op (e.g. the dedup_latest window) already hash-partitions on the
@@ -402,43 +374,30 @@ def build_index(
     prev_coalesce = spark.conf.get(coalesce_key, "true")
     spark.conf.set(coalesce_key, "false")
     try:
-        manifest_rows = manifest.collect()  # small: one row per segment
+        # small: one row per segment
+        manifest_rows = [r.asDict() for r in segments.collect()]
     finally:
         spark.conf.set(coalesce_key, prev_coalesce)
 
-    # commit manifest (translog/commit-point analog) — append mode for resume.
-    # Replay-idempotent: a re-run batch (e.g. foreachBatch failure recovery)
-    # rewrites byte-identical segment files, so rows whose segment_id is
-    # already committed are dropped instead of appended — appending them
-    # would double-count n_docs/total_tokens in the stats path below and
-    # shift every BM25 score.
-    mpath = _join(index_dir, "manifest")
-    new_rows = manifest_rows
-    if new_rows and fsio.exists(mpath):
-        already = {
-            r["segment_id"]
-            for r in spark.read.parquet(mpath)
-            .where(F.col("status") == "committed")
-            .select("segment_id").distinct().collect()
-        }
-        new_rows = [r for r in new_rows if r["segment_id"] not in already]
+    # commit (translog/commit-point analog). Replay-idempotent: a re-run
+    # batch (e.g. foreachBatch failure recovery) rewrites byte-identical
+    # segment files, so rows whose segment_id is already committed are
+    # dropped instead of appended — appending them would double-count
+    # n_docs/total_tokens in the stats path below and shift every BM25 score.
+    done = set(committed["segment_id"])
+    new_rows = [r for r in manifest_rows if r["segment_id"] not in done]
     if new_rows:
-        spark.createDataFrame(new_rows, schema=MANIFEST_SCHEMA).coalesce(1) \
-            .write.mode("append").parquet(mpath)
+        manifest.append(index_dir, new_rows)
 
     # global DFS statistics: one small groupBy over per-segment term stats.
-    # Corpus totals come from the manifest rows already on the driver — no
-    # extra Spark jobs (serial-fraction discipline: besides the segment
-    # build itself, the only remaining job is the termstats groupBy).
+    # Corpus totals come from the manifest on the driver — no extra Spark
+    # jobs (serial-fraction discipline: besides the segment build itself,
+    # the only remaining job is the termstats groupBy).
     if resume or segment_prefix:
-        man = spark.read.parquet(mpath).toPandas()
-        superseded = set(man.loc[man["status"] == "superseded", "segment_id"])
-        man = man[
-            (man["status"] == "committed") & ~man["segment_id"].isin(superseded)
-        ].drop_duplicates(subset=["segment_id"])  # replay-safe: count each once
-        n_docs = int(man["docs_indexed"].sum())
-        total_tokens = int(man["sum_doc_len"].sum())
-        n_segments = int(len(man))
+        live = manifest.active(manifest.read(index_dir))
+        n_docs = int(live["docs_indexed"].sum())
+        total_tokens = int(live["sum_doc_len"].sum())
+        n_segments = len(live)
     else:
         n_docs = sum(r["docs_indexed"] for r in manifest_rows)
         total_tokens = sum(r["sum_doc_len"] for r in manifest_rows)
@@ -461,7 +420,7 @@ def _write_global_stats(
     n_docs: int,
     total_tokens: int,
 ) -> None:
-    segterms = spark.read.parquet(_join(index_dir, "segterms"))
+    segterms = spark.read.parquet(fsio.join(index_dir, "segterms"))
     stats = (
         segterms.groupBy("term")
         .agg(
@@ -471,12 +430,12 @@ def _write_global_stats(
         )
         .sortWithinPartitions("term")  # row-group pruning on term lookups
     )
-    out = _join(index_dir, "termstats")
+    out = fsio.join(index_dir, "termstats")
     if fsio.is_local(index_dir):
         # local: stage + atomic dir swap so concurrent readers never see a
         # half-written stats table (os-level ops need scheme-free paths)
         _, local_root = fsio.resolve(index_dir)
-        tmp = _join(index_dir, "termstats.tmp")
+        tmp = fsio.join(index_dir, "termstats.tmp")
         stats.write.mode("overwrite").parquet(tmp)
         import shutil
 
@@ -496,6 +455,6 @@ def _write_global_stats(
         "config": asdict(cfg),
     }
     fsio.write_bytes(
-        _join(index_dir, "meta.json"),
+        fsio.join(index_dir, "meta.json"),
         json.dumps(meta, indent=1, default=str).encode(),
     )

@@ -31,12 +31,8 @@ from pyspark.sql import functions as F
 from elasticsearch_spark.index import fsio
 
 
-def _join(base: str, *parts: str) -> str:
-    return "/".join([base.rstrip("/"), *parts])
-
-
 def _seg_path(index_dir: str, seg: str) -> str:
-    return _join(index_dir, "deletes", f"segment_id={seg}", "data.parquet")
+    return fsio.join(index_dir, "deletes", f"segment_id={seg}", "data.parquet")
 
 
 def read_deletes(index_dir: str, segment_id: str) -> np.ndarray:
@@ -44,7 +40,7 @@ def read_deletes(index_dir: str, segment_id: str) -> np.ndarray:
     path = _seg_path(index_dir, segment_id)
     if not fsio.exists(path):
         return np.array([], dtype=np.int64)
-    tbl = fsio.dataset(_join(index_dir, "deletes", f"segment_id={segment_id}"))
+    tbl = fsio.dataset(fsio.join(index_dir, "deletes", f"segment_id={segment_id}"))
     return np.sort(
         np.asarray(tbl.to_table(columns=["local_doc_id"])["local_doc_id"],
                    dtype=np.int64)
@@ -58,7 +54,7 @@ def write_deletes(index_dir: str, segment_id: str, ids: np.ndarray) -> None:
 
 
 def has_deletes(index_dir: str) -> bool:
-    return fsio.exists(_join(index_dir, "deletes"))
+    return fsio.exists(fsio.join(index_dir, "deletes"))
 
 
 def delete_docs(reader, cond: Column) -> int:
@@ -92,7 +88,7 @@ def deletes_map(reader) -> dict[str, np.ndarray]:
         return {}
     from pyarrow import fs as pafs
 
-    fsys, root = fsio.resolve(_join(reader.index_dir, "deletes"))
+    fsys, root = fsio.resolve(fsio.join(reader.index_dir, "deletes"))
     out: dict[str, np.ndarray] = {}
     for info in fsys.get_file_info(pafs.FileSelector(root, recursive=False)):
         name = info.path.rsplit("/", 1)[-1]
@@ -107,7 +103,7 @@ def deletes_df(reader) -> DataFrame | None:
     if not has_deletes(reader.index_dir):
         return None
     return (
-        reader.spark.read.parquet(_join(reader.index_dir, "deletes"))
+        reader.spark.read.parquet(fsio.join(reader.index_dir, "deletes"))
         .groupBy("segment_id")
         .agg(F.sort_array(F.collect_list("local_doc_id")).alias("d_ids"))
     )

@@ -6,10 +6,11 @@ segment files can live on file://, s3://, hdfs://, gs:// — executors write
 immutable segment parquet directly to the shared store, the driver reads
 footers/row-groups through the same handle.
 
-Spark-level reads/writes (manifest, termstats, docs scans) pass the URI
+Spark-level reads/writes (termstats, merges, docs scans) pass the URI
 straight to Spark, whose Hadoop connectors resolve the scheme themselves;
-this module covers the pyarrow fast paths (deterministic segment writes,
-driver-side pruned reads).
+this module covers the pyarrow paths: deterministic segment writes, the
+manifest's reads and appends (index/manifest.py), and driver-side pruned
+reads.
 
 ``register(scheme, fs, strip)`` injects a custom FileSystem for tests
 (e.g. pyarrow's in-memory _MockFileSystem) or for pre-authenticated
@@ -32,6 +33,11 @@ def register(scheme: str, fs: pafs.FileSystem, strip_prefix: bool = True) -> Non
 
 def unregister(scheme: str) -> None:
     _REGISTERED.pop(scheme, None)
+
+
+def join(base: str, *parts: str) -> str:
+    """URI-safe path join (os.path.join would mangle scheme://)."""
+    return "/".join([base.rstrip("/"), *parts])
 
 
 def _scheme(path: str) -> str | None:
@@ -114,10 +120,13 @@ def dataset(path: str, **kw):
 def write_table_deterministic(table, path: str, **write_kw) -> None:
     """Write a parquet file whose final visibility is all-or-nothing.
 
-    Local: write to .tmp then atomic rename (crash-safe, byte-identical on
-    retry). Remote object stores have no rename; the PUT of an immutable,
-    deterministically-named object is already effectively atomic, so write
-    direct — a retried task overwrites with identical bytes.
+    Local: stage as a hidden ``.<name>.tmp`` beside the target, then
+    atomic rename (crash-safe, byte-identical on retry). Spark's file
+    listing and pyarrow's discovery both skip names that start with ``.``,
+    so a staged file left by a crash is never read as data. Remote object
+    stores have no rename; the PUT of an immutable, deterministically-named
+    object is already effectively atomic, so write direct — a retried task
+    overwrites with identical bytes.
     """
     import pyarrow.parquet as pq
 
@@ -126,7 +135,7 @@ def write_table_deterministic(table, path: str, **write_kw) -> None:
     if parent and parent != p:
         fs.create_dir(parent, recursive=True)
     if isinstance(fs, pafs.LocalFileSystem):
-        tmp = p + ".tmp"
+        tmp = os.path.join(os.path.dirname(p), f".{os.path.basename(p)}.tmp")
         pq.write_table(table, tmp, **write_kw)
         os.replace(tmp, p)
     else:

@@ -20,29 +20,36 @@ Spark-first design — two key departures from a naive "shuffle by term":
    which is exactly how a 10-GB hot-term posting list (df ≈ 1% of 10^12
    turns) avoids landing on a single reducer.
 
-2. **Salted repack.** Rebase alone leaves short tail blocks (<128) from each
-   input segment. Optional repack re-blocks to exactly 128 in parallel by
-   (term, salt) where salt = block-run bucket — a hot term's compaction is
-   split across `salt_buckets` independent tasks, each re-blocking its doc-
-   ordered slice, then stitched by block ordinal. Hierarchical and
+2. **Salted repack.** Rebase alone leaves short tail blocks from each input
+   segment. Optional repack re-blocks to exactly the index's block size
+   (``IndexConfig.block_size`` in meta.json) in parallel by (term, salt)
+   where salt = block-run bucket — a hot term's compaction is split across
+   ``SALT_BUCKETS`` independent tasks, each re-blocking its doc-ordered
+   slice, then stitched by block ordinal. Hierarchical and
    order-preserving; never a per-term single reducer.
+
+The manifest (active segments, merged row, supersede markers) is read and
+appended through index/manifest.py.
 """
 
 from __future__ import annotations
 
-import os
+import json
 from typing import Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import SparkSession, Window
 from pyspark.sql import functions as F
 
-from elasticsearch_spark.index import fsio
-from elasticsearch_spark.index.builder import MANIFEST_SCHEMA
+from elasticsearch_spark.index import deletes as _del
+from elasticsearch_spark.index import fsio, manifest
+from elasticsearch_spark.index.builder import _write_deterministic
 from elasticsearch_spark.index.codec import delta_decode, delta_encode, pack_u32, unpack_u32
 
 MAX_MERGE_AT_ONCE = 10  # TieredMergePolicyProvider.java:39 default
+SALT_BUCKETS = 32  # repack tasks per hot term
 
 POSTINGS_SCHEMA = (
     "term string, block_id long, n_docs int, first_doc long,"
@@ -52,19 +59,17 @@ POSTINGS_SCHEMA = (
 )
 
 
-def plan_merges(manifest: pd.DataFrame, fan_in: int = MAX_MERGE_AT_ONCE) -> list[list[str]]:
-    """Group active segments into merge groups of ≤ fan_in, smallest first."""
-    segs = manifest.sort_values("docs_indexed")["segment_id"].tolist()
+def plan_merges(active: pd.DataFrame, fan_in: int = MAX_MERGE_AT_ONCE) -> list[list[str]]:
+    """Group active segments (manifest.active rows) into merge groups of
+    ≤ fan_in, smallest first."""
+    segs = active.sort_values("docs_indexed", kind="stable")["segment_id"].tolist()
     return [segs[i : i + fan_in] for i in range(0, len(segs), fan_in) if len(segs[i : i + fan_in]) > 1]
 
 
-def _offsets(manifest: pd.DataFrame, group: Sequence[str]) -> dict[str, int]:
-    sizes = (
-        manifest.set_index("segment_id")["docs_indexed"].loc[list(group)].astype(int)
-    )
-    ordered = sorted(group)
+def _offsets(sizes: pd.Series, group: Sequence[str]) -> dict[str, int]:
+    """Merged doc-id offset of each group segment, in segment_id order."""
     off, out = 0, {}
-    for s in ordered:
+    for s in sorted(group):
         out[s] = off
         off += int(sizes[s])
     return out
@@ -76,21 +81,19 @@ def merge_segments(
     group: Sequence[str],
     merged_name: str,
     repack: bool = True,
-    salt_buckets: int = 32,
-    block_size: int = 128,
 ) -> dict:
     """Merge ``group`` segments into one named ``merged_name``.
 
     Returns the new manifest row (dict). Old segment dirs are deleted after
     all new files are written (Lucene deletes merged segments the same way).
     """
-    man = spark.read.parquet(os.path.join(index_dir, "manifest")).toPandas()
-    offsets = _offsets(man, group)
+    g = manifest.active(manifest.read(index_dir)).set_index("segment_id").loc[list(group)]
+    offsets = _offsets(g["docs_indexed"], group)
     seg_rank = {s: i for i, s in enumerate(sorted(group))}
     b_off = spark.sparkContext.broadcast(offsets)
     b_rank = spark.sparkContext.broadcast(seg_rank)
 
-    posts = spark.read.parquet(os.path.join(index_dir, "postings")).where(
+    posts = spark.read.parquet(fsio.join(index_dir, "postings")).where(
         F.col("segment_id").isin(list(group))
     )
 
@@ -119,6 +122,9 @@ def merge_segments(
     else:
         # salted repack: re-block to exactly block_size, parallel by
         # (term, salt); salt = run of source block ordinals → order-preserving
+        meta = json.loads(fsio.read_bytes(fsio.join(index_dir, "meta.json")))
+        block_size = int(meta["config"]["block_size"])
+
         def repack_fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
             pdf = pdf.copy()
             pdf["rank"] = pdf["segment_id"].map(b_rank.value)
@@ -174,18 +180,16 @@ def merge_segments(
         rank_df = spark.createDataFrame(
             [(s, r) for s, r in seg_rank.items()], "segment_id string, __rank long"
         )
-        from pyspark.sql import Window
-
         ordered = posts.join(F.broadcast(rank_df), "segment_id").withColumn(
             "__ord", F.col("__rank") * F.lit(1 << 40) + F.col("first_doc").cast("long")
         )
         w = Window.partitionBy("term").orderBy("__ord")
-        salted = ordered.withColumn("salt", F.ntile(salt_buckets).over(w))
+        salted = ordered.withColumn("salt", F.ntile(SALT_BUCKETS).over(w))
         new_posts = salted.groupBy("term", "salt").applyInPandas(
             repack_fn, POSTINGS_SCHEMA
         )
 
-    posts_out = os.path.join(index_dir, "postings", f"segment_id={merged_name}")
+    posts_out = fsio.join(index_dir, "postings", f"segment_id={merged_name}")
     # bounded parquet row groups so term-range stats stay useful for the
     # pruned driver-local reads after a merge (default 128 MB groups would
     # make the merged file one unprunable block)
@@ -194,7 +198,7 @@ def merge_segments(
     ).parquet(posts_out)
 
     # docs: offset local ids, concatenate
-    docs = spark.read.parquet(os.path.join(index_dir, "docs")).where(
+    docs = spark.read.parquet(fsio.join(index_dir, "docs")).where(
         F.col("segment_id").isin(list(group))
     )
     off_df = spark.createDataFrame(
@@ -205,12 +209,12 @@ def merge_segments(
         .withColumn("local_doc_id", (F.col("local_doc_id") + F.col("__off")).cast("int"))
         .drop("segment_id", "__off")
     )
-    docs_out = os.path.join(index_dir, "docs", f"segment_id={merged_name}")
+    docs_out = fsio.join(index_dir, "docs", f"segment_id={merged_name}")
     new_docs.write.mode("overwrite").parquet(docs_out)
 
     # norms: concatenate packed doc_len arrays in segment order (tiny)
     norms = (
-        spark.read.parquet(os.path.join(index_dir, "norms"))
+        spark.read.parquet(fsio.join(index_dir, "norms"))
         .where(F.col("segment_id").isin(list(group)))
         .toPandas()
         .sort_values("segment_id")
@@ -222,17 +226,13 @@ def merge_segments(
             "doc_len_packed": [b"".join(norms["doc_len_packed"])],
         }
     )
-    import pyarrow as pa
-
-    from elasticsearch_spark.index.builder import _write_deterministic
-
     _write_deterministic(
         pa.Table.from_pandas(merged_norm, preserve_index=False),
-        os.path.join(index_dir, "norms", f"segment_id={merged_name}", "data.parquet"),
+        fsio.join(index_dir, "norms", f"segment_id={merged_name}", "data.parquet"),
     )
 
     # segterms: additive merge
-    segterms = spark.read.parquet(os.path.join(index_dir, "segterms")).where(
+    segterms = spark.read.parquet(fsio.join(index_dir, "segterms")).where(
         F.col("segment_id").isin(list(group))
     )
     new_st = segterms.groupBy("term").agg(
@@ -240,17 +240,16 @@ def merge_segments(
         F.sum("ttf").alias("ttf"),
         F.max("max_tf").alias("max_tf"),
     )
-    st_out = os.path.join(index_dir, "segterms", f"segment_id={merged_name}")
+    st_out = fsio.join(index_dir, "segterms", f"segment_id={merged_name}")
     new_st.write.mode("overwrite").parquet(st_out)
 
     # stats for manifest row
-    g = man.set_index("segment_id").loc[list(group)]
     row = {
         "partition_id": -1,
         "segment_id": merged_name,
         "status": "committed",
         "docs_indexed": int(g["docs_indexed"].sum()),
-        "n_terms": int(new_st.count()),
+        "n_terms": fsio.dataset(st_out).count_rows(),  # footers, no job
         "postings_bytes": int(g["postings_bytes"].sum()),
         "sum_doc_len": int(g["sum_doc_len"].sum()),
         "merge_fan_in": len(group),
@@ -259,8 +258,6 @@ def merge_segments(
 
     # tombstones: rebase each input segment's delete list into the merged
     # id space (new_id = offset + old_id — the same rebase the postings get)
-    from elasticsearch_spark.index import deletes as _del
-
     merged_dels = []
     for s in group:
         ids = _del.read_deletes(index_dir, s)
@@ -276,7 +273,7 @@ def merge_segments(
     # files visible and double-count every doc.
     for sub in ("postings", "docs", "norms", "segterms", "deletes"):
         for s in group:
-            fsio.delete_dir("/".join([index_dir.rstrip("/"), sub, f"segment_id={s}"]))
+            fsio.delete_dir(fsio.join(index_dir, sub, f"segment_id={s}"))
 
     # manifest: append merged row + supersede markers
     sup = [
@@ -284,8 +281,7 @@ def merge_segments(
          "docs_indexed": 0, "n_terms": 0, "postings_bytes": 0, "sum_doc_len": 0}
         for s in group
     ]
-    spark.createDataFrame(pd.DataFrame([row] + sup), schema=MANIFEST_SCHEMA) \
-        .coalesce(1).write.mode("append").parquet(os.path.join(index_dir, "manifest"))
+    manifest.append(index_dir, [row] + sup)
     return row
 
 
@@ -296,12 +292,8 @@ def tiered_merge(
     repack: bool = True,
 ) -> list[dict]:
     """One tier pass: merge all active segments in groups of ≤ fan_in."""
-    man = spark.read.parquet(os.path.join(index_dir, "manifest")).toPandas()
-    superseded = set(man.loc[man["status"] == "superseded", "segment_id"])
-    active = man[(man["status"] == "committed") & ~man["segment_id"].isin(superseded)]
-    # drop rows for already-merged-away segment ids (keep latest state)
     rows = []
-    for group in plan_merges(active, fan_in):
+    for group in plan_merges(manifest.active(manifest.read(index_dir)), fan_in):
         name = f"m-{min(group)}-{len(group):02d}"
         rows.append(merge_segments(spark, index_dir, group, name, repack=repack))
     return rows

@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import json
-import os  # noqa: F401  (kept for callers)
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -11,16 +10,12 @@ from elasticsearch_spark.config import AnalyzerConfig, BM25Params, IndexConfig
 from elasticsearch_spark.index import fsio
 
 
-def fsio_join(base: str, *parts: str) -> str:
-    return "/".join([base.rstrip("/"), *parts])
-
-
 class IndexReader:
     def __init__(self, spark: SparkSession, index_dir: str) -> None:
         self.spark = spark
         self.index_dir = index_dir
         self.meta = json.loads(
-            fsio.read_bytes(fsio_join(index_dir, "meta.json"))
+            fsio.read_bytes(fsio.join(index_dir, "meta.json"))
         )
         c = self.meta["config"]
         a = dict(c["analyzer"])  # JSON round-trip: lists back to tuples
@@ -49,7 +44,7 @@ class IndexReader:
             self._views: dict[str, DataFrame] = {}
         if sub not in self._views:
             self._views[sub] = self.spark.read.parquet(
-                fsio_join(self.index_dir, sub)
+                fsio.join(self.index_dir, sub)
             )
         return self._views[sub]
 
@@ -86,7 +81,7 @@ class IndexReader:
             self._local_ds = cache
         if sub not in cache[1]:
             cache[1][sub] = fsio.dataset(
-                fsio_join(self.index_dir, sub), partitioning="hive"
+                fsio.join(self.index_dir, sub), partitioning="hive"
             )
         return cache[1][sub]
 
@@ -145,7 +140,7 @@ class IndexReader:
         try:
             import pyarrow.dataset as ds
 
-            dset = fsio.dataset(fsio_join(self.index_dir, "termstats"))
+            dset = fsio.dataset(fsio.join(self.index_dir, "termstats"))
             tbl = dset.to_table(
                 columns=["term", "df", "ttf"],
                 filter=ds.field("term").isin(uniq),
@@ -183,7 +178,7 @@ class IndexReader:
         try:
             import pyarrow.dataset as ds
 
-            dset = fsio.dataset(fsio_join(self.index_dir, "termstats"))
+            dset = fsio.dataset(fsio.join(self.index_dir, "termstats"))
             tbl = dset.to_table(
                 columns=["term", "df", "ttf"],
                 filter=(ds.field("term") >= prefix) & (ds.field("term") < upper),

@@ -15,13 +15,9 @@ from __future__ import annotations
 
 import json
 
-from elasticsearch_spark.index import fsio
+from elasticsearch_spark.index import fsio, manifest
 
 _SUBDIRS = ("postings", "docs", "norms", "segterms")
-
-
-def _join(base: str, *parts: str) -> str:
-    return "/".join([base.rstrip("/"), *parts])
 
 
 def _copy_file(src: str, dst: str) -> None:
@@ -37,27 +33,20 @@ def _copy_dir(src: str, dst: str) -> None:
         if info.type != pafs.FileType.File:
             continue
         rel = info.path[len(sp) :].lstrip("/")
-        _copy_file(_join(src, rel), _join(dst, rel))
+        _copy_file(fsio.join(src, rel), fsio.join(dst, rel))
 
 
-def active_segments(spark, index_dir: str) -> list[str]:
-    """Committed, non-superseded segment ids from the manifest."""
-    from pyspark.sql import functions as F
-
-    man = spark.read.parquet(_join(index_dir, "manifest"))
-    superseded = {
-        r["segment_id"]
-        for r in man.where(F.col("status") == "superseded")
-        .select("segment_id").distinct().collect()
-    }
-    return sorted(
-        {
-            r["segment_id"]
-            for r in man.where(F.col("status") == "committed")
-            .select("segment_id").distinct().collect()
-        }
-        - superseded
-    )
+def _copy_index(src: str, dst: str, segs: list[str]) -> None:
+    """Copy the files of ``segs`` plus termstats, manifest and meta.json."""
+    for sub in (*_SUBDIRS, "deletes"):
+        for seg in segs:
+            seg_src = fsio.join(src, sub, f"segment_id={seg}")
+            # tombstones exist only for segments with deletes
+            if sub != "deletes" or fsio.exists(seg_src):
+                _copy_dir(seg_src, fsio.join(dst, sub, f"segment_id={seg}"))
+    _copy_dir(fsio.join(src, "termstats"), fsio.join(dst, "termstats"))
+    _copy_dir(fsio.join(src, "manifest"), fsio.join(dst, "manifest"))
+    _copy_file(fsio.join(src, "meta.json"), fsio.join(dst, "meta.json"))
 
 
 def snapshot(spark, index_dir: str, snap_dir: str) -> dict:
@@ -65,24 +54,13 @@ def snapshot(spark, index_dir: str, snap_dir: str) -> dict:
     manifest + meta) to ``snap_dir``; returns the written snapshot
     manifest (segment list). Per-segment delete lists (deletes/) are part
     of the commit point — omitting them would resurrect tombstoned docs
-    on restore (Lucene snapshots likewise include the .del generation)."""
-    segs = active_segments(spark, index_dir)
-    for sub in _SUBDIRS:
-        for seg in segs:
-            _copy_dir(
-                _join(index_dir, sub, f"segment_id={seg}"),
-                _join(snap_dir, sub, f"segment_id={seg}"),
-            )
-    for seg in segs:  # tombstones exist only for segments with deletes
-        src = _join(index_dir, "deletes", f"segment_id={seg}")
-        if fsio.exists(src):
-            _copy_dir(src, _join(snap_dir, "deletes", f"segment_id={seg}"))
-    _copy_dir(_join(index_dir, "termstats"), _join(snap_dir, "termstats"))
-    _copy_dir(_join(index_dir, "manifest"), _join(snap_dir, "manifest"))
-    _copy_file(_join(index_dir, "meta.json"), _join(snap_dir, "meta.json"))
+    on restore (Lucene snapshots likewise include the .del generation).
+    Pure file copies through fsio: ``spark`` is unused, no job runs."""
+    segs = manifest.active(manifest.read(index_dir))["segment_id"].tolist()
+    _copy_index(index_dir, snap_dir, segs)
     snap_meta = {"segments": segs, "source": index_dir}
     fsio.write_bytes(
-        _join(snap_dir, "snapshot.json"), json.dumps(snap_meta, indent=1).encode()
+        fsio.join(snap_dir, "snapshot.json"), json.dumps(snap_meta, indent=1).encode()
     )
     return snap_meta
 
@@ -90,18 +68,6 @@ def snapshot(spark, index_dir: str, snap_dir: str) -> dict:
 def restore(snap_dir: str, index_dir: str) -> dict:
     """Materialize a snapshot as a live index directory (byte copy — the
     snapshot layout IS the index layout plus snapshot.json)."""
-    snap_meta = json.loads(fsio.read_bytes(_join(snap_dir, "snapshot.json")))
-    for sub in _SUBDIRS:
-        for seg in snap_meta["segments"]:
-            _copy_dir(
-                _join(snap_dir, sub, f"segment_id={seg}"),
-                _join(index_dir, sub, f"segment_id={seg}"),
-            )
-    for seg in snap_meta["segments"]:
-        src = _join(snap_dir, "deletes", f"segment_id={seg}")
-        if fsio.exists(src):
-            _copy_dir(src, _join(index_dir, "deletes", f"segment_id={seg}"))
-    _copy_dir(_join(snap_dir, "termstats"), _join(index_dir, "termstats"))
-    _copy_dir(_join(snap_dir, "manifest"), _join(index_dir, "manifest"))
-    _copy_file(_join(snap_dir, "meta.json"), _join(index_dir, "meta.json"))
+    snap_meta = json.loads(fsio.read_bytes(fsio.join(snap_dir, "snapshot.json")))
+    _copy_index(snap_dir, index_dir, snap_meta["segments"])
     return snap_meta

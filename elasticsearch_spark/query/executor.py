@@ -153,6 +153,7 @@ _ARROW_OPS = {
     "EqualTo": _op.eq, "LessThan": _op.lt, "LessThanOrEqual": _op.le,
     "GreaterThan": _op.gt, "GreaterThanOrEqual": _op.ge,
     "IsNull": lambda e: e.is_null(), "IsNotNull": lambda e: e.is_valid(),
+    "Coalesce": pc.coalesce,
 }
 # Catalyst type -> pyarrow type of the literals and columns _arrow_filter
 # accepts. No float/double: Spark orders NaN above every value and has
@@ -1302,7 +1303,7 @@ def _local_ds(reader, sub: str):
     cached = reader.local_dataset(sub)
     if cached is not None:
         return cached
-    return fsio.dataset(f"{reader.index_dir.rstrip('/')}/{sub}", partitioning="hive")
+    return fsio.dataset(fsio.join(reader.index_dir, sub), partitioning="hive")
 
 
 def _result_schema(reader: IndexReader, extra_cols, query_id: bool = False):

@@ -12,7 +12,7 @@ claim a measurement instead of an assertion:
 - a post-merge hot-term query (results must still be correct).
 
 Without salting, the hot term's repack would be ONE applyInPandas task
-holding ~30% of all postings; with salt_buckets=32 the histogram below
+holding ~30% of all postings; with merge.SALT_BUCKETS=32 the histogram below
 shows it split into ~32 near-equal tasks (max task ≈ total/32).
 
 Usage: python scripts/skew_merge_report.py [n_convs] [out_json]
@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from elasticsearch_spark.config import IndexConfig
 from elasticsearch_spark.fixtures import generate_transcripts
-from elasticsearch_spark.index import IndexReader, build_index
+from elasticsearch_spark.index import IndexReader, build_index, manifest
 from elasticsearch_spark.index.merge import tiered_merge
 from elasticsearch_spark.query import search_topk
 from elasticsearch_spark.session import get_spark
@@ -77,13 +77,7 @@ def main() -> None:
     fan_ins = [m["merge_fan_in"] for m in merges]
 
     # merged block ordinals are salt-major (merge.py:148): salt = id >> 32
-    man = spark.read.parquet(os.path.join(idx_dir, "manifest")).toPandas()
-    sup = set(man.loc[man["status"] == "superseded", "segment_id"])
-    active = [
-        s
-        for s in man.loc[man["status"] == "committed", "segment_id"].unique()
-        if s not in sup
-    ]
+    active = manifest.active(manifest.read(idx_dir))["segment_id"].tolist()
     # fresh read: the pre-merge DataFrame's partition discovery predates the
     # merged segment directories
     merged_posts = spark.read.parquet(os.path.join(idx_dir, "postings")).where(

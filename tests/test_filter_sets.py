@@ -5,7 +5,7 @@ one Catalyst optimization (executor._local_filter_sets); a filter with a
 node outside the translated set takes the Spark _filter_sets job alone.
 Both must give the same per-segment id sets, and searches on the local
 runner must equal the Spark runner row for row. Null semantics are pinned
-by the nullable ``tool`` column (Not, IN, IS NULL, Kleene and/or).
+by the nullable ``tool`` column (Not, IN, IS NULL, Coalesce, Kleene and/or).
 """
 
 import datetime
@@ -75,7 +75,8 @@ def _zoo(reader):
         ("kleene_or", (F.col("tool") == "bash") | (F.col("role") == "system"), False),
         ("kleene_not_and", ~((F.col("tool") != "bash") & (F.col("role") == "user")), False),
         ("bool_must_not", fl.bool_(must=[F.col("role") == "user"],
-                                   must_not=[F.col("tool") == "search"]), True),
+                                   must_not=[F.col("tool") == "search"]), False),
+        ("not_", fl.not_(F.col("tool") == "search"), False),
         ("ids", fl.ids("conv_id", convs), False),
         ("alias", alias_filter(reader, "late_assistant"), False),
         ("lit_true", F.lit(True), False),
@@ -156,5 +157,8 @@ def test_translated_filters_launch_no_job(spark, reader):
     assert n == 0
     assert msearch_topk(reader, specs).collect() == msearch_topk(
         reader, specs, mode="spark").collect()
+    must_not = fl.bool_(must=[F.col("role") == "user"], must_not=[F.col("tool") == "search"])
+    assert _jobs(spark, lambda: search_topk(reader, "tok0003 timeout", k=10,
+                                            filter_cond=must_not)) == 0
     rlike = F.col("role").rlike("^ass")
     assert _jobs(spark, lambda: search_topk(reader, "tok0003", filter_cond=rlike)) >= 1

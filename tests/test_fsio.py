@@ -221,3 +221,21 @@ def test_merge_retires_segments_on_file_uri(spark, tmp_root):
         for r in search_topk(reader, "error timeout", k=10).collect()
     ]
     assert got == want
+
+
+def test_staged_file_is_hidden_until_renamed(spark, tmp_path, monkeypatch):
+    """A write that dies between the parquet write and the rename leaves a
+    staged file that neither pyarrow discovery nor Spark reads as data."""
+    out = tmp_path / "tbl"
+    fsio.write_table_deterministic(pa.table({"x": [1, 2]}), str(out / "part-1.parquet"))
+
+    def crash(src, dst):
+        raise OSError("killed before the rename")
+
+    monkeypatch.setattr(fsio.os, "replace", crash)
+    with pytest.raises(OSError):
+        fsio.write_table_deterministic(pa.table({"x": [3]}), str(out / "part-2.parquet"))
+    monkeypatch.undo()
+    assert fsio.dataset(str(out)).count_rows() == 2
+    assert spark.read.parquet(str(out)).count() == 2
+    assert sorted(p.name for p in out.iterdir()) == [".part-2.parquet.tmp", "part-1.parquet"]

@@ -63,6 +63,32 @@ def test_merge_preserves_results(spark, corpus_df, tmp_root):
     assert man.where(F.col("merge_fan_in") > 1).count() >= len(rows)
 
 
+def test_repack_keeps_the_index_block_size(spark, tmp_root):
+    """A repack merge re-blocks to the index's own block size (meta.json
+    config), not a fixed 128. "common" is in all 2,600 docs: ~44 source
+    blocks over the 32 salt buckets, so some buckets re-block two source
+    blocks (~128 docs) at once."""
+    import pandas as pd
+
+    n = 2600
+    corpus = pd.DataFrame({
+        "conv_id": [f"c{i:05d}" for i in range(n)],
+        "turn_idx": [0] * n,
+        "text": [f"common w{i % 7} x{i % 13}" for i in range(n)],
+    })
+    idx = f"{tmp_root}/idx_block64"
+    cfg = IndexConfig(n_partitions=4, block_size=64, key_cols=("conv_id", "turn_idx"))
+    build_index(spark, spark.createDataFrame(corpus), idx, cfg)
+    queries = ["common", "w3 x5", "common w1"]
+    before = _results(IndexReader(spark, idx), queries)
+    rows = tiered_merge(spark, idx, repack=True)
+    assert len(rows) == 1
+    posts = spark.read.parquet(f"{idx}/postings")
+    assert posts.select("segment_id").distinct().collect()[0][0] == rows[0]["segment_id"]
+    assert posts.agg(F.max("n_docs")).first()[0] == 64
+    assert _results(IndexReader(spark, idx), queries) == before
+
+
 def test_resume_skips_committed_and_is_byte_identical(spark, corpus_df, tmp_root):
     cfg = IndexConfig(n_partitions=4, **CFG)
     cold = f"{tmp_root}/idx_cold"
