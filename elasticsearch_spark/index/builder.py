@@ -29,9 +29,10 @@ Here:
 Scale notes (100 TB design): the only full-data shuffle is the routing
 repartition. Segment construction is memory-bounded via
 ``max_docs_per_segment`` flushes. Global term statistics (DFS semantics,
-search/dfs/DfsPhase.java:63-104) are one groupBy over the small per-segment
-term-stats tables, written sorted by term so query-time term lookups prune
-row groups.
+search/dfs/DfsPhase.java:63-104) are one group-by over the small
+per-segment term-stats tables, written sorted by term so query-time term
+lookups prune row groups; under ``_DRIVER_SEGTERMS_LIMIT`` it runs in
+pyarrow on the driver, above it as a Spark job.
 """
 
 from __future__ import annotations
@@ -39,6 +40,7 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import shutil
 from collections.abc import Iterator
 from dataclasses import asdict, dataclass
 
@@ -56,6 +58,35 @@ from elasticsearch_spark.index import fsio, manifest
 from elasticsearch_spark.index.codec import delta_encode, pack_u32
 
 PID_COL = "__pid"
+# Index maintenance runs on the driver with pyarrow, and launches no Spark
+# job, on a driver-readable store whose input is at most these sizes (both
+# from the manifest; BENCH.md "Driver gates", 4 cores, local[4]):
+# - a rebase merge, by Σ postings_bytes. The driver path costs ~0.4 s +
+#   53 ms/MB, the Spark path ~2.0 s + 47 ms/MB (8.0 vs 8.2 s at 130 MB).
+#   At 32 MB the driver's cost reaches the Spark path's fixed cost alone,
+#   so up to it the driver wins however many cores Spark gets. The driver
+#   process peaks ~4-6x the postings it merges above its Spark-path peak.
+_DRIVER_POSTINGS_LIMIT = 32 << 20
+# - the termstats republish, by Σ n_terms (segterms rows, its input). The
+#   driver was faster at every size measured (0.2 s vs 1.4 s at 4M rows,
+#   0.8 s vs 3.6 s at 16M); this caps the driver's memory, ~70 B a row.
+_DRIVER_SEGTERMS_LIMIT = 4_000_000
+
+POSTINGS_SCHEMA = pa.schema([
+    ("term", pa.string()),
+    # int64: merged segments use composite (rank<<32 | ordinal) ids
+    ("block_id", pa.int64()),
+    ("n_docs", pa.int32()),
+    ("first_doc", pa.int64()),
+    ("last_doc", pa.int64()),
+    ("max_tf", pa.int32()),
+    ("min_dl_eff", pa.float64()),
+    ("docs_packed", pa.binary()),
+    ("tfs_packed", pa.binary()),
+    # per-doc delta-encoded positions, entry lengths = tfs
+    # (the .pos file analog; NULL when index_positions=False)
+    ("pos_packed", pa.binary()),
+])
 
 
 @dataclass
@@ -71,6 +102,25 @@ def _write_deterministic(table: pa.Table, path: str, **kw) -> None:
     fsio.write_table_deterministic(
         table, path, compression="zstd", write_statistics=True,
         data_page_size=1 << 20, **kw,
+    )
+
+
+def _on_driver(index_dir: str, size: int, limit: int) -> bool:
+    """True when index maintenance over an input of ``size`` runs on the
+    driver (``limit``: one of the ``_DRIVER_*_LIMIT`` gates above)."""
+    return fsio.driver_readable(index_dir) and size <= limit
+
+
+def sum_term_stats(segterms: pa.Table) -> pa.Table:
+    """Per-term Σ df, Σ ttf and max max_tf over segment term-stats rows,
+    sorted by term."""
+    agg = segterms.group_by("term").aggregate(
+        [("df", "sum"), ("ttf", "sum"), ("max_tf", "max")]
+    )
+    return (
+        agg.select(["term", "df_sum", "ttf_sum", "max_tf_max"])
+        .rename_columns(["term", "df", "ttf", "max_tf"])
+        .sort_by("term")
     )
 
 
@@ -182,22 +232,10 @@ def _flush_segment(
             h.update(packed_t)
 
     seg_dir = lambda sub: fsio.join(index_dir, sub, f"segment_id={seg}", "data.parquet")  # noqa: E731
-    postings_tbl = pa.table(
-        {
-            "term": pa.array(p_term, pa.string()),
-            # int64: merged segments use composite (rank<<32 | ordinal) ids
-            "block_id": pa.array(p_block, pa.int64()),
-            "n_docs": pa.array(p_ndocs, pa.int32()),
-            "first_doc": pa.array(p_firstdoc, pa.int64()),
-            "last_doc": pa.array(p_lastdoc, pa.int64()),
-            "max_tf": pa.array(p_maxtf, pa.int32()),
-            "min_dl_eff": pa.array(p_mindl, pa.float64()),
-            "docs_packed": pa.array(p_docs, pa.binary()),
-            "tfs_packed": pa.array(p_tfs, pa.binary()),
-            # per-doc delta-encoded positions, entry lengths = tfs
-            # (the .pos file analog; NULL when index_positions=False)
-            "pos_packed": pa.array(p_pos, pa.binary()),
-        }
+    postings_tbl = pa.Table.from_arrays(
+        [p_term, p_block, p_ndocs, p_firstdoc, p_lastdoc, p_maxtf, p_mindl,
+         p_docs, p_tfs, p_pos],
+        schema=POSTINGS_SCHEMA,
     )
     # small row groups on the term-sorted postings: parquet min/max stats
     # then prune a term lookup to ~1-2 groups per segment instead of the
@@ -389,20 +427,26 @@ def build_index(
     if new_rows:
         manifest.append(index_dir, new_rows)
 
-    # global DFS statistics: one small groupBy over per-segment term stats.
+    # global DFS statistics: one small group-by over per-segment term stats.
     # Corpus totals come from the manifest on the driver — no extra Spark
     # jobs (serial-fraction discipline: besides the segment build itself,
-    # the only remaining job is the termstats groupBy).
+    # the only remaining job is the termstats groupBy, and under the driver
+    # gate not even that).
     if resume or segment_prefix:
-        live = manifest.active(manifest.read(index_dir))
+        man = manifest.read(index_dir)
+        # superseded dirs a crashed merge left would be counted twice below
+        manifest.retire_superseded(index_dir, man)
+        live = manifest.active(man)
         n_docs = int(live["docs_indexed"].sum())
         total_tokens = int(live["sum_doc_len"].sum())
+        segterms_rows = int(live["n_terms"].sum())
         n_segments = len(live)
     else:
         n_docs = sum(r["docs_indexed"] for r in manifest_rows)
         total_tokens = sum(r["sum_doc_len"] for r in manifest_rows)
+        segterms_rows = sum(r["n_terms"] for r in manifest_rows)
         n_segments = len(manifest_rows)
-    _write_global_stats(spark, index_dir, cfg, n_docs, total_tokens)
+    _write_global_stats(spark, index_dir, cfg, n_docs, total_tokens, segterms_rows)
 
     return BuildResult(
         index_dir=index_dir,
@@ -419,34 +463,43 @@ def _write_global_stats(
     cfg: IndexConfig,
     n_docs: int,
     total_tokens: int,
+    segterms_rows: int,
 ) -> None:
-    segterms = spark.read.parquet(fsio.join(index_dir, "segterms"))
-    stats = (
-        segterms.groupBy("term")
-        .agg(
-            F.sum("df").alias("df"),
-            F.sum("ttf").alias("ttf"),
-            F.max("max_tf").alias("max_tf"),
-        )
-        .sortWithinPartitions("term")  # row-group pruning on term lookups
-    )
+    """Republish ``termstats`` (Σ of every segment's term stats, sorted by
+    term so query-time lookups prune row groups) and ``meta.json``. Under
+    ``_DRIVER_SEGTERMS_LIMIT`` rows the group-by runs in pyarrow."""
     out = fsio.join(index_dir, "termstats")
-    if fsio.is_local(index_dir):
-        # local: stage + atomic dir swap so concurrent readers never see a
-        # half-written stats table (os-level ops need scheme-free paths)
+    # local: stage + atomic dir swap so concurrent readers never see a
+    # half-written stats table; object stores have no rename, and an
+    # overwrite of the immutable stats prefix is the standard pattern there
+    local = fsio.is_local(index_dir)
+    target = fsio.join(index_dir, "termstats.tmp") if local else out
+    if _on_driver(index_dir, segterms_rows, _DRIVER_SEGTERMS_LIMIT):
+        segterms = fsio.dataset(fsio.join(index_dir, "segterms"), format="parquet")
+        stats = sum_term_stats(segterms.to_table(columns=["term", "df", "ttf", "max_tf"]))
+        fsio.delete_dir(target)
+        _write_deterministic(
+            stats, fsio.join(target, "data.parquet"), row_group_size=1 << 16
+        )
+    else:
+        stats = (
+            spark.read.parquet(fsio.join(index_dir, "segterms"))
+            .groupBy("term")
+            .agg(
+                F.sum("df").alias("df"),
+                F.sum("ttf").alias("ttf"),
+                F.max("max_tf").alias("max_tf"),
+            )
+            .sortWithinPartitions("term")
+        )
+        stats.write.mode("overwrite").parquet(target)
+    if local:
+        # os-level ops need scheme-free paths
         _, local_root = fsio.resolve(index_dir)
-        tmp = fsio.join(index_dir, "termstats.tmp")
-        stats.write.mode("overwrite").parquet(tmp)
-        import shutil
-
         local_out = os.path.join(local_root, "termstats")
         if os.path.isdir(local_out):
             shutil.rmtree(local_out)
         os.replace(os.path.join(local_root, "termstats.tmp"), local_out)
-    else:
-        # object stores have no rename; Spark's overwrite of an immutable
-        # stats prefix is the standard pattern there
-        stats.write.mode("overwrite").parquet(out)
 
     meta = {
         "n_docs": int(n_docs),

@@ -84,14 +84,8 @@ def delete_docs(reader, cond: Column) -> int:
 
 def deletes_map(reader) -> dict[str, np.ndarray]:
     """segment_id -> tombstoned ids, {} when the index has no deletes."""
-    if not has_deletes(reader.index_dir):
-        return {}
-    from pyarrow import fs as pafs
-
-    fsys, root = fsio.resolve(fsio.join(reader.index_dir, "deletes"))
     out: dict[str, np.ndarray] = {}
-    for info in fsys.get_file_info(pafs.FileSelector(root, recursive=False)):
-        name = info.path.rsplit("/", 1)[-1]
+    for name in fsio.list_dir(fsio.join(reader.index_dir, "deletes")):
         if name.startswith("segment_id="):
             seg = name[len("segment_id="):]
             out[seg] = read_deletes(reader.index_dir, seg)

@@ -6,11 +6,11 @@ segment files can live on file://, s3://, hdfs://, gs:// — executors write
 immutable segment parquet directly to the shared store, the driver reads
 footers/row-groups through the same handle.
 
-Spark-level reads/writes (termstats, merges, docs scans) pass the URI
-straight to Spark, whose Hadoop connectors resolve the scheme themselves;
-this module covers the pyarrow paths: deterministic segment writes, the
-manifest's reads and appends (index/manifest.py), and driver-side pruned
-reads.
+Spark-level reads/writes (termstats and merges above the driver gates,
+docs scans) pass the URI straight to Spark, whose Hadoop connectors resolve
+the scheme themselves; this module covers the pyarrow paths: deterministic
+segment writes, the manifest's reads and appends (index/manifest.py),
+driver-side merges and termstats republishes, and driver-side pruned reads.
 
 ``register(scheme, fs, strip)`` injects a custom FileSystem for tests
 (e.g. pyarrow's in-memory _MockFileSystem) or for pre-authenticated
@@ -87,6 +87,14 @@ def delete_dir(path: str) -> None:
     fs, p = resolve(path)
     if fs.get_file_info(p).type != pafs.FileType.NotFound:
         fs.delete_dir(p)
+
+
+def list_dir(path: str) -> list[str]:
+    """Names of the entries directly under ``path`` (empty if absent)."""
+    fs, p = resolve(path)
+    if fs.get_file_info(p).type == pafs.FileType.NotFound:
+        return []
+    return [i.base_name for i in fs.get_file_info(pafs.FileSelector(p))]
 
 
 def open_input(path: str):

@@ -11,6 +11,9 @@ the driver with pyarrow via ``fsio`` — no Spark job. Each append is one
 parquet file named by a hash of its rows, so a replayed append rewrites the
 same file. Older indexes hold Spark-written ``part-*`` files with the same
 schema in the same directory; both kinds are read together.
+
+Segment files are deleted here too (``retire``), once the manifest no
+longer lists them as active, like Lucene's IndexFileDeleter.
 """
 
 from __future__ import annotations
@@ -36,6 +39,8 @@ SCHEMA = pa.schema([
     ("checksum", pa.string()),
 ])
 SPARK_SCHEMA = from_arrow_schema(SCHEMA)  # the segment stage's output rows
+# the per-segment tables, each one ``<table>/segment_id=<id>/`` dir a segment
+SEGMENT_TABLES = ("postings", "docs", "norms", "segterms", "deletes")
 
 
 def _dir(index_dir: str) -> str:
@@ -75,3 +80,26 @@ def append(index_dir: str, rows: list[dict]) -> None:
     fsio.write_table_deterministic(
         tbl, fsio.join(_dir(index_dir), f"part-{digest}.parquet")
     )
+
+
+def retire(index_dir: str, segs) -> None:
+    """Delete every table dir of ``segs``. Routed through fsio so it works
+    on file:// / object-store URIs too: readers scan whole table dirs, so a
+    silently no-op'd local rmtree on a URI store would leave the old
+    segment files visible and double-count every doc."""
+    for sub in SEGMENT_TABLES:
+        for s in segs:
+            fsio.delete_dir(fsio.join(index_dir, sub, f"segment_id={s}"))
+
+
+def retire_superseded(index_dir: str, man: pd.DataFrame) -> None:
+    """Delete the dirs of superseded segments that are still on disk (a
+    merge that died between its commit and its retirement)."""
+    superseded = set(man.loc[man["status"] == "superseded", "segment_id"])
+    on_disk = {
+        name[len("segment_id="):]
+        for sub in SEGMENT_TABLES
+        for name in fsio.list_dir(fsio.join(index_dir, sub))
+        if name.startswith("segment_id=")
+    }
+    retire(index_dir, sorted(superseded & on_disk))

@@ -28,8 +28,20 @@ Spark-first design — two key departures from a naive "shuffle by term":
    slice, then stitched by block ordinal. Hierarchical and
    order-preserving; never a per-term single reducer.
 
+Where it runs: a rebase merge whose group holds at most
+``builder._DRIVER_POSTINGS_LIMIT`` (32 MB) of postings, by the manifest's
+``postings_bytes``, on a driver-readable store runs on the driver — pyarrow
+reads through ``fsio``, the ``_rebase`` kernel with the batched first-gap
+re-encode (``codec.shift_first``), one ``data.parquet`` per table — and
+launches no Spark job (the reference's cheap NRT merge,
+InternalEngine.java:814-893). Larger rebases and every repack run as Spark
+jobs; the mapInPandas rebase calls the same ``_rebase`` kernel. Segterms,
+norms and tombstones are merged with pyarrow on both paths.
+
 The manifest (active segments, merged row, supersede markers) is read and
-appended through index/manifest.py.
+appended through index/manifest.py. The merged row is committed before the
+inputs are deleted; ``tiered_merge`` and refresh builds delete superseded
+dirs a crash left.
 """
 
 from __future__ import annotations
@@ -42,21 +54,30 @@ import pandas as pd
 import pyarrow as pa
 from pyspark.sql import SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from elasticsearch_spark.index import deletes as _del
-from elasticsearch_spark.index import fsio, manifest
-from elasticsearch_spark.index.builder import _write_deterministic
-from elasticsearch_spark.index.codec import delta_decode, delta_encode, pack_u32, unpack_u32
+from elasticsearch_spark.index import builder, fsio, manifest
+from elasticsearch_spark.index.builder import (
+    POSTINGS_SCHEMA,
+    _write_deterministic,
+    sum_term_stats,
+)
+from elasticsearch_spark.index.codec import (
+    delta_decode,
+    delta_encode,
+    pack_u32,
+    shift_first,
+    unpack_u32,
+)
 
 MAX_MERGE_AT_ONCE = 10  # TieredMergePolicyProvider.java:39 default
 SALT_BUCKETS = 32  # repack tasks per hot term
+# merged postings row groups: about the 1 MB parquet.block.size the Spark
+# path writes with (the builder's 512-row groups slow post-merge scans)
+ROW_GROUP_BYTES = 1 << 20
 
-POSTINGS_SCHEMA = (
-    "term string, block_id long, n_docs int, first_doc long,"
-    " last_doc long, max_tf int,"
-    " min_dl_eff double, docs_packed binary, tfs_packed binary,"
-    " pos_packed binary"
-)
+SPARK_POSTINGS_SCHEMA = from_arrow_schema(POSTINGS_SCHEMA)
 
 
 def plan_merges(active: pd.DataFrame, fan_in: int = MAX_MERGE_AT_ONCE) -> list[list[str]]:
@@ -75,23 +96,71 @@ def _offsets(sizes: pd.Series, group: Sequence[str]) -> dict[str, int]:
     return out
 
 
-def merge_segments(
+def _seg_dir(index_dir: str, sub: str, seg: str) -> str:
+    return fsio.join(index_dir, sub, f"segment_id={seg}")
+
+
+def _read_group(index_dir: str, sub: str, group: Sequence[str]) -> pa.Table:
+    """The ``sub`` rows of every ``group`` segment in segment_id order, with
+    a segment_id column (pyarrow through fsio — no Spark job)."""
+    tables = []
+    for s in sorted(group):
+        t = fsio.dataset(_seg_dir(index_dir, sub, s), format="parquet").to_table()
+        tables.append(t.append_column("segment_id", pa.array([s] * t.num_rows, pa.string())))
+    return pa.concat_tables(tables, promote_options="permissive")
+
+
+def _rebase(pdf: pd.DataFrame, offsets: dict[str, int], ranks: dict[str, int]) -> pd.DataFrame:
+    """Move postings blocks into the merged id space: shift first/last doc
+    and the first gap by the segment's offset, and prefix the block ordinal
+    with the segment's rank. Gaps after the first, tfs and positions are
+    merge-invariant and pass through."""
+    off = pdf["segment_id"].map(offsets).to_numpy(np.int64)
+    rank = pdf["segment_id"].map(ranks).to_numpy(np.int64)
+    out = pdf.drop(columns=["segment_id"])
+    out["docs_packed"] = shift_first(pdf["docs_packed"].tolist(), pdf["n_docs"].to_numpy(), off)
+    out["block_id"] = rank * (1 << 32) + pdf["block_id"].to_numpy(np.int64)
+    out["first_doc"] = pdf["first_doc"].to_numpy(np.int64) + off
+    out["last_doc"] = pdf["last_doc"].to_numpy(np.int64) + off
+    return out
+
+
+def _merge_on_driver(
+    index_dir: str,
+    group: Sequence[str],
+    merged_name: str,
+    offsets: dict[str, int],
+    ranks: dict[str, int],
+) -> None:
+    """Rebase merge of postings and docs with pyarrow."""
+    posts = _rebase(_read_group(index_dir, "postings", group).to_pandas(), offsets, ranks)
+    posts = pa.Table.from_pandas(posts, schema=POSTINGS_SCHEMA, preserve_index=False)
+    posts = posts.sort_by([("term", "ascending"), ("block_id", "ascending")])
+    _write_deterministic(
+        posts, fsio.join(_seg_dir(index_dir, "postings", merged_name), "data.parquet"),
+        row_group_size=max(1, ROW_GROUP_BYTES * posts.num_rows // max(1, posts.nbytes)),
+    )
+
+    docs = _read_group(index_dir, "docs", group)
+    ids = docs["local_doc_id"].to_numpy() + docs["segment_id"].to_pandas().map(offsets).to_numpy()
+    docs = docs.set_column(
+        docs.schema.get_field_index("local_doc_id"), "local_doc_id", pa.array(ids, pa.int32())
+    ).drop_columns(["segment_id"])
+    _write_deterministic(docs, fsio.join(_seg_dir(index_dir, "docs", merged_name), "data.parquet"))
+
+
+def _merge_on_spark(
     spark: SparkSession,
     index_dir: str,
     group: Sequence[str],
     merged_name: str,
-    repack: bool = True,
-) -> dict:
-    """Merge ``group`` segments into one named ``merged_name``.
-
-    Returns the new manifest row (dict). Old segment dirs are deleted after
-    all new files are written (Lucene deletes merged segments the same way).
-    """
-    g = manifest.active(manifest.read(index_dir)).set_index("segment_id").loc[list(group)]
-    offsets = _offsets(g["docs_indexed"], group)
-    seg_rank = {s: i for i, s in enumerate(sorted(group))}
+    offsets: dict[str, int],
+    ranks: dict[str, int],
+    repack: bool,
+) -> None:
+    """Rebase or salted repack of postings, and docs, as Spark jobs."""
     b_off = spark.sparkContext.broadcast(offsets)
-    b_rank = spark.sparkContext.broadcast(seg_rank)
+    b_rank = spark.sparkContext.broadcast(ranks)
 
     posts = spark.read.parquet(fsio.join(index_dir, "postings")).where(
         F.col("segment_id").isin(list(group))
@@ -101,24 +170,9 @@ def merge_segments(
         # pure rebase: block-parallel, zero shuffle
         def rebase(batches):
             for pdf in batches:
-                if pdf.empty:
-                    continue
-                off = pdf["segment_id"].map(b_off.value).to_numpy(np.int64)
-                rank = pdf["segment_id"].map(b_rank.value).to_numpy(np.int64)
-                new_docs = []
-                for buf, nd, o in zip(pdf["docs_packed"], pdf["n_docs"], off):
-                    gaps = unpack_u32(buf, nd)
-                    gaps = gaps.copy()
-                    gaps[0] += o
-                    new_docs.append(pack_u32(gaps))
-                out = pdf.drop(columns=["segment_id"]).copy()
-                out["docs_packed"] = new_docs
-                out["block_id"] = rank * (1 << 32) + pdf["block_id"].to_numpy(np.int64)
-                out["first_doc"] = pdf["first_doc"].to_numpy(np.int64) + off
-                out["last_doc"] = pdf["last_doc"].to_numpy(np.int64) + off
-                # pos_packed: within-doc positions are merge-invariant — pass through
-                yield out
-        new_posts = posts.mapInPandas(rebase, POSTINGS_SCHEMA)
+                if not pdf.empty:
+                    yield _rebase(pdf, b_off.value, b_rank.value)
+        new_posts = posts.mapInPandas(rebase, SPARK_POSTINGS_SCHEMA)
     else:
         # salted repack: re-block to exactly block_size, parallel by
         # (term, salt); salt = run of source block ordinals → order-preserving
@@ -178,7 +232,7 @@ def merge_segments(
 
         # doc-ordered global block ordinal → contiguous salt runs per term
         rank_df = spark.createDataFrame(
-            [(s, r) for s, r in seg_rank.items()], "segment_id string, __rank long"
+            [(s, r) for s, r in ranks.items()], "segment_id string, __rank long"
         )
         ordered = posts.join(F.broadcast(rank_df), "segment_id").withColumn(
             "__ord", F.col("__rank") * F.lit(1 << 40) + F.col("first_doc").cast("long")
@@ -186,16 +240,15 @@ def merge_segments(
         w = Window.partitionBy("term").orderBy("__ord")
         salted = ordered.withColumn("salt", F.ntile(SALT_BUCKETS).over(w))
         new_posts = salted.groupBy("term", "salt").applyInPandas(
-            repack_fn, POSTINGS_SCHEMA
+            repack_fn, SPARK_POSTINGS_SCHEMA
         )
 
-    posts_out = fsio.join(index_dir, "postings", f"segment_id={merged_name}")
     # bounded parquet row groups so term-range stats stay useful for the
     # pruned driver-local reads after a merge (default 128 MB groups would
     # make the merged file one unprunable block)
     new_posts.write.mode("overwrite").option(
-        "parquet.block.size", 1 << 20
-    ).parquet(posts_out)
+        "parquet.block.size", ROW_GROUP_BYTES
+    ).parquet(_seg_dir(index_dir, "postings", merged_name))
 
     # docs: offset local ids, concatenate
     docs = spark.read.parquet(fsio.join(index_dir, "docs")).where(
@@ -209,16 +262,48 @@ def merge_segments(
         .withColumn("local_doc_id", (F.col("local_doc_id") + F.col("__off")).cast("int"))
         .drop("segment_id", "__off")
     )
-    docs_out = fsio.join(index_dir, "docs", f"segment_id={merged_name}")
-    new_docs.write.mode("overwrite").parquet(docs_out)
+    new_docs.write.mode("overwrite").parquet(_seg_dir(index_dir, "docs", merged_name))
+
+
+def merge_segments(
+    spark: SparkSession,
+    index_dir: str,
+    group: Sequence[str],
+    merged_name: str,
+    repack: bool = True,
+) -> dict:
+    """Merge ``group`` segments into one named ``merged_name``.
+
+    A rebase merge (``repack=False``) whose group holds at most
+    ``builder._DRIVER_POSTINGS_LIMIT`` of postings on a driver-readable
+    store runs on the driver with pyarrow and launches no Spark job; a
+    larger one, and every repack, runs as Spark jobs. Returns the new
+    manifest row (dict). The merged row is committed before the inputs'
+    dirs are deleted (Lucene deletes merged segments the same way).
+    """
+    g = manifest.active(manifest.read(index_dir)).set_index("segment_id").loc[list(group)]
+    offsets = _offsets(g["docs_indexed"], group)
+    ranks = {s: i for i, s in enumerate(sorted(group))}
+
+    # a rerun after a crash starts from empty dirs, as Spark's overwrite does
+    manifest.retire(index_dir, [merged_name])
+    postings_bytes = int(g["postings_bytes"].sum())
+    if not repack and builder._on_driver(
+        index_dir, postings_bytes, builder._DRIVER_POSTINGS_LIMIT
+    ):
+        _merge_on_driver(index_dir, group, merged_name, offsets, ranks)
+    else:
+        _merge_on_spark(spark, index_dir, group, merged_name, offsets, ranks, repack)
+
+    # segterms: additive merge; small next to the postings, so pyarrow on
+    # both paths
+    _write_deterministic(
+        sum_term_stats(_read_group(index_dir, "segterms", group)),
+        fsio.join(_seg_dir(index_dir, "segterms", merged_name), "data.parquet"),
+    )
 
     # norms: concatenate packed doc_len arrays in segment order (tiny)
-    norms = (
-        spark.read.parquet(fsio.join(index_dir, "norms"))
-        .where(F.col("segment_id").isin(list(group)))
-        .toPandas()
-        .sort_values("segment_id")
-    )
+    norms = _read_group(index_dir, "norms", group).to_pandas()
     merged_norm = pd.DataFrame(
         {
             "n_docs": [int(norms["n_docs"].sum())],
@@ -228,20 +313,8 @@ def merge_segments(
     )
     _write_deterministic(
         pa.Table.from_pandas(merged_norm, preserve_index=False),
-        fsio.join(index_dir, "norms", f"segment_id={merged_name}", "data.parquet"),
+        fsio.join(_seg_dir(index_dir, "norms", merged_name), "data.parquet"),
     )
-
-    # segterms: additive merge
-    segterms = spark.read.parquet(fsio.join(index_dir, "segterms")).where(
-        F.col("segment_id").isin(list(group))
-    )
-    new_st = segterms.groupBy("term").agg(
-        F.sum("df").alias("df"),
-        F.sum("ttf").alias("ttf"),
-        F.max("max_tf").alias("max_tf"),
-    )
-    st_out = fsio.join(index_dir, "segterms", f"segment_id={merged_name}")
-    new_st.write.mode("overwrite").parquet(st_out)
 
     # stats for manifest row
     row = {
@@ -249,8 +322,9 @@ def merge_segments(
         "segment_id": merged_name,
         "status": "committed",
         "docs_indexed": int(g["docs_indexed"].sum()),
-        "n_terms": fsio.dataset(st_out).count_rows(),  # footers, no job
-        "postings_bytes": int(g["postings_bytes"].sum()),
+        # footers, no job
+        "n_terms": fsio.dataset(_seg_dir(index_dir, "segterms", merged_name)).count_rows(),
+        "postings_bytes": postings_bytes,
         "sum_doc_len": int(g["sum_doc_len"].sum()),
         "merge_fan_in": len(group),
         "checksum": "",
@@ -266,22 +340,15 @@ def merge_segments(
     if merged_dels:
         _del.write_deletes(index_dir, merged_name, np.concatenate(merged_dels))
 
-    # retire inputs (physical delete, post-commit — the Lucene way).
-    # Routed through fsio so retirement works on file:// / object-store
-    # URIs too: IndexReader reads whole directories, so a silently
-    # no-op'd local rmtree on a URI store would leave the old segment
-    # files visible and double-count every doc.
-    for sub in ("postings", "docs", "norms", "segterms", "deletes"):
-        for s in group:
-            fsio.delete_dir(fsio.join(index_dir, sub, f"segment_id={s}"))
-
-    # manifest: append merged row + supersede markers
+    # commit (merged row + supersede markers), then retire the inputs; a
+    # crash in between leaves dirs that the next tiered_merge deletes
     sup = [
         {**row, "segment_id": s, "status": "superseded", "merge_fan_in": 0,
          "docs_indexed": 0, "n_terms": 0, "postings_bytes": 0, "sum_doc_len": 0}
         for s in group
     ]
     manifest.append(index_dir, [row] + sup)
+    manifest.retire(index_dir, group)
     return row
 
 
@@ -291,9 +358,14 @@ def tiered_merge(
     fan_in: int = MAX_MERGE_AT_ONCE,
     repack: bool = True,
 ) -> list[dict]:
-    """One tier pass: merge all active segments in groups of ≤ fan_in."""
+    """One tier pass: merge all active segments in groups of ≤ fan_in.
+
+    First deletes the dirs of superseded segments that are still on disk
+    (a merge that died between its commit and its retirement)."""
+    man = manifest.read(index_dir)
+    manifest.retire_superseded(index_dir, man)
     rows = []
-    for group in plan_merges(manifest.active(manifest.read(index_dir)), fan_in):
+    for group in plan_merges(manifest.active(man), fan_in):
         name = f"m-{min(group)}-{len(group):02d}"
         rows.append(merge_segments(spark, index_dir, group, name, repack=repack))
     return rows

@@ -16,8 +16,9 @@ translog analog — a replayed batch regenerates byte-identical segment files
 under the same names (deterministic build), so replay is idempotent.
 
 Segment-count growth is bounded the same way the reference bounds it: call
-``tiered_merge`` when the active-segment count passes ``merge_threshold``
-(TieredMergePolicy's segments_per_tier=10 default).
+``tiered_merge(..., repack=False)`` — the block rebase, which runs on the
+driver for small groups — when the active-segment count passes
+``merge_threshold`` (TieredMergePolicy's segments_per_tier=10 default).
 
 Cross-batch upserts of the same (conv_id, turn_idx) key are appended, not
 rewritten (the reference handles this with the per-shard versionMap; a
@@ -74,7 +75,7 @@ def incremental_index(
         )
         # bound segment growth like TieredMergePolicy (segments_per_tier=10)
         if built.n_segments > merge_threshold:
-            tiered_merge(spark, index_dir)
+            tiered_merge(spark, index_dir, repack=False)
         if on_batch is not None:
             on_batch(batch_id, n)
 

@@ -1,6 +1,7 @@
 import shutil
 import sys
 import os
+import uuid
 
 import pytest
 
@@ -21,3 +22,15 @@ def tmp_root(tmp_path_factory):
     p = tmp_path_factory.mktemp("es_spark")
     yield str(p)
     shutil.rmtree(str(p), ignore_errors=True)
+
+
+def count_jobs(spark, fn):
+    """(Spark jobs ``fn`` launches, its result), through a fresh job group."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out

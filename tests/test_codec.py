@@ -9,6 +9,7 @@ from elasticsearch_spark.index.codec import (
     delta_encode,
     pack_f32,
     pack_u32,
+    shift_first,
     unpack_f32,
     unpack_u32,
 )
@@ -50,3 +51,31 @@ def test_pack_u32_property(values):
 def test_delta_property(doc_set):
     docs = np.array(sorted(doc_set), dtype=np.uint32)
     assert np.array_equal(delta_decode(delta_encode(docs)), docs)
+
+
+def test_shift_first_matches_per_block_reencode():
+    """The batched merge re-encode is byte-identical to re-encoding each
+    block on its own, across widths 0..32, single-value blocks and blocks
+    whose width grows once the first gap is shifted."""
+    rng = np.random.default_rng(5)
+    bufs, ns, shifts = [], [], []
+    for i in range(3000):
+        n = int(rng.choice([1, 2, 7, 128, int(rng.integers(1, 129))]))
+        w = int(rng.integers(0, 33))
+        v = rng.integers(0, 1 << w, n, dtype=np.uint64).astype(np.uint32) if w else np.zeros(n, np.uint32)
+        if w == 32:
+            v[-1] = (1 << 32) - 1
+        bufs.append(pack_u32(v))
+        ns.append(n)
+        # zero, small, and width-growing shifts (kept below 2^32 overall)
+        room = (1 << 32) - 1 - int(v[0])
+        shifts.append(min(room, int(rng.choice([0, 1, 1 << int(rng.integers(0, 31))]))))
+    want = []
+    for buf, n, s in zip(bufs, ns, shifts):
+        g = unpack_u32(buf, n).copy()
+        g[0] += s
+        want.append(pack_u32(g))
+    assert shift_first(bufs, ns, shifts) == want
+    grew = sum(b[0] > a[0] for a, b in zip(bufs, want))
+    assert grew > 100 and any(b[0] == 0 for b in want) and any(b[0] == 32 for b in want)
+    assert any(n == 1 for n in ns)

@@ -10,7 +10,6 @@ by the nullable ``tool`` column (Not, IN, IS NULL, Coalesce, Kleene and/or).
 
 import datetime
 import glob
-import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -24,6 +23,8 @@ from elasticsearch_spark.index.aliases import alias_filter, put_alias
 from elasticsearch_spark.ops import filters as fl
 from elasticsearch_spark.query import executor, search_topk
 from elasticsearch_spark.query.msearch import msearch_topk
+
+from conftest import count_jobs
 
 _UTC = datetime.timezone.utc
 
@@ -129,23 +130,11 @@ def test_filter_zoo_local_equals_spark(reader, monkeypatch):
     assert via_alias
 
 
-def _jobs(spark, fn) -> int:
-    """Spark jobs ``fn`` launches, counted through a fresh job group."""
-    sc = spark.sparkContext
-    group = f"filter-sets-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "job count")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_translated_filters_launch_no_job(spark, reader):
     cond = (F.col("role") == "assistant") & fl.range_("ts", gte=datetime.datetime(2025, 1, 1, 2))
     search_topk(reader, "tok0003", filter_cond=cond).collect()  # warm the reader views
-    assert _jobs(spark, lambda: search_topk(reader, "tok0003 timeout", k=10,
-                                            filter_cond=cond)) == 0
+    assert count_jobs(spark, lambda: search_topk(reader, "tok0003 timeout", k=10,
+                                                 filter_cond=cond))[0] == 0
     roles = ["user", "assistant", "tool", "system", None]
     specs = [
         {"query_text": f"tok{i:04d} timeout", "k": 5,
@@ -153,12 +142,12 @@ def test_translated_filters_launch_no_job(spark, reader):
          else (F.col("role") == roles[i % 5]) & (F.col("turn_idx") >= i % 4)}
         for i in range(25)
     ]
-    n = _jobs(spark, lambda: msearch_topk(reader, specs))
+    n, _ = count_jobs(spark, lambda: msearch_topk(reader, specs))
     assert n == 0
     assert msearch_topk(reader, specs).collect() == msearch_topk(
         reader, specs, mode="spark").collect()
     must_not = fl.bool_(must=[F.col("role") == "user"], must_not=[F.col("tool") == "search"])
-    assert _jobs(spark, lambda: search_topk(reader, "tok0003 timeout", k=10,
-                                            filter_cond=must_not)) == 0
+    assert count_jobs(spark, lambda: search_topk(reader, "tok0003 timeout", k=10,
+                                                 filter_cond=must_not))[0] == 0
     rlike = F.col("role").rlike("^ass")
-    assert _jobs(spark, lambda: search_topk(reader, "tok0003", filter_cond=rlike)) >= 1
+    assert count_jobs(spark, lambda: search_topk(reader, "tok0003", filter_cond=rlike))[0] >= 1

@@ -7,7 +7,6 @@ files; those must stay readable beside the new pyarrow-written appends.
 """
 
 import shutil
-import uuid
 
 import pytest
 from pyarrow import fs as pafs
@@ -19,6 +18,8 @@ from elasticsearch_spark.index import IndexReader, build_index, fsio, manifest
 from elasticsearch_spark.index.merge import plan_merges, tiered_merge
 from elasticsearch_spark.index.snapshot import restore, snapshot
 from elasticsearch_spark.query import search_topk
+
+from conftest import count_jobs
 
 CFG = IndexConfig(stored_cols=("role",), n_partitions=3)
 QUERIES = ["error timeout", "tok0001 tok0002", "retry"]
@@ -38,18 +39,6 @@ def batches(spark):
     b = spark.createDataFrame(corpus[~first])
     a.count(), b.count()
     return a, b
-
-
-def _jobs(spark, fn):
-    """(Spark jobs ``fn`` launches, its result), through a fresh job group."""
-    sc = spark.sparkContext
-    group = f"manifest-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "job count")
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group)), out
 
 
 def _results(reader):
@@ -103,14 +92,14 @@ def test_manifest_io_launches_no_job(spark, batches, tmp_root):
     idx = f"{tmp_root}/manifest_jobs"
     build_index(spark, a, idx, CFG, segment_prefix="b000000-")
 
-    n, man = _jobs(spark, lambda: manifest.read(idx))
+    n, man = count_jobs(spark, lambda: manifest.read(idx))
     assert n == 0 and len(manifest.active(man)) == len(man) > 0
-    n, snap = _jobs(spark, lambda: snapshot(spark, idx, f"{tmp_root}/manifest_jobs_snap"))
+    n, snap = count_jobs(spark, lambda: snapshot(spark, idx, f"{tmp_root}/manifest_jobs_snap"))
     assert n == 0 and snap["segments"] == sorted(man["segment_id"])
 
     scratch = f"{tmp_root}/manifest_jobs_scratch"
     rows = man.head(2).to_dict("records")
-    n, _ = _jobs(spark, lambda: manifest.append(scratch, rows))
+    n, _ = count_jobs(spark, lambda: manifest.append(scratch, rows))
     assert n == 0
     # a replayed append rewrites the same file
     manifest.append(scratch, rows)
@@ -121,13 +110,13 @@ def test_manifest_io_launches_no_job(spark, batches, tmp_root):
 
     # a refresh: the segment stage and the termstats rewrite, nothing else
     # (eleven jobs when three manifest reads and the append went through Spark)
-    n, built = _jobs(spark, lambda: build_index(spark, b, idx, CFG, segment_prefix="b000001-"))
+    n, built = count_jobs(spark, lambda: build_index(spark, b, idx, CFG, segment_prefix="b000001-"))
     assert n <= 6, n
     assert built.n_segments == len(manifest.active(manifest.read(idx)))
     # a merge pass with nothing to merge launches nothing
     single = f"{tmp_root}/manifest_jobs_single"
     build_index(spark, a, single, IndexConfig(stored_cols=("role",), n_partitions=1))
-    n, merged = _jobs(spark, lambda: tiered_merge(spark, single))
+    n, merged = count_jobs(spark, lambda: tiered_merge(spark, single))
     assert n == 0 and merged == []
 
 
