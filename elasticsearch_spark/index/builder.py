@@ -50,6 +50,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampType
 
 from elasticsearch_spark.analysis.analyzers import analyze_codes
 from elasticsearch_spark.config import IndexConfig
@@ -131,8 +132,10 @@ def _flush_segment(
     cfg: IndexConfig,
     index_dir: str,
     segment_prefix: str = "",
+    utc_cols: frozenset = frozenset(),
 ) -> dict:
-    """Build one immutable segment from the pandas rows of one pid chunk."""
+    """Build one immutable segment from the pandas rows of one pid chunk.
+    ``utc_cols``: TIMESTAMP columns, handed over as epoch micros."""
     pdf = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
     seg = f"{segment_prefix}{pid:05d}-{seq:03d}"
     n_docs = len(pdf)
@@ -251,7 +254,9 @@ def _flush_segment(
     }
     for c in (*cfg.key_cols, *cfg.stored_cols):
         arr = pa.Array.from_pandas(pdf[c])
-        if pa.types.is_timestamp(arr.type) and arr.type.unit == "ns":
+        if c in utc_cols:  # stored UTC-adjusted: Spark reads it as TIMESTAMP
+            arr = arr.cast(pa.int64()).cast(pa.timestamp("us", tz="UTC"))
+        elif pa.types.is_timestamp(arr.type) and arr.type.unit == "ns":
             # Spark cannot read TIMESTAMP(NANOS) parquet
             arr = arr.cast(pa.timestamp("us", tz=arr.type.tz))
         doc_cols[c] = arr
@@ -295,7 +300,7 @@ def _flush_segment(
 
 
 def _make_build_fn(cfg: IndexConfig, index_dir: str, max_docs_per_segment: int,
-                   segment_prefix: str = ""):
+                   segment_prefix: str = "", utc_cols: frozenset = frozenset()):
     def build_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         rows: list[dict] = []
         cur_pid: int | None = None
@@ -307,7 +312,8 @@ def _make_build_fn(cfg: IndexConfig, index_dir: str, max_docs_per_segment: int,
             nonlocal buf, buf_docs, seq
             if buf_docs:
                 rows.append(
-                    _flush_segment(cur_pid, seq, buf, cfg, index_dir, segment_prefix)
+                    _flush_segment(cur_pid, seq, buf, cfg, index_dir, segment_prefix,
+                                   utc_cols)
                 )
                 seq += 1
             buf, buf_docs = [], 0
@@ -397,7 +403,17 @@ def build_index(
             cfg.n_partitions, *[F.col(c) for c in cfg.routing_cols()]
         ).sortWithinPartitions(PID_COL, *cfg.key_cols)
     )
-    build_fn = _make_build_fn(cfg, index_dir, max_docs_per_segment, segment_prefix)
+    # a TIMESTAMP column reaches the segment task as epoch micros: pandas
+    # would hand it over as session-local wall time, and the segment would
+    # store it tz-naive (Spark: TIMESTAMP_NTZ)
+    utc_cols = frozenset(
+        f.name for f in df.schema.fields
+        if f.name in (*cfg.key_cols, *cfg.stored_cols)
+        and isinstance(f.dataType, TimestampType)
+    )
+    shaped = shaped.withColumns({c: F.unix_micros(c) for c in utc_cols})
+    build_fn = _make_build_fn(cfg, index_dir, max_docs_per_segment, segment_prefix,
+                              utc_cols)
     segments = shaped.mapInPandas(build_fn, schema=manifest.SPARK_SCHEMA)
 
     # Pin the segment stage at exactly n_partitions tasks. When an upstream

@@ -262,7 +262,15 @@ def _merge_on_spark(
         .withColumn("local_doc_id", (F.col("local_doc_id") + F.col("__off")).cast("int"))
         .drop("segment_id", "__off")
     )
-    new_docs.write.mode("overwrite").parquet(_seg_dir(index_dir, "docs", merged_name))
+    # TIMESTAMP columns as UTC-adjusted micros, as the builder and the driver
+    # merge write them (pyarrow reads Spark's default INT96 as naive nanos)
+    key = "spark.sql.parquet.outputTimestampType"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "TIMESTAMP_MICROS")
+    try:
+        new_docs.write.mode("overwrite").parquet(_seg_dir(index_dir, "docs", merged_name))
+    finally:
+        spark.conf.set(key, prev)
 
 
 def merge_segments(

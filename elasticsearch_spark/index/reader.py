@@ -7,7 +7,7 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 
 from elasticsearch_spark.config import AnalyzerConfig, BM25Params, IndexConfig
-from elasticsearch_spark.index import fsio
+from elasticsearch_spark.index import fsio, manifest
 
 
 class IndexReader:
@@ -38,23 +38,30 @@ class IndexReader:
         return self.meta["avgdl"]
 
     def _read(self, sub: str) -> DataFrame:
-        # memoize the lazy view: repeated queries reuse one analyzed plan
-        # (and its parquet footer/file-listing work) instead of re-listing
-        if not hasattr(self, "_views"):
-            self._views: dict[str, DataFrame] = {}
-        if sub not in self._views:
-            self._views[sub] = self.spark.read.parquet(
-                fsio.join(self.index_dir, sub)
-            )
-        return self._views[sub]
+        # memoize the lazy view per layout: repeated queries reuse one
+        # analyzed plan (and its parquet footer/file-listing work); a
+        # segment table is restricted to the active segments
+        _, active, cache = self._layout()
+        key = ("view", sub)
+        if key not in cache:
+            df = self.spark.read.parquet(fsio.join(self.index_dir, sub))
+            if active is not None and sub in manifest.SEGMENT_TABLES:
+                from pyspark.sql import functions as F
 
-    # -- driver-local read caches (the query-path fixed costs) -------------
-    # pyarrow dataset discovery + the norms table are per-QUERY constants of
-    # the local execution path; cache them per index LAYOUT. The freshness
-    # token is the max mtime of the postings/norms directories — segment
-    # adds/removes (builds, tiered merges) touch those directories, so a
-    # layout change invalidates the cache; file:// only (object-store reads
-    # take the uncached path).
+                df = df.where(F.col("segment_id").isin(active))
+            cache[key] = df
+        return cache[key]
+
+    # -- the layout: active segments and the read caches built on them -----
+    # Readers see only the manifest's active segments: between a merge's
+    # commit and the deletion of its inputs (or after a crash there) the
+    # superseded segments' files are still on disk. pyarrow dataset
+    # discovery, the norms table and the Spark views are per-QUERY
+    # constants; all are cached per index LAYOUT. The freshness token is
+    # the max mtime of the postings/norms/manifest directories — segment
+    # adds/removes (builds, tiered merges) and commits touch those, so a
+    # layout change re-reads the active set and drops the caches; file://
+    # only (an object store's layout is read once per reader).
 
     def _local_layout_token(self):
         import os
@@ -62,44 +69,53 @@ class IndexReader:
         if "://" in self.index_dir and not self.index_dir.startswith("file://"):
             return None
         root = self.index_dir.replace("file://", "")
-        try:
-            return max(
-                os.path.getmtime(os.path.join(root, sub))
-                for sub in ("postings", "norms")
-            )
-        except OSError:
-            return None
+        mtimes = []
+        for sub in ("postings", "norms", "manifest"):
+            try:
+                mtimes.append(os.path.getmtime(os.path.join(root, sub)))
+            except OSError:
+                if sub != "manifest":  # an index may predate its manifest
+                    return None
+        return max(mtimes)
+
+    def _layout(self):
+        """(token, active segment ids or None = every segment dir, per-layout
+        cache dict) — re-read when the token changes."""
+        token = self._local_layout_token()
+        cached = getattr(self, "_layout_cache", None)
+        if cached is None or (token is not None and cached[0] != token):
+            ids = manifest.active(manifest.read(self.index_dir))["segment_id"]
+            cached = (token, ids.tolist() or None, {})
+            self._layout_cache = cached
+        return cached
 
     def local_dataset(self, sub: str):
-        """Cached pyarrow dataset for ``sub`` (None = take the uncached path)."""
-        token = self._local_layout_token()
-        if token is None:
-            return None
-        cache = getattr(self, "_local_ds", None)
-        if cache is None or cache[0] != token:
-            cache = (token, {})
-            self._local_ds = cache
-        if sub not in cache[1]:
-            cache[1][sub] = fsio.dataset(
-                fsio.join(self.index_dir, sub), partitioning="hive"
-            )
-        return cache[1][sub]
+        """pyarrow dataset of ``sub`` over the active segments: cached per
+        layout on file:// stores, a fresh discovery on other driver-readable
+        stores."""
+        token, active, cache = self._layout()
+        key = ("dataset", sub)
+        if token is None or key not in cache:
+            import pyarrow.dataset as ds
+
+            dset = fsio.dataset(fsio.join(self.index_dir, sub), partitioning="hive")
+            if active is not None:
+                dset = dset.filter(ds.field("segment_id").isin(active))
+            if token is None:
+                return dset
+            cache[key] = dset
+        return cache[key]
 
     def local_norms(self):
         """Cached norms pandas frame (segment_id as str), or None."""
-        token = self._local_layout_token()
+        token, _, cache = self._layout()
         if token is None:
             return None
-        cached = getattr(self, "_local_norms", None)
-        if cached is None or cached[0] != token:
-            ds = self.local_dataset("norms")
-            if ds is None:
-                return None
-            norms = ds.to_table().to_pandas()
+        if "norms" not in cache:
+            norms = self.local_dataset("norms").to_table().to_pandas()
             norms["segment_id"] = norms["segment_id"].astype(str)
-            cached = (token, norms)
-            self._local_norms = cached
-        return cached[1]
+            cache["norms"] = norms
+        return cache["norms"]
 
     def cache_views(self) -> "IndexReader":
         """Pin the hot search structures in executor memory — the analog of

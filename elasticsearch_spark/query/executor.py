@@ -25,8 +25,11 @@ QUERY_THEN_FETCH with DFS statistics (SURVEY.md §3.1):
                 cached pyarrow docs dataset, or one broadcast join for large
                 or non-driver-readable fetches
                 (search/fetch/FetchPhase.java:103-157);
-  materialize = (score DESC, key ASC) order, <= k rows per query, one
-                DataFrame (query_id kept for msearch only).
+  materialize = (score DESC, key ASC) order, <= k rows per query, held on
+                the driver as one Arrow table (query_id kept for msearch
+                only) inside a DataFrame (HeldResult): collect, toPandas and
+                count answer from it, and the JVM plan is built only on
+                demand, by a use that needs it.
 
 Scale notes: postings are pruned by ``term IN (...)`` predicate pushdown
 (row-group stats; postings files are term-sorted), per-segment norm arrays
@@ -56,6 +59,13 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.classic.dataframe import DataFrame as _ClassicDataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (
+    BooleanType, ByteType, DateType, DoubleType, FloatType, IntegerType,
+    LongType, ShortType, StringType, StructField, StructType, TimestampNTZType,
+    TimestampType,
+)
 
 from elasticsearch_spark.analysis.analyzers import tokenize_text
 from elasticsearch_spark.index import fsio
@@ -262,7 +272,7 @@ def _local_filter_sets(reader: IndexReader, filters: list[Column],
         return []
     import pyarrow.dataset as ds
 
-    dset = _local_ds(reader, "docs")
+    dset = reader.local_dataset("docs")
     proj = (
         reader.docs()
         .select(*[fc.alias(f"__f{i}") for i, fc in enumerate(filters)])
@@ -1123,7 +1133,7 @@ def _local_search(reader, plan: _Plan, extra_cols, query_id=False):
     import pyarrow.dataset as ds
 
     try:
-        tbl = _local_ds(reader, "postings").to_table(
+        tbl = reader.local_dataset("postings").to_table(
             filter=ds.field("term").isin(plan.terms),
             columns=[*plan.columns, "segment_id"],
         )
@@ -1133,7 +1143,7 @@ def _local_search(reader, plan: _Plan, extra_cols, query_id=False):
         post["segment_id"] = post["segment_id"].astype(str)
         norms = reader.local_norms()
         if norms is None:
-            norms = _local_ds(reader, "norms").to_table(
+            norms = reader.local_dataset("norms").to_table(
                 filter=ds.field("segment_id").isin(post["segment_id"].unique())
             ).to_pandas()
         fsets = _local_filter_sets(reader, plan.filters, post["segment_id"].unique())
@@ -1251,10 +1261,78 @@ def _finish(reader, plan: _Plan, cand: pd.DataFrame, extra_cols, query_id):
     )
     out = out[out.groupby("query_id").cumcount() < out["query_id"].map(k_of)]
     cols = [*key_cols, *extra_cols, "score"]
-    return reader.spark.createDataFrame(
+    schema = _result_schema(reader, extra_cols, query_id)
+    return HeldResult(reader.spark, pa.Table.from_pandas(
         out[["query_id", *cols] if query_id else cols],
-        schema=_result_schema(reader, extra_cols, query_id),
-    )
+        schema=to_arrow_schema(schema), preserve_index=False,
+    ), schema)
+
+
+class HeldResult(_ClassicDataFrame):
+    """A top-k result held on the driver as an Arrow table, typed by its
+    Spark schema — still a ``DataFrame``.
+
+    Every answer is a few rows the driver already holds, so ``collect``,
+    ``take``/``head``/``first``, ``count``, ``isEmpty``, ``schema``/``columns``
+    and ``toPandas``/``toArrow`` answer from the table with no JVM round
+    trip. They convert exactly as Spark does: rows through the schema's own
+    ``fromInternal`` (what Spark's ``collect`` applies to the pickled JVM
+    rows), pandas/Arrow through pyspark's Arrow ``toPandas``/``toArrow`` fed
+    these batches. Any other use (``orderBy``, ``join``, ``explain``,
+    ``cache``, ...) reads ``_jdf``, which builds the JVM plan once, as a
+    local relation of the held rows — the search never runs again."""
+
+    def __new__(cls, *args, **kwargs):
+        return object.__new__(cls)
+
+    def __init__(self, spark, table: pa.Table, schema: StructType) -> None:
+        self._session, self._sc = spark, spark.sparkContext
+        self.is_cached = False
+        self._support_repr_html = False
+        self._table = table
+        self.__dict__["schema"] = schema  # the parent's cached_property slot
+
+    @functools.cached_property
+    def _jdf(self):
+        return self._session.createDataFrame(self._table, self.schema)._jdf
+
+    def collect(self) -> list:
+        types = [f.dataType for f in self.schema.fields]
+        if not all(isinstance(t, _HELD_ROW_TYPES) for t in types):
+            return super().collect()
+        cols = []
+        for col, t in zip(self._table.columns, types):
+            # Spark's internal value: epoch micros / days, else the value
+            if isinstance(t, (TimestampType, TimestampNTZType)):
+                col = col.cast(pa.int64())
+            elif isinstance(t, DateType):
+                col = col.cast(pa.int32())
+            cols.append(col.to_pylist())
+        return [self.schema.fromInternal(v) for v in zip(*cols)]
+
+    def take(self, num: int) -> list:
+        return self.collect()[:num] if num >= 0 else super().take(num)
+
+    def count(self) -> int:
+        return self._table.num_rows
+
+    def isEmpty(self) -> bool:
+        return self._table.num_rows == 0
+
+    def _collect_as_arrow(self, split_batches: bool = False,
+                          empty_list_if_zero_records: bool = True) -> list:
+        if self._table.num_rows == 0:
+            return [] if empty_list_if_zero_records else [
+                pa.RecordBatch.from_pylist([], schema=self._table.schema)]
+        return self._table.combine_chunks().to_batches()
+
+
+# column types whose Python value HeldResult.collect builds; any other type
+# (binary, decimal, nested, ...) is collected through the JVM plan
+_HELD_ROW_TYPES = (
+    StringType, BooleanType, ByteType, ShortType, IntegerType, LongType,
+    FloatType, DoubleType, DateType, TimestampType, TimestampNTZType,
+)
 
 
 def _fetch(reader, winners: pd.DataFrame, extra_cols) -> pd.DataFrame:
@@ -1280,7 +1358,7 @@ def _fetch(reader, winners: pd.DataFrame, extra_cols) -> pd.DataFrame:
             & ds.field("local_doc_id").isin(ids.tolist())
             for seg, ids in ids_by_seg.items()
         ])
-        docs = _local_ds(reader, "docs").to_table(filter=cond, columns=cols).to_pandas()
+        docs = reader.local_dataset("docs").to_table(filter=cond, columns=cols).to_pandas()
         docs["segment_id"] = docs["segment_id"].astype(str)
     else:
         pairs = reader.spark.createDataFrame(
@@ -1292,25 +1370,14 @@ def _fetch(reader, winners: pd.DataFrame, extra_cols) -> pd.DataFrame:
             .where(F.col("segment_id").isin(list(ids_by_seg.index)))  # pruned
             .join(F.broadcast(pairs), ["segment_id", "local_doc_id"])
             .select(*cols)
-            .toPandas()
+            .toArrow()  # tz-aware, unlike toPandas' session-local wall time
+            .to_pandas()
         )
     return winners.merge(docs, on=["segment_id", "local_doc_id"])
 
 
-def _local_ds(reader, sub: str):
-    """pyarrow dataset of an index table: the reader's layout-cached one,
-    else a fresh discovery (driver-readable non-file:// stores)."""
-    cached = reader.local_dataset(sub)
-    if cached is not None:
-        return cached
-    return fsio.dataset(fsio.join(reader.index_dir, sub), partitioning="hive")
-
-
 def _result_schema(reader: IndexReader, extra_cols, query_id: bool = False):
-    """Result schema (query_id?, key_cols, extra_cols, score); _empty_result
-    builds the same columns."""
-    from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
-
+    """Result schema (query_id?, key_cols, extra_cols, score)."""
     doc_fields = {f.name: f for f in reader.docs().schema.fields}
     return StructType(
         ([StructField("query_id", IntegerType())] if query_id else [])
@@ -1321,12 +1388,9 @@ def _result_schema(reader: IndexReader, extra_cols, query_id: bool = False):
 
 def _empty_result(reader: IndexReader, extra_cols: Iterable[str] = (),
                   query_id: bool = False) -> DataFrame:
-    """No hits, with exactly the schema a non-empty result has — as a
-    pruned empty scan, so collecting it runs no job."""
-    cols = [*reader.cfg.key_cols, *extra_cols, F.lit(None).cast("double").alias("score")]
-    if query_id:
-        cols.insert(0, F.lit(None).cast("int").alias("query_id"))
-    return reader.docs().select(*cols).where(F.lit(False))
+    """No hits, held with exactly the schema a non-empty result has."""
+    schema = _result_schema(reader, list(extra_cols), query_id)
+    return HeldResult(reader.spark, to_arrow_schema(schema).empty_table(), schema)
 
 
 def _n_segments(reader: IndexReader) -> int:

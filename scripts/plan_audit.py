@@ -7,6 +7,7 @@ Checks, via .explain output (no job execution):
   - small-dim joins: BroadcastHashJoin, not SortMergeJoin
   - hot paths sit inside WholeStageCodegen spans
   - online BM25: one shuffle per aggregation level, no cartesian products
+  - a held top-k result: chained use plans a local relation, no re-scan
 Run: python scripts/plan_audit.py [sf_dir]  → prints PASS/FAIL lines.
 """
 
@@ -341,6 +342,18 @@ def main() -> None:
     if hatched != base:
         FAILS.append(("search_bounded_gather", "hatched results differ from base"))
         print("FAIL  search_bounded_gather (hatched results differ)")
+
+    # 16. held top-k result (query/executor.py HeldResult): the plan a
+    #     chained query builds from it is a local relation of the held
+    #     rows — no postings or docs scan, so explain() or a chained query
+    #     never runs the search again.
+    held = _exec.search_topk(reader, "data merge", k=5).orderBy("score")
+    check(
+        "held_result_local_plan",
+        plan_of(held),
+        must=["LocalTableScan"],
+        must_not=["Scan parquet", "FlatMapCoGroupsInPandas"],
+    )
 
     print()
     if FAILS:

@@ -41,8 +41,8 @@ def reader(spark, tmp_root):
     )
     path = f"{tmp_root}/filter_sets_idx"
     build_index(spark, spark.createDataFrame(corpus), path, cfg)
-    # the builder stores timestamps tz-naive (Spark: timestamp_ntz); make
-    # ts_tz a UTC-adjusted, tz-aware column, which Spark reads as `timestamp`
+    # the builder stores TIMESTAMP columns UTC-adjusted; annotate ts_tz with
+    # another zone, which Spark still reads as `timestamp`
     for f in glob.glob(f"{path}/docs/*/*.parquet"):
         tbl = pq.read_table(f)
         i = tbl.schema.get_field_index("ts_tz")

@@ -152,6 +152,27 @@ def test_a_crash_before_retirement_leaves_a_clean_index(spark, base, tmp_root, m
     assert _answers(spark, idx) == _answers(spark, clean) == _answers(spark, base)
 
 
+def test_readers_see_only_the_active_segments_after_a_crashed_merge(spark, base, tmp_root, monkeypatch):
+    """Until the leftovers are deleted, the superseded segments' files stay
+    on disk beside the merged one; both runners read the active set only,
+    also through a reader opened before the crash."""
+    clean = _copy(base, f"{tmp_root}/merge_paths_active_clean")
+    tiered_merge(spark, clean, repack=False)
+    idx = _copy(base, f"{tmp_root}/merge_paths_active_crash")
+    before = IndexReader(spark, idx)
+    search_topk(before, QUERIES[0], k=10, mode="local").collect()  # layout cached
+    _crash_a_merge(spark, idx, monkeypatch)
+    for reader in (IndexReader(spark, idx), before):
+        assert reader.docs().count() == reader.n_docs
+        for q in QUERIES:
+            local, on_spark, want = (
+                [(r["conv_id"], r["turn_idx"], round(r["score"], 10))
+                 for r in search_topk(rd, q, k=10, mode=m).collect()]
+                for rd, m in ((reader, "local"), (reader, "spark"),
+                              (IndexReader(spark, clean), "auto")))
+            assert local == on_spark == want, q
+
+
 def test_a_refresh_after_a_crashed_merge_counts_each_doc_once(spark, base, tmp_root, monkeypatch):
     """A refresh build deletes the dirs the crash left before it republishes
     termstats, so whole-directory readers see every doc once."""
