@@ -117,6 +117,21 @@ class IndexReader:
             cache["norms"] = norms
         return cache["norms"]
 
+    def docs_schema(self):
+        """The doc table's Spark schema. On a driver-readable store it is the
+        cached pyarrow dataset's schema typed as Spark reads the parquet
+        (a tz-naive timestamp is TIMESTAMP_NTZ), so no JVM call is made;
+        else, or for a type Arrow cannot map, the Spark view's."""
+        if fsio.driver_readable(self.index_dir):
+            from pyspark.sql.pandas.types import from_arrow_schema
+
+            try:
+                return from_arrow_schema(self.local_dataset("docs").schema,
+                                         prefer_timestamp_ntz=True)
+            except TypeError:
+                pass
+        return self.docs().schema
+
     def cache_views(self) -> "IndexReader":
         """Pin the hot search structures in executor memory — the analog of
         the reference's filesystem/fielddata caches (index/cache/). Call once

@@ -1378,7 +1378,7 @@ def _fetch(reader, winners: pd.DataFrame, extra_cols) -> pd.DataFrame:
 
 def _result_schema(reader: IndexReader, extra_cols, query_id: bool = False):
     """Result schema (query_id?, key_cols, extra_cols, score)."""
-    doc_fields = {f.name: f for f in reader.docs().schema.fields}
+    doc_fields = {f.name: f for f in reader.docs_schema().fields}
     return StructType(
         ([StructField("query_id", IntegerType())] if query_id else [])
         + [doc_fields[c] for c in [*reader.cfg.key_cols, *extra_cols]]

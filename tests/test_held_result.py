@@ -137,7 +137,10 @@ def _no_round_trip(spark, monkeypatch, fn):
 
 
 def test_collected_searches_launch_no_job(spark, reader, monkeypatch):
-    search_topk(reader, "error", k=10).collect()  # layout caches warm
+    # warm the layout caches, and the Spark docs view that filter
+    # translation plans against: a reader's first filtered query builds it,
+    # and Spark's parquet schema inference is one job
+    search_topk(reader, "error", k=10, filter_cond=F.col("role") == "user").collect()
     words = ["error", "timeout", "retry", "tok0001", "tok0002", "tok0003"]
     batch = [{"query_text": f"{words[i % 6]} {words[(i + 1) % 6]}",
               "filter_cond": (F.col("role") == "assistant") if i % 3 == 0 else None}
@@ -177,6 +180,7 @@ def test_timestamp_columns_are_stored_utc_adjusted(spark, reader, tmp_root, monk
                 r = IndexReader(spark, idx)
                 assert isinstance(r.docs().schema["ts"].dataType, TimestampType)
                 assert isinstance(r.docs().schema["ts_ntz"].dataType, TimestampNTZType)
+                assert r.docs_schema() == r.docs().schema
                 got = sorted(r.docs().select("conv_id", "turn_idx", "ts").collect())
                 assert got == want, (limit, merged)
     finally:
