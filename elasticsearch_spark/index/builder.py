@@ -47,6 +47,7 @@ from dataclasses import asdict, dataclass
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -56,7 +57,7 @@ from elasticsearch_spark.analysis.analyzers import analyze_codes
 from elasticsearch_spark.config import IndexConfig
 from elasticsearch_spark.functions.smallfloat import effective_doc_length
 from elasticsearch_spark.index import fsio, manifest
-from elasticsearch_spark.index.codec import delta_encode, pack_u32
+from elasticsearch_spark.index.codec import pack_blocks
 
 PID_COL = "__pid"
 # Index maintenance runs on the driver with pyarrow, and launches no Spark
@@ -72,6 +73,13 @@ _DRIVER_POSTINGS_LIMIT = 32 << 20
 #   driver was faster at every size measured (0.2 s vs 1.4 s at 4M rows,
 #   0.8 s vs 3.6 s at 16M); this caps the driver's memory, ~70 B a row.
 _DRIVER_SEGTERMS_LIMIT = 4_000_000
+# - the segment stage of a build, by Catalyst's size estimate of its input
+#   (``_plan_bytes``: a local relation of transcripts counts 100 B a row, a
+#   parquet scan its file bytes, an RDD-backed frame never fits). A refresh
+#   of n turns on an 8,500-turn index took 0.34 s on the driver vs 0.78 s
+#   in Spark at 700 turns, 0.74 vs 0.89 s at 4,000 and 1.47 vs 1.11 s at
+#   8,500 (they tie near 5,400); the gate sits at ~4,000 rows.
+_DRIVER_BUILD_BYTES = 400_000
 
 POSTINGS_SCHEMA = pa.schema([
     ("term", pa.string()),
@@ -191,53 +199,42 @@ def _flush_segment(
         else np.array([], dtype=object)
     )
 
+    # blocks of ``block_size`` entries within each term, then every block's
+    # metadata and packed streams at once (reduceat + codec.pack_blocks)
     bs = cfg.block_size
-    with_pos = cfg.index_positions
-    p_term, p_block, p_ndocs, p_firstdoc, p_lastdoc = [], [], [], [], []
-    p_maxtf, p_mindl, p_docs, p_tfs, p_pos = [], [], [], [], []
-    st_df, st_ttf, st_maxtf = [], [], []
-    postings_bytes = 0
-    h = hashlib.sha256()
-    for ti in range(len(uniq_terms)):
-        s, e = term_starts[ti], term_ends[ti]
-        tdocs = docs_arr[s:e]
-        ttfs = tfs_arr[s:e]
-        st_df.append(e - s)
-        st_ttf.append(int(ttfs.sum()))
-        st_maxtf.append(int(ttfs.max()))
-        for b0 in range(0, len(tdocs), bs):
-            b1 = min(b0 + bs, len(tdocs))
-            bdocs = tdocs[b0:b1]
-            btfs = ttfs[b0:b1]
-            packed_d = pack_u32(delta_encode(bdocs))
-            packed_t = pack_u32(btfs)
-            p_term.append(uniq_terms[ti])
-            p_block.append(b0 // bs)
-            p_ndocs.append(len(bdocs))
-            p_firstdoc.append(int(bdocs[0]))
-            p_lastdoc.append(int(bdocs[-1]))
-            p_maxtf.append(int(btfs.max()))
-            p_mindl.append(float(dl_eff[bdocs].min()))
-            p_docs.append(packed_d)
-            p_tfs.append(packed_t)
-            if with_pos:
-                # flat per-doc delta positions for the block's entries
-                flo = entry_off[s + b0]
-                fhi = gends[s + b1 - 1]
-                packed_p = pack_u32(pos_delta[flo:fhi])
-                p_pos.append(packed_p)
-                postings_bytes += len(packed_p)
-                h.update(packed_p)
-            else:
-                p_pos.append(None)
-            postings_bytes += len(packed_d) + len(packed_t)
-            h.update(packed_d)
-            h.update(packed_t)
+    st_df = term_ends - term_starts
+    within = np.arange(len(docs_arr)) - np.repeat(term_starts, st_df)
+    blk = np.flatnonzero(within % bs == 0)  # each block's first entry
+    blk_last = np.append(blk[1:], len(docs_arr)) - 1
+    gaps = docs_arr.copy()  # delta_encode per block: its first id absolute
+    gaps[1:] -= docs_arr[:-1]
+    gaps[blk] = docs_arr[blk]
+    streams = [pack_blocks(gaps, blk), pack_blocks(tfs_arr, blk)]
+    if cfg.index_positions:  # a block's positions: its entries' flat range
+        streams.insert(0, pack_blocks(pos_delta, entry_off[blk]))
+    packed = [_binary(off, data) for off, data in streams]
+    postings_bytes = sum(len(data) for _, data in streams)
+    # the checksum runs over every block's (positions |) docs | tfs bytes
+    nb = len(blk)
+    mixed = pa.concat_arrays(packed).take(
+        (np.arange(len(packed)) * nb + np.arange(nb)[:, None]).ravel()
+    )
+    h = hashlib.sha256(_binary_data(mixed))
 
     seg_dir = lambda sub: fsio.join(index_dir, sub, f"segment_id={seg}", "data.parquet")  # noqa: E731
     postings_tbl = pa.Table.from_arrays(
-        [p_term, p_block, p_ndocs, p_firstdoc, p_lastdoc, p_maxtf, p_mindl,
-         p_docs, p_tfs, p_pos],
+        [
+            uniq_terms[np.repeat(np.arange(len(uniq_terms)), st_df)[blk]],
+            within[blk] // bs,
+            blk_last - blk + 1,
+            docs_arr[blk],
+            docs_arr[blk_last],
+            _reduceat(np.maximum, tfs_arr, blk),
+            _reduceat(np.minimum, dl_eff[docs_arr], blk),
+            packed[-2],
+            packed[-1],
+            packed[0] if cfg.index_positions else pa.nulls(nb, pa.binary()),
+        ],
         schema=POSTINGS_SCHEMA,
     )
     # small row groups on the term-sorted postings: parquet min/max stats
@@ -280,8 +277,8 @@ def _flush_segment(
         {
             "term": pa.array(uniq_terms, pa.string()),
             "df": pa.array(st_df, pa.int64()),
-            "ttf": pa.array(st_ttf, pa.int64()),
-            "max_tf": pa.array(st_maxtf, pa.int32()),
+            "ttf": pa.array(_reduceat(np.add, tfs_arr.astype(np.int64), term_starts)),
+            "max_tf": pa.array(_reduceat(np.maximum, tfs_arr, term_starts), pa.int32()),
         }
     )
     _write_deterministic(segterms_tbl, seg_dir("segterms"))
@@ -297,6 +294,29 @@ def _flush_segment(
         "merge_fan_in": 1,
         "checksum": h.hexdigest(),
     }
+
+
+def _reduceat(ufunc, values: np.ndarray, starts: np.ndarray) -> np.ndarray:
+    """``ufunc`` over each run ``values[starts[i]:starts[i + 1]]``."""
+    return ufunc.reduceat(values, starts) if len(starts) else values[:0]
+
+
+def _binary(offsets: np.ndarray, data: np.ndarray) -> pa.Array:
+    if len(data) >= 1 << 31:
+        raise OverflowError("a segment's packed stream exceeds 2 GiB; lower max_docs_per_segment")
+    return pa.Array.from_buffers(
+        pa.binary(), len(offsets) - 1,
+        [None, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(data)],
+    )
+
+
+def _binary_data(arr: pa.Array) -> memoryview:
+    """The value bytes of a binary array, in order."""
+    _, offsets, data = arr.buffers()
+    if data is None:
+        return memoryview(b"")
+    offsets = np.frombuffer(offsets, np.int32, len(arr) + 1, arr.offset * 4)
+    return memoryview(data)[offsets[0] : offsets[-1]]
 
 
 def _make_build_fn(cfg: IndexConfig, index_dir: str, max_docs_per_segment: int,
@@ -356,6 +376,104 @@ def dedup_latest(df: DataFrame, cfg: IndexConfig) -> DataFrame:
     )
 
 
+def _plan_bytes(df: DataFrame) -> int:
+    """Catalyst's size estimate of ``df`` (its optimized plan's
+    ``sizeInBytes``), read without a Spark job: a local relation reports its
+    rows × the schema's default row width, a file scan its file bytes, an
+    RDD-backed frame Long.MaxValue."""
+    jdf = getattr(df, "_jdf", None)
+    if jdf is None:  # Spark Connect: no plan statistics on the client
+        return 1 << 63
+    return int(str(jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+
+
+def _segments_on_spark(spark, df, cfg, pid, keep, utc_cols, build_fn) -> list[dict]:
+    """The segment stage as Spark tasks: keep-latest window, one routing
+    shuffle, ``build_fn`` over each partition (one pid) in mapInPandas."""
+    df = dedup_latest(df, cfg).withColumn(PID_COL, pid).where(keep)
+    shaped = (
+        df.repartition(
+            cfg.n_partitions, *[F.col(c) for c in cfg.routing_cols()]
+        ).sortWithinPartitions(PID_COL, *cfg.key_cols)
+    )
+    shaped = shaped.withColumns({c: F.unix_micros(c) for c in utc_cols})
+    segments = shaped.mapInPandas(build_fn, schema=manifest.SPARK_SCHEMA)
+
+    # Pin the segment stage at exactly n_partitions tasks. When an upstream
+    # op (e.g. the dedup_latest window) already hash-partitions on the
+    # routing columns, Catalyst elides the explicit repartition as redundant
+    # — one shuffle total, pid still == partition index — but the surviving
+    # exchange is AQE-coalescible: measured 64 partitions merged into 5
+    # tasks of 13 pids each (300 MB / 64 MB advisory), which packs terribly
+    # across cores (5 tasks on 4 cores = a half-idle second wave). Segment
+    # parallelism is an explicit layout choice; never let AQE resize it.
+    coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev_coalesce = spark.conf.get(coalesce_key, "true")
+    spark.conf.set(coalesce_key, "false")
+    try:
+        # small: one row per segment
+        return [r.asDict() for r in segments.collect()]
+    finally:
+        spark.conf.set(coalesce_key, prev_coalesce)
+
+
+def _segments_on_driver(spark, df, cfg, pid, keep, utc_cols, build_fn) -> list[dict]:
+    """The segment stage in this process, writing the files the Spark stage
+    writes: one ``toArrow()`` of the needed columns (pid computed by Spark,
+    TIMESTAMP columns as epoch micros), keep-latest dedup and the (pid, keys)
+    sort in pyarrow — no window, no shuffle — then ``build_fn`` over each
+    pid's rows in the batches a mapInPandas task would get, so
+    ``max_docs_per_segment`` splits fall where Spark's do. The gate keeps
+    inputs far below ``spark.sql.execution.arrow.maxBytesPerBatch``."""
+    by = cfg.dedup_latest_by
+    cols = dict.fromkeys([*cfg.key_cols, *cfg.stored_cols, cfg.text_col, *([by] if by else [])])
+    tbl = (
+        df.select(pid.alias(PID_COL),
+                  *[F.unix_micros(c).alias(c) if c in utc_cols else F.col(c) for c in cols])
+        .where(keep)
+        .toArrow()
+        .combine_chunks()
+    )
+    keys = [(c, "ascending") for c in cfg.key_cols]
+    if by:
+        # dedup_latest: the first row of each key ordered by ``by`` DESC
+        # NULLS LAST (the null flag sorts non-null versions first)
+        tbl = tbl.append_column("__by_null", pc.is_null(tbl[by]))
+        order = pc.sort_indices(tbl, keys + [("__by_null", "ascending"), (by, "descending")])
+        tbl = tbl.take(order).drop_columns(["__by_null"])
+        tbl = tbl.filter(_key_changes(tbl, cfg.key_cols))
+    # sortWithinPartitions(pid, *keys): ascending, nulls first
+    tbl = tbl.take(pc.sort_indices(tbl, [(PID_COL, "ascending"), *keys],
+                                   null_placement="at_start"))
+    per_batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    pids = tbl[PID_COL].to_numpy()
+    bounds = [0, *(np.flatnonzero(np.diff(pids)) + 1).tolist(), len(pids)]
+
+    def batches() -> Iterator[pd.DataFrame]:
+        for s, e in zip(bounds[:-1], bounds[1:]):
+            step = per_batch if per_batch > 0 else e - s
+            for c in range(s, e, step):
+                # as Spark's Arrow-to-pandas serializer converts them
+                yield tbl.slice(c, min(step, e - c)).to_pandas(
+                    date_as_object=True, coerce_temporal_nanoseconds=True)
+
+    out = next(build_fn(batches()))
+    return pa.Table.from_pandas(out, schema=manifest.SCHEMA, preserve_index=False).to_pylist()
+
+
+def _key_changes(tbl: pa.Table, cols) -> np.ndarray:
+    """Rows whose ``cols`` differ from the previous row's (nulls equal)."""
+    n = tbl.num_rows
+    change = np.zeros(n, dtype=bool)
+    change[:1] = True
+    for c in cols:
+        a, b = tbl[c][1:], tbl[c][:-1]
+        ne = pc.or_(pc.fill_null(pc.not_equal(a, b), False),
+                    pc.not_equal(pc.is_null(a), pc.is_null(b)))
+        change[1:] |= ne.to_numpy(zero_copy_only=False)
+    return change
+
+
 def build_index(
     spark: SparkSession,
     df: DataFrame,
@@ -376,34 +494,26 @@ def build_index(
     """
     cfg = cfg or IndexConfig()
     fsio.makedirs(index_dir)
+    on_driver = _on_driver(index_dir, _plan_bytes(df), _DRIVER_BUILD_BYTES)
 
-    df = dedup_latest(df, cfg)
     # F.hash is Murmur3(seed 42) — the SAME function HashPartitioning uses,
     # so pid == the physical partition index under repartition(n, *cols).
     # Routing through a precomputed pid column instead (repartition(n, pid))
     # re-hashes the pid VALUE and collides distinct pids balls-in-bins:
     # measured 3 pids (39k rows) in one task vs the 13k average at n=64.
-    df = df.withColumn(
-        PID_COL,
-        F.pmod(
-            F.hash(*[F.col(c) for c in cfg.routing_cols()]),
-            F.lit(cfg.n_partitions),
-        ).cast("int"),
-    )
-
+    pid = F.pmod(
+        F.hash(*[F.col(c) for c in cfg.routing_cols()]),
+        F.lit(cfg.n_partitions),
+    ).cast("int")
     committed = manifest.committed(manifest.read(index_dir))
     skip = set(committed["partition_id"]) if resume else set()
+    keep = F.lit(True)
     if skip:
-        df = df.where(~F.col(PID_COL).isin(sorted(skip)))
+        keep &= ~F.col(PID_COL).isin(sorted(skip))
     if only_pids is not None:
-        df = df.where(F.col(PID_COL).isin(sorted(only_pids)))
+        keep &= F.col(PID_COL).isin(sorted(only_pids))
 
-    shaped = (
-        df.repartition(
-            cfg.n_partitions, *[F.col(c) for c in cfg.routing_cols()]
-        ).sortWithinPartitions(PID_COL, *cfg.key_cols)
-    )
-    # a TIMESTAMP column reaches the segment task as epoch micros: pandas
+    # a TIMESTAMP column reaches the segment kernel as epoch micros: pandas
     # would hand it over as session-local wall time, and the segment would
     # store it tz-naive (Spark: TIMESTAMP_NTZ)
     utc_cols = frozenset(
@@ -411,27 +521,10 @@ def build_index(
         if f.name in (*cfg.key_cols, *cfg.stored_cols)
         and isinstance(f.dataType, TimestampType)
     )
-    shaped = shaped.withColumns({c: F.unix_micros(c) for c in utc_cols})
     build_fn = _make_build_fn(cfg, index_dir, max_docs_per_segment, segment_prefix,
                               utc_cols)
-    segments = shaped.mapInPandas(build_fn, schema=manifest.SPARK_SCHEMA)
-
-    # Pin the segment stage at exactly n_partitions tasks. When an upstream
-    # op (e.g. the dedup_latest window) already hash-partitions on the
-    # routing columns, Catalyst elides the explicit repartition as redundant
-    # — one shuffle total, pid still == partition index — but the surviving
-    # exchange is AQE-coalescible: measured 64 partitions merged into 5
-    # tasks of 13 pids each (300 MB / 64 MB advisory), which packs terribly
-    # across cores (5 tasks on 4 cores = a half-idle second wave). Segment
-    # parallelism is an explicit layout choice; never let AQE resize it.
-    coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
-    prev_coalesce = spark.conf.get(coalesce_key, "true")
-    spark.conf.set(coalesce_key, "false")
-    try:
-        # small: one row per segment
-        manifest_rows = [r.asDict() for r in segments.collect()]
-    finally:
-        spark.conf.set(coalesce_key, prev_coalesce)
+    stage = _segments_on_driver if on_driver else _segments_on_spark
+    manifest_rows = stage(spark, df, cfg, pid, keep, utc_cols, build_fn)
 
     # commit (translog/commit-point analog). Replay-idempotent: a re-run
     # batch (e.g. foreachBatch failure recovery) rewrites byte-identical

@@ -8,8 +8,9 @@ layout idea — per (term, block): delta-gap docIDs bit-packed at the block's
 minimal bit width, tfs likewise, plus block-max metadata (max_tf, min
 effective doc length) used by block-max WAND pruning at query time.
 
-All pack/unpack paths are pure numpy (unpackbits/packbits) — no Python loops
-over values.
+All pack/unpack paths are pure numpy (unpackbits/packbits, or shifts) — no
+Python loops over values; ``pack_blocks`` packs a whole segment's stream of
+blocks without a loop over blocks either.
 """
 
 from __future__ import annotations
@@ -78,6 +79,70 @@ def shift_first(bufs: list[bytes], n_docs: np.ndarray, shifts: np.ndarray) -> li
             for w2, sub in _groups(new_w):
                 for i, b in zip(idx[sub], _pack_rows(vals[sub], w2)):
                     out[i] = b
+    return out
+
+
+_PASS_VALUES = 1 << 20  # values per pack_blocks pass (bounds its temporaries)
+
+
+def pack_blocks(values: np.ndarray, starts: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """``pack_u32`` of every block ``values[starts[i]:starts[i + 1]]`` (the
+    last block runs to the end; blocks are non-empty), byte for byte, as the
+    int64 offsets and uint8 data buffers of one binary array. Blocks are
+    packed per bit width w, eight values to a row of w bytes with shifts, in
+    passes of ≤ ~1M values; no value is expanded to a row of bits."""
+    v = np.ascontiguousarray(values, dtype=np.uint32)
+    starts = np.asarray(starts, dtype=np.int64)
+    if not len(starts):
+        return np.zeros(1, dtype=np.int64), np.zeros(0, dtype=np.uint8)
+    n = np.diff(starts, append=len(v))
+    widths = np.frexp(np.maximum.reduceat(v, starts).astype(np.float64))[1]  # bit length
+    body = (n * widths + 7) // 8
+    rows = (n + 7) // 8  # rows of eight values, the last one zero-padded
+    # each block first gets header + all its rows' bytes; the tail of its
+    # last row past ``body`` (zeros) is cut out at the end
+    span = np.zeros(len(starts) + 1, dtype=np.int64)
+    np.cumsum(1 + rows * widths, out=span[1:])
+    buf = np.zeros(int(span[-1]), dtype=np.uint8)
+    buf[span[:-1]] = widths
+    passes = np.cumsum(n) // _PASS_VALUES
+    for p in np.unique(passes).tolist():
+        blocks = np.flatnonzero(passes == p)
+        b0, b1 = int(blocks[0]), int(blocks[-1]) + 1
+        lo, hi = int(starts[b0]), int(starts[b1]) if b1 < len(starts) else len(v)
+        row0 = np.cumsum(rows[b0:b1]) - rows[b0:b1]
+        padded = np.zeros((int(rows[b0:b1].sum()), 8), dtype=np.uint64)
+        dst = np.arange(hi - lo) + np.repeat(8 * row0 - (starts[b0:b1] - lo), n[b0:b1])
+        padded.ravel()[dst] = v[lo:hi]
+        del dst
+        row_block = np.repeat(np.arange(b0, b1), rows[b0:b1])
+        row_in_block = np.arange(len(padded)) - np.repeat(row0, rows[b0:b1])
+        for w, sel in _groups(widths[row_block]):
+            if w:
+                at = span[row_block[sel]] + 1 + row_in_block[sel] * w
+                buf[at[:, None] + np.arange(w)] = _pack_rows8(padded[sel], w)
+    cut = np.zeros(len(buf) + 1, dtype=np.int8)
+    cut[span[:-1] + 1 + body] += 1
+    cut[span[1:]] -= 1
+    offsets = np.zeros(len(starts) + 1, dtype=np.int64)
+    np.cumsum(1 + body, out=offsets[1:])
+    return offsets, buf[np.cumsum(cut[:-1], dtype=np.int8) == 0]
+
+
+def _pack_rows8(rows: np.ndarray, w: int) -> np.ndarray:
+    """(R, 8) values of bit width ≤ w → (R, w) bytes: the rows' big-endian
+    w-bit streams, built with shifts through a ≤ 40-bit accumulator."""
+    out = np.empty((len(rows), w), dtype=np.uint8)
+    acc = np.zeros(len(rows), dtype=np.uint64)
+    nbits = b = 0
+    for i in range(8):
+        acc = (acc << np.uint64(w)) | rows[:, i]
+        nbits += w
+        while nbits >= 8:
+            nbits -= 8
+            out[:, b] = acc >> np.uint64(nbits)  # low 8 bits
+            b += 1
+        acc &= np.uint64((1 << nbits) - 1)
     return out
 
 

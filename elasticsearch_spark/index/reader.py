@@ -44,7 +44,9 @@ class IndexReader:
         _, active, cache = self._layout()
         key = ("view", sub)
         if key not in cache:
-            df = self.spark.read.parquet(fsio.join(self.index_dir, sub))
+            schema = self._known_schema(sub)
+            read = self.spark.read if schema is None else self.spark.read.schema(schema)
+            df = read.parquet(fsio.join(self.index_dir, sub))
             if active is not None and sub in manifest.SEGMENT_TABLES:
                 from pyspark.sql import functions as F
 
@@ -117,20 +119,25 @@ class IndexReader:
             cache["norms"] = norms
         return cache["norms"]
 
-    def docs_schema(self):
-        """The doc table's Spark schema. On a driver-readable store it is the
-        cached pyarrow dataset's schema typed as Spark reads the parquet
-        (a tz-naive timestamp is TIMESTAMP_NTZ), so no JVM call is made;
-        else, or for a type Arrow cannot map, the Spark view's."""
-        if fsio.driver_readable(self.index_dir):
-            from pyspark.sql.pandas.types import from_arrow_schema
+    def _known_schema(self, sub: str):
+        """A segment table's Spark schema, without Spark's schema-inference
+        job: on a driver-readable store, the cached pyarrow dataset's schema
+        typed as Spark reads the parquet (a tz-naive timestamp is
+        TIMESTAMP_NTZ). None elsewhere, or for a type Arrow cannot map."""
+        if sub not in manifest.SEGMENT_TABLES or not fsio.driver_readable(self.index_dir):
+            return None
+        from pyspark.sql.pandas.types import from_arrow_schema
 
-            try:
-                return from_arrow_schema(self.local_dataset("docs").schema,
-                                         prefer_timestamp_ntz=True)
-            except TypeError:
-                pass
-        return self.docs().schema
+        try:
+            return from_arrow_schema(self.local_dataset(sub).schema,
+                                     prefer_timestamp_ntz=True)
+        except TypeError:
+            return None
+
+    def docs_schema(self):
+        """The doc table's Spark schema; no JVM call on a driver-readable
+        store."""
+        return self._known_schema("docs") or self.docs().schema
 
     def cache_views(self) -> "IndexReader":
         """Pin the hot search structures in executor memory — the analog of

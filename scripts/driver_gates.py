@@ -1,10 +1,11 @@
 """Where the driver gates of index maintenance sit (BENCH.md "Driver gates").
 
-Times a rebase merge (``builder._DRIVER_POSTINGS_LIMIT``) or a termstats
-republish (``builder._DRIVER_SEGTERMS_LIMIT``) on the driver and as Spark
-jobs, with the gate forced above the input or to 0, and reports wall time
-and memory: the driver process's VmHWM and the peak growth of the RSS
-summed over the driver, the Spark JVM and its Python workers.
+Times a rebase merge (``builder._DRIVER_POSTINGS_LIMIT``), a termstats
+republish (``builder._DRIVER_SEGTERMS_LIMIT``) or a refresh build's segment
+stage (``builder._DRIVER_BUILD_BYTES``) on the driver and as Spark jobs,
+with the gate forced above the input or to 0, and reports wall time and
+memory: the driver process's VmHWM and the peak growth of the RSS summed
+over the driver, the Spark JVM and its Python workers.
 
 Usage (each ``run`` in a fresh process, one at a time):
 
@@ -12,11 +13,15 @@ Usage (each ``run`` in a fresh process, one at a time):
     python scripts/driver_gates.py prep    <base> <dir> <postings_mb>
     python scripts/driver_gates.py prep_st <base> <dir> <m>
     python scripts/driver_gates.py run     <dir> merge|termstats driver|spark
+    python scripts/driver_gates.py run     <base> build driver|spark <n_turns>
 
 ``prep`` copies the base index's segments under new ids until the copies
 hold ~postings_mb of postings (one merge group); ``prep_st`` writes a
 segterms-only index of 40 segments, each holding m suffixed copies of a
-base segment's vocabulary with its hapaxes new in every segment.
+base segment's vocabulary with its hapaxes new in every segment. ``build``
+lands one benchmark-shaped micro-batch of n_turns on a copy of the base
+index (``build_index(..., segment_prefix=...)``, termstats republish
+included), the refresh of perfbench's ``ingest_refresh``.
 """
 
 from __future__ import annotations
@@ -31,6 +36,7 @@ import time
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path[:0] = [ROOT, os.path.join(ROOT, "perfbench")]
 
+import pandas as pd  # noqa: E402
 import pyarrow as pa  # noqa: E402
 import pyarrow.compute as pc  # noqa: E402
 import pyarrow.parquet as pq  # noqa: E402
@@ -120,11 +126,17 @@ def _tree_rss() -> int:
     return procmon.rss_bytes(me) + sum(procmon.rss_bytes(p) for p in procmon.descendants(me))
 
 
-def run(d: str, op: str, path: str, reps: int = 3) -> None:
+def run(d: str, op: str, path: str, n_turns: str = "0", reps: int = 3) -> None:
     spark = get_spark(cores=CORES, shuffle_partitions=CORES)
     spark.sparkContext.setLogLevel("ERROR")
     limit = (1 << 62) if path == "driver" else 0
-    builder._DRIVER_POSTINGS_LIMIT = builder._DRIVER_SEGTERMS_LIMIT = limit
+    if op == "build":  # the refresh's other steps keep their own gates
+        builder._DRIVER_BUILD_BYTES = limit
+        reps = 5
+        batch = inputs.ingest_batch(7, 1, int(n_turns), pd.Timestamp("2031-01-01")).frame
+        batch_df = spark.createDataFrame(batch)
+    else:
+        builder._DRIVER_POSTINGS_LIMIT = builder._DRIVER_SEGTERMS_LIMIT = limit
     act = manifest.active(manifest.read(d))
     group = act["segment_id"].tolist()
     meta = json.load(open(os.path.join(d, "meta.json")))
@@ -133,11 +145,15 @@ def run(d: str, op: str, path: str, reps: int = 3) -> None:
     work = d + ".work"
 
     def once() -> float:
-        if op == "merge":
+        if op in ("merge", "build"):
             shutil.rmtree(work, ignore_errors=True)
             shutil.copytree(d, work)
             t = time.perf_counter()
-            merge.merge_segments(spark, work, group, "m-gate", repack=False)
+            if op == "merge":
+                merge.merge_segments(spark, work, group, "m-gate", repack=False)
+            else:
+                build_index(spark, batch_df, work, workloads.index_config(CORES),
+                            segment_prefix="b000001-")
         else:
             t = time.perf_counter()
             builder._write_global_stats(
@@ -163,7 +179,7 @@ def run(d: str, op: str, path: str, reps: int = 3) -> None:
         growth.append((peak[0] - tree0) / 2**20)
     shutil.rmtree(work, ignore_errors=True)
     print(json.dumps({
-        "op": op, "path": path, "segments": len(group),
+        "op": op, "path": path, "segments": len(group), "turns": int(n_turns),
         "postings_mb": round(act["postings_bytes"].sum() / 2**20, 1),
         "segterms_rows": int(act["n_terms"].sum()),
         "median_s": round(sorted(walls)[reps // 2], 3),

@@ -5,8 +5,9 @@
 
 The SparkSession comes from spark-submit (cluster manager decides executors);
 this script only declares the job. With "synthetic:N" as input it builds the
-deterministic transcript corpus (driver-side, seed 42) — used by the N-vs-4N
-scaling evidence when no real table exists.
+deterministic transcript corpus (driver-side, seed 42) as an RDD-backed
+frame — used by the N-vs-4N scaling evidence when no real table exists; the
+build always runs its segment stage as Spark tasks.
 """
 
 from __future__ import annotations
@@ -30,9 +31,13 @@ def main() -> None:
     if src.startswith("synthetic:"):
         from elasticsearch_spark.fixtures import generate_transcripts
 
-        df = spark.createDataFrame(
+        local = spark.createDataFrame(
             generate_transcripts(n_convs=int(src.split(":")[1]), seed=42)
         )
+        # as an RDD, like rows from a distributed source: Catalyst cannot
+        # size it, so the build runs its segment stage as Spark tasks (a
+        # small local relation would be built on the driver)
+        df = spark.createDataFrame(local.rdd, local.schema)
     else:
         df = spark.read.parquet(src)
 

@@ -7,6 +7,7 @@ from hypothesis import strategies as st
 from elasticsearch_spark.index.codec import (
     delta_decode,
     delta_encode,
+    pack_blocks,
     pack_f32,
     pack_u32,
     shift_first,
@@ -79,3 +80,61 @@ def test_shift_first_matches_per_block_reencode():
     grew = sum(b[0] > a[0] for a, b in zip(bufs, want))
     assert grew > 100 and any(b[0] == 0 for b in want) and any(b[0] == 32 for b in want)
     assert any(n == 1 for n in ns)
+
+
+def _stream_blocks(rng, n_blocks):
+    """(values, starts) of ``n_blocks`` random blocks: widths 0..32, sizes
+    1, 2, 7, 128 or random, each block's width reached by one value."""
+    vals, starts = [], []
+    at = 0
+    for _ in range(n_blocks):
+        n = int(rng.choice([1, 2, 7, 128, int(rng.integers(1, 129))]))
+        w = int(rng.integers(0, 33))
+        v = rng.integers(0, 1 << w, n, dtype=np.uint64).astype(np.uint32) if w else np.zeros(n, np.uint32)
+        if w:
+            v[rng.integers(0, n)] |= np.uint32(1 << (w - 1))
+        vals.append(v)
+        starts.append(at)
+        at += n
+    return np.concatenate(vals), np.array(starts, dtype=np.int64)
+
+
+def test_pack_blocks_matches_per_block_pack_u32(monkeypatch):
+    """One pass over a stream of blocks gives each block's ``pack_u32``
+    bytes, also when the passes that bound its memory cut the stream."""
+    import elasticsearch_spark.index.codec as codec
+
+    rng = np.random.default_rng(9)
+    values, starts = _stream_blocks(rng, 2000)
+    ends = np.append(starts[1:], len(values))
+    want = [pack_u32(values[s:e]) for s, e in zip(starts, ends)]
+    widths = {b[0] for b in want}
+    assert widths == set(range(33))
+    assert any(e - s == 1 for s, e in zip(starts, ends))
+    for per_pass in (1 << 20, 300, 1):
+        monkeypatch.setattr(codec, "_PASS_VALUES", per_pass)
+        offsets, data = pack_blocks(values, starts)
+        got = [data[a:b].tobytes() for a, b in zip(offsets[:-1], offsets[1:])]
+        assert got == want, per_pass
+        assert offsets[-1] == len(data)
+
+
+def test_pack_blocks_edge_streams():
+    """A lone value, all-zero and full-width blocks, a term's several
+    blocks back to back, and no block at all."""
+    cases = [
+        ([5], [0]),
+        ([0, 0, 0], [0]),
+        ([(1 << 32) - 1, 0, 1], [0]),
+        (list(range(300)), [0, 128, 256]),  # one term, three blocks
+        ([0] * 128 + [1], [0, 128]),  # w = 0 then a single w = 1 value
+    ]
+    for values, starts in cases:
+        v = np.array(values, dtype=np.uint32)
+        bounds = [*starts, len(v)]
+        offsets, data = pack_blocks(v, np.array(starts))
+        assert [data[a:b].tobytes() for a, b in zip(offsets[:-1], offsets[1:])] == [
+            pack_u32(v[s:e]) for s, e in zip(bounds[:-1], bounds[1:])
+        ], values
+    offsets, data = pack_blocks(np.zeros(0, np.uint32), np.zeros(0, np.int64))
+    assert offsets.tolist() == [0] and len(data) == 0

@@ -137,10 +137,6 @@ def _no_round_trip(spark, monkeypatch, fn):
 
 
 def test_collected_searches_launch_no_job(spark, reader, monkeypatch):
-    # warm the layout caches, and the Spark docs view that filter
-    # translation plans against: a reader's first filtered query builds it,
-    # and Spark's parquet schema inference is one job
-    search_topk(reader, "error", k=10, filter_cond=F.col("role") == "user").collect()
     words = ["error", "timeout", "retry", "tok0001", "tok0002", "tok0003"]
     batch = [{"query_text": f"{words[i % 6]} {words[(i + 1) % 6]}",
               "filter_cond": (F.col("role") == "assistant") if i % 3 == 0 else None}
@@ -156,6 +152,17 @@ def test_collected_searches_launch_no_job(spark, reader, monkeypatch):
         n, created, rows = _no_round_trip(spark, monkeypatch, fn)
         assert (n, created) == (0, 0), name
         assert bool(rows) == (name != "absent_term"), name
+
+
+def test_a_fresh_readers_first_filtered_search_launches_no_job(spark, reader):
+    """Filter translation plans against the Spark docs view, which a reader
+    builds on its first filtered query; on a driver-readable store it is
+    read with the known schema, so Spark runs no schema-inference job."""
+    fresh = IndexReader(spark, reader.index_dir)
+    n, rows = count_jobs(spark, lambda: search_topk(
+        fresh, "error timeout", k=10, filter_cond=F.col("role") == "assistant").collect())
+    assert n == 0 and rows
+    assert fresh.docs().schema == spark.read.parquet(f"{reader.index_dir}/docs").schema
 
 
 # -- TIMESTAMP stored columns ------------------------------------------------
