@@ -26,6 +26,14 @@ Here:
     index/manifest.py — the translog/commit-point analog. Resume skips
     committed pids.
 
+A small input (Catalyst's size estimate ≤ ``_DRIVER_BUILD_BYTES``, e.g. an
+NRT refresh batch) on a driver-readable store skips the shuffles: one
+``toArrow()``, keep-latest dedup and the (pid, keys) sort in pyarrow, and
+the same segment kernel run on the driver over the batches a task would
+get — the same files, byte for byte, with at most one Spark job. The
+kernel encodes a segment's blocks as arrays (``codec.pack_blocks``), with
+no loop over terms or blocks.
+
 Scale notes (100 TB design): the only full-data shuffle is the routing
 repartition. Segment construction is memory-bounded via
 ``max_docs_per_segment`` flushes. Global term statistics (DFS semantics,
@@ -76,9 +84,9 @@ _DRIVER_SEGTERMS_LIMIT = 4_000_000
 # - the segment stage of a build, by Catalyst's size estimate of its input
 #   (``_plan_bytes``: a local relation of transcripts counts 100 B a row, a
 #   parquet scan its file bytes, an RDD-backed frame never fits). A refresh
-#   of n turns on an 8,500-turn index took 0.34 s on the driver vs 0.78 s
-#   in Spark at 700 turns, 0.74 vs 0.89 s at 4,000 and 1.47 vs 1.11 s at
-#   8,500 (they tie near 5,400); the gate sits at ~4,000 rows.
+#   of n turns on an 8,500-turn index took 0.27 s on the driver vs 0.65 s
+#   in Spark at 700 turns, 0.72 vs 0.86 s at 4,000 and 1.43 vs 1.16 s at
+#   8,500 (they tie near 5,500); the gate sits at ~4,000 rows.
 _DRIVER_BUILD_BYTES = 400_000
 
 POSTINGS_SCHEMA = pa.schema([

@@ -7,10 +7,13 @@ org/elasticsearch/index/engine/internal/InternalEngine.java:367-369, refresh
 (index/translog/Translog.java).
 
 Spark shape: ``readStream → foreachBatch``. Each micro-batch runs the SAME
-partition-parallel segment build as the batch path (builder.build_index),
-with a per-batch segment prefix ``b{batch_id}-`` so every increment appends
-immutable segments next to the existing ones; the "refresh" is the global
-term-stats + meta rewrite that makes them visible to new IndexReaders.
+segment build as the batch path (builder.build_index): a batch under
+``builder._DRIVER_BUILD_BYTES`` builds its segments on the driver after one
+``toArrow()``, a larger one as partition-parallel Spark tasks, and both
+write the same files. A per-batch segment prefix ``b{batch_id}-`` lets
+every increment append immutable segments next to the existing ones; the
+"refresh" is the global term-stats + meta rewrite that makes them visible
+to new IndexReaders.
 Durability/replay: Structured Streaming's checkpoint (WAL + offsets) is the
 translog analog — a replayed batch regenerates byte-identical segment files
 under the same names (deterministic build), so replay is idempotent.

@@ -105,9 +105,10 @@ def test_a_max_docs_split_falls_where_spark_puts_it(spark, corpus, tmp_root, mon
 
 
 def test_resume_and_replayed_refreshes(spark, corpus, tmp_root, monkeypatch):
-    """A crash between pid commits (``only_pids``) resumed, then a refresh
-    batch landed twice under one ``segment_prefix``: the replay appends no
-    row, and both paths end with the same bytes."""
+    """A crash between pid commits (``only_pids``) resumed, a resume with
+    nothing left to build, then a refresh batch landed twice under one
+    ``segment_prefix``: the replay appends no row, and both paths end with
+    the same bytes."""
     cfg = CONFIGS["positional"]
     df = spark.createDataFrame(corpus)
     batch = spark.createDataFrame(generate_transcripts(n_convs=8, seed=62))
@@ -115,6 +116,7 @@ def test_resume_and_replayed_refreshes(spark, corpus, tmp_root, monkeypatch):
     def steps(idx):
         build_index(spark, df, idx, cfg, only_pids={0, 2})
         build_index(spark, df, idx, cfg, resume=True)
+        assert build_index(spark, df, idx, cfg, resume=True).n_segments == 4
         n = [count_jobs(spark, lambda: build_index(spark, batch, idx, cfg,
                                                    segment_prefix="b000001-"))[0]
              for _ in range(2)]
