@@ -86,7 +86,9 @@ _DRIVER_SEGTERMS_LIMIT = 4_000_000
 #   parquet scan its file bytes, an RDD-backed frame never fits). A refresh
 #   of n turns on an 8,500-turn index took 0.27 s on the driver vs 0.65 s
 #   in Spark at 700 turns, 0.72 vs 0.86 s at 4,000 and 1.43 vs 1.16 s at
-#   8,500 (they tie near 5,500); the gate sits at ~4,000 rows.
+#   8,500 (they tie near 5,500); the gate sits at ~4,000 rows. The tie
+#   follows the text analyzed (~4-5 MB), not the rows: at ~4 kB a turn it
+#   falls to ~1,000 turns, and 4,000 such rows took 2.95 s vs 1.53 s.
 _DRIVER_BUILD_BYTES = 400_000
 
 POSTINGS_SCHEMA = pa.schema([
@@ -436,9 +438,9 @@ def _segments_on_driver(spark, df, cfg, pid, keep, utc_cols, build_fn) -> list[d
     by = cfg.dedup_latest_by
     cols = dict.fromkeys([*cfg.key_cols, *cfg.stored_cols, cfg.text_col, *([by] if by else [])])
     tbl = (
-        df.select(pid.alias(PID_COL),
-                  *[F.unix_micros(c).alias(c) if c in utc_cols else F.col(c) for c in cols])
-        .where(keep)
+        df.withColumn(PID_COL, pid)
+        .select(PID_COL, keep.alias("__keep"),
+                *[F.unix_micros(c).alias(c) if c in utc_cols else F.col(c) for c in cols])
         .toArrow()
         .combine_chunks()
     )
@@ -450,6 +452,9 @@ def _segments_on_driver(spark, df, cfg, pid, keep, utc_cols, build_fn) -> list[d
         order = pc.sort_indices(tbl, keys + [("__by_null", "ascending"), (by, "descending")])
         tbl = tbl.take(order).drop_columns(["__by_null"])
         tbl = tbl.filter(_key_changes(tbl, cfg.key_cols))
+    # the pid filter after the dedup, as in Spark: under a routing_col
+    # outside the keys, a key's versions can sit in different pids
+    tbl = tbl.filter(tbl["__keep"]).drop_columns(["__keep"])
     # sortWithinPartitions(pid, *keys): ascending, nulls first
     tbl = tbl.take(pc.sort_indices(tbl, [(PID_COL, "ascending"), *keys],
                                    null_placement="at_start"))

@@ -18,6 +18,7 @@ from __future__ import annotations
 import numpy as np
 
 BLOCK_SIZE = 128  # Lucene50 FOR block size
+_PASS_VALUES = 1 << 20  # values per packing pass (bounds its temporaries)
 
 
 def pack_u32(values: np.ndarray) -> bytes:
@@ -55,34 +56,38 @@ def unpack_u32(buf: bytes, n: int) -> np.ndarray:
 
 def shift_first(bufs: list[bytes], n_docs: np.ndarray, shifts: np.ndarray) -> list[bytes]:
     """``pack_u32(unpack_u32(buf, n) with [0] += shift)`` for every block,
-    byte for byte, batched: blocks sharing (n, bit width) unpack as one 2-D
-    array, and blocks sharing (n, new width) pack as one. The merge rebase —
-    only a block's first gap (its absolute first doc id) moves."""
+    byte for byte, batched: blocks ordered by (n, bit width) are taken in
+    passes of ≤ ~1M values; in a pass, blocks sharing (n, width) unpack as
+    one 2-D array, and the whole pass repacks through one ``pack_blocks``.
+    The merge rebase — only a block's first gap (its absolute first doc id)
+    moves."""
     n_docs = np.asarray(n_docs, dtype=np.int64)
-    shifts = np.asarray(shifts, dtype=np.uint64)
+    shifts = np.asarray(shifts, dtype=np.uint64).astype(np.uint32)
     widths = np.fromiter((b[0] for b in bufs), dtype=np.int64, count=len(bufs))
+    keys = n_docs * 64 + widths
+    order = np.argsort(keys, kind="stable")
+    at_value = np.cumsum(n_docs[order]) - n_docs[order]  # of each block, in order
+    passes = at_value // _PASS_VALUES
     out: list[bytes] = [b""] * len(bufs)
-    for key, rows in _groups(n_docs * 64 + widths):
-        n, w = divmod(key, 64)
-        step = max(1, (1 << 20) // n)  # ≤ ~1M values per (rows, n, 32) bit matrix
-        for c in range(0, len(rows), step):
-            idx = rows[c : c + step]
-            vals = np.zeros((len(idx), n), dtype=np.uint64)
-            if w:
-                raw = np.frombuffer(b"".join([bufs[i][1:] for i in idx]), dtype=np.uint8)
-                bits = np.unpackbits(raw.reshape(len(idx), -1), axis=1)[:, : n * w]
-                full = np.zeros((len(idx), n, 32), dtype=np.uint8)
-                full[:, :, 32 - w :] = bits.reshape(len(idx), n, w)
-                vals[:] = np.packbits(full, axis=2).view(">u4")[:, :, 0]
-            vals[:, 0] += shifts[idx]
-            new_w = np.frexp(vals.max(axis=1).astype(np.float64))[1]  # bit length
-            for w2, sub in _groups(new_w):
-                for i, b in zip(idx[sub], _pack_rows(vals[sub], w2)):
-                    out[i] = b
+    for p in np.unique(passes).tolist():
+        chunk = np.flatnonzero(passes == p)
+        idx = order[chunk]
+        starts = at_value[chunk] - at_value[chunk[0]]
+        vals = np.zeros(int(n_docs[idx].sum()), dtype=np.uint32)
+        for g in np.split(np.arange(len(idx)), np.flatnonzero(np.diff(keys[idx])) + 1):
+            n, w = divmod(int(keys[idx[g[0]]]), 64)
+            if w:  # each value's w bits, zero-padded to a big-endian uint32
+                raw = np.frombuffer(b"".join([bufs[i][1:] for i in idx[g]]), dtype=np.uint8)
+                bits = np.unpackbits(raw.reshape(len(g), -1), axis=1)[:, : n * w]
+                full = np.zeros((len(g), n, 32), dtype=np.uint8)
+                full[:, :, 32 - w :] = bits.reshape(len(g), n, w)
+                at = int(starts[g[0]])
+                vals[at : at + len(g) * n] = np.packbits(full, axis=2).view(">u4").ravel()
+        vals[starts] += shifts[idx]
+        offsets, data = pack_blocks(vals, starts)
+        for i, a, b in zip(idx.tolist(), offsets[:-1].tolist(), offsets[1:].tolist()):
+            out[i] = data[a:b].tobytes()
     return out
-
-
-_PASS_VALUES = 1 << 20  # values per pack_blocks pass (bounds its temporaries)
 
 
 def pack_blocks(values: np.ndarray, starts: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -151,16 +156,6 @@ def _groups(keys: np.ndarray):
     order = np.argsort(keys, kind="stable")
     uniq, starts = np.unique(keys[order], return_index=True)
     return zip(uniq.tolist(), np.split(order, starts[1:]))
-
-
-def _pack_rows(vals: np.ndarray, w: int) -> list[bytes]:
-    """pack_u32 of each row of ``vals`` (every row's width is ``w``)."""
-    if w == 0:
-        return [b"\x00"] * len(vals)
-    bits = np.unpackbits(vals.astype(">u4").view(np.uint8).reshape(*vals.shape, 4), axis=2)
-    packed = np.packbits(bits[:, :, 32 - w :].reshape(len(vals), -1), axis=1)
-    head = bytes([w])
-    return [head + r.tobytes() for r in packed]
 
 
 def delta_encode(doc_ids: np.ndarray) -> np.ndarray:

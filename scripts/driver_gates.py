@@ -13,7 +13,7 @@ Usage (each ``run`` in a fresh process, one at a time):
     python scripts/driver_gates.py prep    <base> <dir> <postings_mb>
     python scripts/driver_gates.py prep_st <base> <dir> <m>
     python scripts/driver_gates.py run     <dir> merge|termstats driver|spark
-    python scripts/driver_gates.py run     <base> build driver|spark <n_turns>
+    python scripts/driver_gates.py run     <base> build driver|spark <n_turns> [repeat]
 
 ``prep`` copies the base index's segments under new ids until the copies
 hold ~postings_mb of postings (one merge group); ``prep_st`` writes a
@@ -21,7 +21,9 @@ segterms-only index of 40 segments, each holding m suffixed copies of a
 base segment's vocabulary with its hapaxes new in every segment. ``build``
 lands one benchmark-shaped micro-batch of n_turns on a copy of the base
 index (``build_index(..., segment_prefix=...)``, termstats republish
-included), the refresh of perfbench's ``ingest_refresh``.
+included), the refresh of perfbench's ``ingest_refresh``; ``repeat`` > 1
+repeats each turn's text that many times (longer documents, the same row
+count and so the same Catalyst estimate).
 """
 
 from __future__ import annotations
@@ -126,7 +128,8 @@ def _tree_rss() -> int:
     return procmon.rss_bytes(me) + sum(procmon.rss_bytes(p) for p in procmon.descendants(me))
 
 
-def run(d: str, op: str, path: str, n_turns: str = "0", reps: int = 3) -> None:
+def run(d: str, op: str, path: str, n_turns: str = "0", repeat: str = "1",
+        reps: int = 3) -> None:
     spark = get_spark(cores=CORES, shuffle_partitions=CORES)
     spark.sparkContext.setLogLevel("ERROR")
     limit = (1 << 62) if path == "driver" else 0
@@ -134,6 +137,7 @@ def run(d: str, op: str, path: str, n_turns: str = "0", reps: int = 3) -> None:
         builder._DRIVER_BUILD_BYTES = limit
         reps = 5
         batch = inputs.ingest_batch(7, 1, int(n_turns), pd.Timestamp("2031-01-01")).frame
+        batch["text"] = batch["text"].map(lambda t: " ".join([t] * int(repeat)))
         batch_df = spark.createDataFrame(batch)
     else:
         builder._DRIVER_POSTINGS_LIMIT = builder._DRIVER_SEGTERMS_LIMIT = limit
@@ -180,6 +184,7 @@ def run(d: str, op: str, path: str, n_turns: str = "0", reps: int = 3) -> None:
     shutil.rmtree(work, ignore_errors=True)
     print(json.dumps({
         "op": op, "path": path, "segments": len(group), "turns": int(n_turns),
+        "repeat": int(repeat),
         "postings_mb": round(act["postings_bytes"].sum() / 2**20, 1),
         "segterms_rows": int(act["n_terms"].sum()),
         "median_s": round(sorted(walls)[reps // 2], 3),

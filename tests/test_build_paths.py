@@ -147,3 +147,30 @@ def test_inputs_over_the_gate_take_the_spark_stage(spark, corpus, tmp_root, monk
     build_index(spark, from_rdd, f"{tmp_root}/build_paths_rdd", cfg)
     assert seen == [True, True]
     assert _tree(f"{tmp_root}/build_paths_over") == _tree(f"{tmp_root}/build_paths_rdd")
+
+
+def test_pid_filter_follows_the_dedup(spark, corpus, tmp_root, monkeypatch):
+    """Under a ``routing_col`` outside the keys, a newer version of a key
+    that routes to a pid ``only_pids`` leaves out drops the key: the older
+    version, in a kept pid, is not indexed in its place."""
+    from pyspark.sql import functions as F
+
+    cfg = IndexConfig(stored_cols=("role", "ts"), n_partitions=4,
+                      dedup_latest_by="ts", routing_col="route")
+    base = corpus.assign(route=corpus["conv_id"].astype(str))
+    old = base.iloc[[3]]
+    routes = [old["route"].iloc[0], *(f"r{i}" for i in range(8))]
+    pids = dict(spark.createDataFrame([(r,) for r in routes], "route string").select(
+        "route", F.pmod(F.hash("route"), F.lit(4))).collect())
+    new_route = next(r for r in routes if pids[r] != pids[old["route"].iloc[0]])
+    newer = old.assign(route=new_route, ts=old["ts"] + pd.Timedelta(hours=2))
+    df = spark.createDataFrame(pd.concat([base, newer], ignore_index=True))
+    only = set(range(4)) - {pids[new_route]}
+
+    def steps(idx):
+        return build_index(spark, df, idx, cfg, only_pids=only).n_docs
+
+    on_driver, on_spark, (driver_docs, spark_docs) = _both(
+        spark, tmp_root, "routed", monkeypatch, steps)
+    assert driver_docs == spark_docs
+    assert on_driver == on_spark

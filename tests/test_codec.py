@@ -54,10 +54,13 @@ def test_delta_property(doc_set):
     assert np.array_equal(delta_decode(delta_encode(docs)), docs)
 
 
-def test_shift_first_matches_per_block_reencode():
+def test_shift_first_matches_per_block_reencode(monkeypatch):
     """The batched merge re-encode is byte-identical to re-encoding each
     block on its own, across widths 0..32, single-value blocks and blocks
-    whose width grows once the first gap is shifted."""
+    whose width grows once the first gap is shifted, also when its passes
+    cut the blocks; no block gives no output."""
+    import elasticsearch_spark.index.codec as codec
+
     rng = np.random.default_rng(5)
     bufs, ns, shifts = [], [], []
     for i in range(3000):
@@ -76,7 +79,10 @@ def test_shift_first_matches_per_block_reencode():
         g = unpack_u32(buf, n).copy()
         g[0] += s
         want.append(pack_u32(g))
-    assert shift_first(bufs, ns, shifts) == want
+    for per_pass in (1 << 20, 300, 1):
+        monkeypatch.setattr(codec, "_PASS_VALUES", per_pass)
+        assert shift_first(bufs, ns, shifts) == want, per_pass
+    assert shift_first([], [], []) == []
     grew = sum(b[0] > a[0] for a, b in zip(bufs, want))
     assert grew > 100 and any(b[0] == 0 for b in want) and any(b[0] == 32 for b in want)
     assert any(n == 1 for n in ns)
